@@ -48,9 +48,9 @@ class BetfairDatabase(spark: SparkSession, databaseDir: String) {
       fs.delete(new Path(indexPath), true)
     }
     val result = IndexPipeline.build(spark, databaseDir)
-    val deduped = result.index
-      .dropDuplicates("marketMetadataFilePath", "marketDataFilePath")
-    writeSnapshot(deduped)
+    try writeSnapshot(result.index
+      .dropDuplicates("marketMetadataFilePath", "marketDataFilePath"))
+    finally result.index.unpersist()
     result.counters
   }
 
@@ -196,13 +196,11 @@ class BetfairDatabase(spark: SparkSession, databaseDir: String) {
       .withColumn("_destData", concat(col("_destDir"), lit("/"), col("_dataName")))
 
     val existing = indexDF
-    val existingByMeta = existing
-      .select(Schemas.IndexColumns.filterNot(
-        c => c == "marketMetadataFilePath" || c == "marketDataFilePath")
-        .map(c => col(c).as(s"_ex_$c")) :+
-        col("marketMetadataFilePath").as("_destMeta"): _*)
     val nonPathCols = Schemas.IndexColumns.filterNot(
       c => c == "marketMetadataFilePath" || c == "marketDataFilePath")
+    val existingByMeta = existing
+      .select(nonPathCols.map(c => col(c).as(s"_ex_$c")) :+
+        col("marketMetadataFilePath").as("_destMeta"): _*)
     val joined = src.join(existingByMeta, Seq("_destMeta"), "left_outer")
       .withColumn("_rowMatches",
         nonPathCols.map(c => col(c) <=> col(s"_ex_$c")).reduce(_ && _))
@@ -249,9 +247,11 @@ class BetfairDatabase(spark: SparkSession, databaseDir: String) {
         Seq(col("_destMeta"), col("_destData"), col("_action"),
           col("_processData"))): _*)
 
-    // checkpoint: one row per source market — small next to the data files
+    // checkpoint: one row per source market — small next to the data files.
+    // Nothing reads the source build after it, so its cache is freed here
     val planPath = s"$databaseDir/.graft_insert_plan_tmp"
-    resolved.write.mode("overwrite").parquet(planPath)
+    try resolved.write.mode("overwrite").parquet(planPath)
+    finally built.index.unpersist()
     val plan = spark.read.parquet(planPath)
 
     // ---- phase 2: APPLY, idempotently.

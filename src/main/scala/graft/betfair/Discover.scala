@@ -1,6 +1,6 @@
 package graft.betfair
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** A1/A2: recursive scan + classification + stem pairing.
@@ -54,6 +54,24 @@ object Discover {
     */
   private val DistributedListingThreshold = 64
 
+  /** Every classified file under `dir`, listed recursively. PathCanon:
+    * decoded OS-style path on file:// (scheme kept when the default FS is
+    * remote), scheme-qualified elsewhere — the SAME canonical form
+    * input_file_name() is mapped to in IndexPipeline, so the metadata join
+    * key always matches. Shared by the driver and the executor listing.
+    */
+  private def listTree(fs: FileSystem, dir: Path, strip: Boolean)
+      : Seq[Entry] = {
+    val out = scala.collection.mutable.ArrayBuffer.empty[Entry]
+    val it = fs.listFiles(dir, true)
+    while (it.hasNext) {
+      val st = it.next()
+      if (st.isFile)
+        classify(PathCanon.canonical(st.getPath, strip)).foreach(out += _)
+    }
+    out.toSeq
+  }
+
   /** Scan a directory tree and return one DataFrame of classified entries. */
   def scan(spark: SparkSession, sourceDir: String): DataFrame = {
     val conf = spark.sparkContext.hadoopConfiguration
@@ -63,20 +81,9 @@ object Discover {
     val top = fs.listStatus(root)
     val (dirs, files) = top.partition(_.isDirectory)
     import spark.implicits._
-    if (dirs.length <= DistributedListingThreshold) {
-      val buf = scala.collection.mutable.ArrayBuffer.empty[Entry]
-      val it = fs.listFiles(root, true)
-      while (it.hasNext) {
-        val st = it.next()
-        // PathCanon: decoded OS-style path on file:// (scheme kept when the
-        // default FS is remote), scheme-qualified elsewhere — the SAME
-        // canonical form input_file_name() is mapped to in IndexPipeline, so
-        // the metadata join key always matches.
-        if (st.isFile)
-          classify(PathCanon.canonical(st.getPath, strip)).foreach(buf += _)
-      }
-      spark.createDataset(buf.toSeq).toDF()
-    } else {
+    if (dirs.length <= DistributedListingThreshold)
+      spark.createDataset(listTree(fs, root, strip)).toDF()
+    else {
       // distributed listing: executors walk one subtree each, with the
       // driver's Hadoop conf (credentials/defaultFS) shipped along
       val sconf = SerializableHadoopConf(spark)
@@ -89,15 +96,7 @@ object Discover {
           val conf = sconf.value
           paths.flatMap { p =>
             val sub = new Path(p)
-            val sfs = sub.getFileSystem(conf)
-            val out = scala.collection.mutable.ArrayBuffer.empty[Entry]
-            val it = sfs.listFiles(sub, true)
-            while (it.hasNext) {
-              val st = it.next()
-              if (st.isFile)
-                classify(PathCanon.canonical(st.getPath, strip)).foreach(out += _)
-            }
-            out
+            listTree(sub.getFileSystem(conf), sub, strip)
           }
         }
       listed.toDF().unionByName(spark.createDataset(rootFiles).toDF())

@@ -28,6 +28,7 @@ object IndexPipeline {
         marketsWithoutMetadata + corruptFiles
   }
 
+  /** `index` is cached; the caller owns that cache and unpersists it. */
   case class BuildResult(index: DataFrame, counters: Counters)
 
   private val localTimeUdf: UserDefinedFunction =
@@ -44,9 +45,11 @@ object IndexPipeline {
   private def canonPathUdf(strip: Boolean): UserDefinedFunction =
     udf((s: String) => PathCanon.canonicalUri(s, strip))
 
-  /** Read per-market metadata JSON files (catalogue or definition, one object
-    * per file — multiLine tolerates pretty-printing, PERMISSIVE routes
-    * corrupt bodies to _corrupt_record; reference A22).
+  /** Read the metadata JSON files whose names match `glob` — per-market
+    * catalogue or definition files (`1.*.json`, one object per file) or
+    * bulk `metadata.json` files (JSON arrays of metadata dicts; A3).
+    * multiLine tolerates pretty-printing, PERMISSIVE routes corrupt bodies
+    * to _corrupt_record (reference A22).
     *
     * The file set comes from a recursive glob scan of the tree, NOT a
     * driver-collected path list — a 100 TB archive has millions of metadata
@@ -55,30 +58,15 @@ object IndexPipeline {
     * `parallelPartitionDiscovery.threshold` dirs; the downstream inner join
     * on the canonical path keeps exactly the paired markets.
     */
-  private def readPerMarket(spark: SparkSession, dir: String): DataFrame =
+  private def readMetadata(spark: SparkSession, dir: String, glob: String)
+      : DataFrame =
     spark.read
       .schema(metadataSchema)
       .option("multiLine", "true")
       .option("mode", "PERMISSIVE")
       .option("columnNameOfCorruptRecord", "_corrupt_record")
       .option("recursiveFileLookup", "true")
-      .option("pathGlobFilter", "1.*.json")
-      .json(dir)
-      .withColumn("metaPath",
-        canonPathUdf(PathCanon.stripFileScheme(
-          spark.sparkContext.hadoopConfiguration))(input_file_name()))
-
-  /** Read bulk metadata.json files (JSON arrays of metadata dicts; A3) —
-    * same recursive glob scan as [[readPerMarket]].
-    */
-  private def readBulk(spark: SparkSession, dir: String): DataFrame =
-    spark.read
-      .schema(metadataSchema)
-      .option("multiLine", "true")
-      .option("mode", "PERMISSIVE")
-      .option("columnNameOfCorruptRecord", "_corrupt_record")
-      .option("recursiveFileLookup", "true")
-      .option("pathGlobFilter", "metadata.json")
+      .option("pathGlobFilter", glob)
       .json(dir)
       .withColumn("metaPath",
         canonPathUdf(PathCanon.stripFileScheme(
@@ -120,7 +108,7 @@ object IndexPipeline {
     // take precedence over per-market files (consume the data file).
     // (.cache(): Spark disallows querying only _corrupt_record off a raw
     // JSON scan; the parsed result must be materialized first.)
-    val bulkRaw = readBulk(spark, sourceDir).cache()
+    val bulkRaw = readMetadata(spark, sourceDir, "metadata.json").cache()
     val bulkValid = bulkRaw
       .filter(col("_corrupt_record").isNull && col("marketId").isNotNull)
       // reference: file_cache keyed by marketId — last entry per id wins
@@ -148,7 +136,7 @@ object IndexPipeline {
 
     // ---- per-market metadata reads (A5-A9): recursive glob scan, no
     // driver-side path collection; the inner join below narrows to paired
-    val perMarketRaw = readPerMarket(spark, sourceDir).cache()
+    val perMarketRaw = readMetadata(spark, sourceDir, "1.*.json").cache()
     val pathPairs = pairedMeta
       .select(col("metaPath"), col("stem").as("_stem"),
         col("dataPath").as("_dataPath"))
@@ -167,24 +155,32 @@ object IndexPipeline {
     val index = project(withRacing).cache()
 
     // ---- counters (A20): total = |data ∪ metadata| stems before bulk
-    // consumption (reference: betfairdatabase/processor.py:147-149)
-    val totalMarkets = entries.filter(col("kind").isin("metadata", "data"))
-      .select("stem").distinct().count()
-    val cWithoutData = metaWithoutData.count()
-    val cWithoutMeta = extracted.filter(col("outcome") === "missing").count()
-    // a paired metadata file that produced NO parsed row (empty/whitespace
-    // file — nothing for PERMISSIVE mode to route to _corrupt_record) is a
-    // parse error in the reference (json.load raises; "Error parsing …") —
-    // count it corrupt or the market vanishes from the audit entirely
-    val unreadableMeta = pathPairs
-      .join(perMarketRaw.select("metaPath"), Seq("metaPath"), "left_anti")
-    val cCorrupt = corrupt.count() +
-      extracted.filter(col("outcome") === "corrupt").count() +
-      bulkRaw.filter(col("_corrupt_record").isNotNull).count() +
-      unreadableMeta.count()
-    val inserted = index.count()
-    BuildResult(index,
-      Counters(totalMarkets, cWithoutData, cWithoutMeta, cCorrupt, inserted))
+    // consumption (reference: betfairdatabase/processor.py:147-149).
+    // This call owns the four intermediate caches and frees them once the
+    // counters are taken; by then the index sits in its own cache, which
+    // the caller owns (or this call frees, if counting fails).
+    val counters = try {
+      val totalMarkets = entries.filter(col("kind").isin("metadata", "data"))
+        .select("stem").distinct().count()
+      val cWithoutData = metaWithoutData.count()
+      val cWithoutMeta = extracted.filter(col("outcome") === "missing").count()
+      // a paired metadata file that produced NO parsed row (empty/whitespace
+      // file — nothing for PERMISSIVE mode to route to _corrupt_record) is a
+      // parse error in the reference (json.load raises; "Error parsing …")
+      // — count it corrupt or the market vanishes from the audit entirely
+      val unreadableMeta = pathPairs
+        .join(perMarketRaw.select("metaPath"), Seq("metaPath"), "left_anti")
+      val cCorrupt = corrupt.count() +
+        extracted.filter(col("outcome") === "corrupt").count() +
+        bulkRaw.filter(col("_corrupt_record").isNotNull).count() +
+        unreadableMeta.count()
+      Counters(totalMarkets, cWithoutData, cWithoutMeta, cCorrupt,
+        index.count())
+    } catch {
+      case e: Throwable => index.unpersist(); throw e
+    } finally Seq(entries, bulkRaw, extracted, perMarketRaw)
+      .foreach(_.unpersist())
+    BuildResult(index, counters)
   }
 
   /** A5-A9 + A12 flattening: one wide select with catalogue/definition

@@ -1,8 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout,
+  OutputMode, StreamingQuery}
 
 /** Structured Streaming operators.
   *
@@ -14,6 +15,152 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * key with state kept per key in the state store.
   */
 object StreamOps {
+
+  /** THE STATE LIFECYCLE KERNEL. Every `batch=N` state family in this
+    * object ingests through [[sink]] and [[publish]] and reads its live
+    * view through [[liveRaw]] / [[rosterPointer]], so the protocol is
+    * stated once, here.
+    *
+    * INGEST. A sink is a foreachBatch query checkpointed at
+    * `<root>.checkpoint`. Each output partition of a micro-batch is staged
+    * whole at `<root>.tmp/<rel>` — a SIBLING of the table root — and moved
+    * into place as `<root>/<rel>` by one FileSystem rename, after a stale
+    * copy left by an earlier attempt is deleted. Partition discovery over
+    * the root never sees half-written files: a reader observes either the
+    * complete partition or its absence (a `batch=N.tmp` dir INSIDE the root
+    * would be discovered as a malformed partition value and corrupt the
+    * inferred `batch` column type). A crash mid-batch leaves the table
+    * WITHOUT the batch — a consistent older view — until foreachBatch
+    * replays it; the replay re-stages and re-publishes its own
+    * deterministic `batch=id` partitions, and probe sides exclude
+    * `batch=id`, so a replay reproduces identical state and outputs
+    * (effectively-once).
+    *
+    * SCOPE: the "never a torn partition" contract is exactly as strong as
+    * the filesystem's directory rename. That holds on the local FS, HDFS,
+    * and viewfs (atomic metadata ops) but NOT on flat-namespace object
+    * stores — S3A/GCS "rename" is a per-file copy+delete, during which a
+    * lister sees a partial partition. Those schemes are rejected rather
+    * than silently degrading effectively-once to maybe-torn; an
+    * object-store deployment should publish via a table format whose
+    * commit is a metadata swap instead of this path.
+    *
+    * LIVE READ. Deletes land as `<statePath>.tombstones/batch=N` id
+    * partitions ([[tombstoneStream]]) and are healed by ONE broadcast
+    * anti-join ([[dropDead]]) — the same heal the compacted reads apply to
+    * their `tombstones` argument. The state is never rewritten on the
+    * ingest path; compactions read through the heal, so a delete becomes
+    * physical at the next compaction and maintenance cannot resurrect it.
+    */
+  private def sink(input: DataFrame, root: String)(
+      body: (DataFrame, Long) => Unit): StreamingQuery =
+    input.writeStream
+      .option("checkpointLocation", s"$root.checkpoint")
+      .foreachBatch { (batch: Dataset[Row], id: Long) =>
+        body(batch.toDF(), id)
+      }
+      .start()
+
+  /** Stage `df` at `<root>.tmp/<rel>`, then publish it as `<root>/<rel>`
+    * (the kernel's ingest protocol above).
+    */
+  private[streaming] def publish(df: DataFrame, root: String, rel: String)
+      : Unit = {
+    df.write.mode("overwrite").parquet(s"$root.tmp/$rel")
+    publishPartition(df.sparkSession, s"$root.tmp/$rel", s"$root/$rel")
+  }
+
+  private val nonAtomicRenameSchemes =
+    Set("s3", "s3a", "s3n", "gs", "wasb", "wasbs", "oss", "cos", "swift")
+
+  /** Move the staged dir `tmp` to `dst` with one checked rename, deleting
+    * a stale `dst` first; non-atomic-rename schemes are rejected (SCOPE
+    * above).
+    */
+  private def publishPartition(spark: SparkSession, tmp: String, dst: String)
+      : Unit = {
+    val src = new org.apache.hadoop.fs.Path(tmp)
+    val d = new org.apache.hadoop.fs.Path(dst)
+    val fs = src.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val scheme = Option(fs.getUri.getScheme).getOrElse("file").toLowerCase
+    if (nonAtomicRenameSchemes.contains(scheme))
+      throw new UnsupportedOperationException(
+        s"publishPartition: $scheme:// rename is copy+delete, not atomic — " +
+          "the torn-partition guarantee does not hold on this filesystem")
+    if (fs.exists(d)) fs.delete(d, true)
+    fs.mkdirs(d.getParent)
+    if (!fs.rename(src, d))
+      throw new java.io.IOException(s"publishPartition: rename $tmp -> $dst failed")
+  }
+
+  /** Where [[tombstoneStream]] lands the deletes of the state at
+    * `statePath`.
+    */
+  private def tombstonePath(statePath: String): String =
+    s"$statePath.tombstones"
+
+  /** The published tombstones of the state at `statePath`; None before
+    * the first delete.
+    */
+  private def tombstonesOf(spark: SparkSession, statePath: String)
+      : Option[DataFrame] = {
+    val p = new org.apache.hadoop.fs.Path(tombstonePath(statePath))
+    if (!p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
+      None
+    else Some(spark.read.parquet(p.toString))
+  }
+
+  /** THE tombstone heal: drop the rows of `df` whose `key` is one of the
+    * `deadKey` ids in `dead`. The id list is compact, so the anti-join
+    * broadcasts and rides the scan map-side — O(tombstones) per read.
+    */
+  private def dropDead(df: DataFrame, dead: Option[DataFrame],
+      key: String = "doc_id", deadKey: String = "doc_id"): DataFrame =
+    dead.fold(df)(t => df.join(broadcast(t.select(col(deadKey).as(key))),
+      Seq(key), "left_anti"))
+
+  /** The tombstone-healed accumulated state (or its sub-table `sub`, e.g.
+    * `roster`/`posts`) with the `batch` column KEPT — the input of every
+    * latest-batch-wins read and compaction ([[liveState]] is this view
+    * minus `batch`).
+    */
+  private def liveRaw(spark: SparkSession, statePath: String, idCol: String,
+      sub: String = ""): DataFrame =
+    dropDead(
+      spark.read.parquet(if (sub.isEmpty) statePath else s"$statePath/$sub"),
+      tombstonesOf(spark, statePath), idCol, idCol)
+
+  /** The roster version pointer of a multi-table state (dsir, lm, gram):
+    * the healed `roster` collapsed to each doc's LATEST batch, which is the
+    * authoritative version — a revision that leaves a sub-table empty must
+    * still supersede its old rows there. Returns that (doc_id, batch)
+    * table and a reader of a healed sub-table pruned to it.
+    */
+  private def rosterPointer(spark: SparkSession, statePath: String)
+      : (DataFrame, String => DataFrame) = {
+    val latest = liveRaw(spark, statePath, "doc_id", "roster")
+      .groupBy("doc_id").agg(max("batch").as("batch"))
+    (latest, sub => liveRaw(spark, statePath, "doc_id", sub)
+      .join(latest, Seq("doc_id", "batch")))
+  }
+
+  /** The probe sink of the minhash, Hamming, video and semantic dedup
+    * families: publish the batch's `state` partition, split the
+    * accumulated state into this batch's rows (mine) and every other
+    * batch's (prior), and publish `pairs(prior, mine)` under
+    * `<statePath>.pairs`. Excluding `batch=id` from prior is what makes a
+    * replay reproduce identical pairs.
+    */
+  private def probeSink(spark: SparkSession, input: DataFrame,
+      statePath: String)(state: DataFrame => DataFrame)(
+      pairs: (DataFrame, DataFrame) => DataFrame): StreamingQuery =
+    sink(input, statePath) { (batch, id) =>
+      publish(state(batch), statePath, s"batch=$id")
+      val all = spark.read.parquet(statePath)
+      publish(pairs(all.filter(col("batch") =!= id).drop("batch"),
+          all.filter(col("batch") === id).drop("batch")),
+        s"$statePath.pairs", s"batch=$id")
+    }
 
   /** Watermarked tumbling-window counts per event type. */
   def windowedCounts(events: DataFrame, watermarkDelay: String = "10 minutes",
@@ -199,17 +346,9 @@ object StreamOps {
     * (the round-6 design rewrote the whole snapshot every batch —
     * quadratic cumulative I/O on an unbounded stream).
     *
-    * Effectively-once: each output partition is written to a sibling
-    * `.tmp` staging dir and moved into the table root with one FileSystem
-    * rename ([[publishPartition]]), so an external reader of `statePath`
-    * or `statePath.pairs` never observes a torn partition — a crash
-    * mid-write leaves the table WITHOUT the batch (a consistent older
-    * view) until foreachBatch replays it; a replay re-stages and
-    * re-publishes its own deterministic `batch=id` partitions, and the
-    * probe side partition-prunes `batch=id` away, so the replay also
-    * reproduces identical pairs. No cache: the batch signatures are
-    * written once and read back for the three join uses, so nothing
-    * persists across batches.
+    * Effectively-once through the kernel's [[probeSink]]. No cache: the
+    * batch signatures are written once and read back for the three join
+    * uses, so nothing persists across batches.
     *
     * Input batches must carry disjoint doc_ids (the contract of the
     * batch-side API): a re-ingested doc_id is stored once per carrying
@@ -228,22 +367,9 @@ object StreamOps {
   def incrementalDedupStream(spark: SparkSession, docs: DataFrame,
       statePath: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", s"$statePath.checkpoint")
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        graft.ops.TextOps.minhashSignaturesWithKeys(batch.toDF())
-          .write.mode("overwrite").parquet(s"$statePath.tmp/batch=$id")
-        publishPartition(spark, s"$statePath.tmp/batch=$id",
-          s"$statePath/batch=$id")
-        val all = spark.read.parquet(statePath)
-        val mine = all.filter(col("batch") === id).drop("batch")
-        val prior = all.filter(col("batch") =!= id).drop("batch")
-        graft.ops.TextOps.incrementalPairsFromKeyed(prior, mine)
-          .write.mode("overwrite").parquet(s"$statePath.pairs.tmp/batch=$id")
-        publishPartition(spark, s"$statePath.pairs.tmp/batch=$id",
-          s"$statePath.pairs/batch=$id")
-      }
-      .start()
+    probeSink(spark, docs, statePath)(
+      graft.ops.TextOps.minhashSignaturesWithKeys)(
+      graft.ops.TextOps.incrementalPairsFromKeyed)
 
   /** Streaming incremental PERCEPTUAL-HASH dedup —
     * [[incrementalDedupStream]]'s state layout applied to the multimodal
@@ -258,14 +384,10 @@ object StreamOps {
     * [[graft.multimodal.Multimodal.incrementalHammingPairs]] (stored
     * hashes re-bucket with four shifts; nothing re-reads payload bytes).
     *
-    * Effectively-once exactly like the minhash/semantic sinks:
-    * deterministic `batch=id` partitions staged in sibling `.tmp` dirs,
-    * one atomic rename ([[publishPartition]]), probe side
-    * partition-prunes `batch=id` away, so a foreachBatch replay
-    * reproduces identical state and pairs. Input batches must carry
-    * disjoint doc_ids (the batch API's contract; the `=!=` guard in the
-    * cross probe degrades an overlap to missed pairs, never corrupt
-    * self-pairs).
+    * Effectively-once through the kernel's [[probeSink]]. Input batches
+    * must carry disjoint doc_ids (the batch API's contract; the `=!=`
+    * guard in the cross probe degrades an overlap to missed pairs, never
+    * corrupt self-pairs).
     *
     * Layout: `statePath/batch=N/` = (doc_id, ahash) partition of
     * micro-batch N; `statePath.pairs/batch=N/` = Hamming≤3 pairs emitted
@@ -299,23 +421,9 @@ object StreamOps {
   private def hammingDedupStream(spark: SparkSession, media: DataFrame,
       statePath: String, hashFn: DataFrame => DataFrame)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    media.writeStream
-      .option("checkpointLocation", s"$statePath.checkpoint")
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        hashFn(batch.toDF())
-          .filter(col("ahash").isNotNull)
-          .write.mode("overwrite").parquet(s"$statePath.tmp/batch=$id")
-        publishPartition(spark, s"$statePath.tmp/batch=$id",
-          s"$statePath/batch=$id")
-        val all = spark.read.parquet(statePath)
-        val mine = all.filter(col("batch") === id).drop("batch")
-        val prior = all.filter(col("batch") =!= id).drop("batch")
-        graft.multimodal.Multimodal.incrementalHammingPairs(prior, mine)
-          .write.mode("overwrite").parquet(s"$statePath.pairs.tmp/batch=$id")
-        publishPartition(spark, s"$statePath.pairs.tmp/batch=$id",
-          s"$statePath.pairs/batch=$id")
-      }
-      .start()
+    probeSink(spark, media, statePath)(
+      hashFn(_).filter(col("ahash").isNotNull))(
+      graft.multimodal.Multimodal.incrementalHammingPairs(_, _))
 
   /** Streaming incremental VIDEO clip-overlap dedup — the containment
     * family's sink, completing streaming coverage across ALL multimodal
@@ -326,28 +434,13 @@ object StreamOps {
     * batch's frame rows as `batch=N` state (append-only, ~33 bytes per
     * frame; prior videos are never re-decoded or re-fingerprinted), then
     * probe prior partitions for containment pairs (self + cross, the same
-    * verdict as the one-shot d103). Effectively-once via the shared
-    * atomic-rename layout.
+    * verdict as the one-shot d103). Effectively-once via [[probeSink]].
     */
   def videoDedupStream(spark: SparkSession, frames: DataFrame,
       statePath: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    frames.writeStream
-      .option("checkpointLocation", s"$statePath.checkpoint")
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        batch.toDF().select(col("doc_id"), col("fp"))
-          .write.mode("overwrite").parquet(s"$statePath.tmp/batch=$id")
-        publishPartition(spark, s"$statePath.tmp/batch=$id",
-          s"$statePath/batch=$id")
-        val all = spark.read.parquet(statePath)
-        val mine = all.filter(col("batch") === id).drop("batch")
-        val prior = all.filter(col("batch") =!= id).drop("batch")
-        graft.multimodal.Multimodal.incrementalClipPairs(prior, mine)
-          .write.mode("overwrite").parquet(s"$statePath.pairs.tmp/batch=$id")
-        publishPartition(spark, s"$statePath.pairs.tmp/batch=$id",
-          s"$statePath.pairs/batch=$id")
-      }
-      .start()
+    probeSink(spark, frames, statePath)(_.select(col("doc_id"), col("fp")))(
+      graft.multimodal.Multimodal.incrementalClipPairs)
 
   /** Streaming incremental SEMANTIC dedup — [[incrementalDedupStream]]'s
     * state layout applied to the third dedup modality, completing
@@ -371,11 +464,7 @@ object StreamOps {
     * through [[graft.ops.VectorOps.writeCidBucketedState]]'s cid-bucketed
     * layout instead (the batch path; see BucketedStateSpec).
     *
-    * Effectively-once exactly like the minhash sink: deterministic
-    * `batch=id` partitions staged in sibling `.tmp` dirs and published
-    * with one atomic rename ([[publishPartition]] — non-atomic-rename
-    * schemes rejected), probe side partition-prunes `batch=id` away, so a
-    * foreachBatch replay reproduces identical state and pairs. Input
+    * Effectively-once through the kernel's [[probeSink]]. Input
     * batches must carry disjoint vec_ids (the batch API's contract; a
     * re-ingested vec_id degrades to missing cross pairs, not corrupt
     * self-pairs — see [[graft.ops.VectorOps.semanticPairs]]).
@@ -389,23 +478,10 @@ object StreamOps {
   def semanticDedupStream(spark: SparkSession, emb: DataFrame,
       codebookPath: String, statePath: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    emb.writeStream
-      .option("checkpointLocation", s"$statePath.checkpoint")
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        val codebook = spark.read.parquet(codebookPath)
-        graft.ops.VectorOps.assignToCentroids(spark, batch.toDF(), codebook)
-          .write.mode("overwrite").parquet(s"$statePath.tmp/batch=$id")
-        publishPartition(spark, s"$statePath.tmp/batch=$id",
-          s"$statePath/batch=$id")
-        val all = spark.read.parquet(statePath)
-        val mine = all.filter(col("batch") === id).drop("batch")
-        val prior = all.filter(col("batch") =!= id).drop("batch")
-        graft.ops.VectorOps.semanticPairs(spark, prior, mine)
-          .write.mode("overwrite").parquet(s"$statePath.pairs.tmp/batch=$id")
-        publishPartition(spark, s"$statePath.pairs.tmp/batch=$id",
-          s"$statePath.pairs/batch=$id")
-      }
-      .start()
+    probeSink(spark, emb, statePath)(b =>
+      graft.ops.VectorOps.assignToCentroids(spark, b,
+        spark.read.parquet(codebookPath)))(
+      graft.ops.VectorOps.semanticPairs(spark, _, _))
 
   /** Streaming ANN index-ingest sink — the streaming member of the
     * similarity-search trio (one-shot v41 / batch-incremental v120 / here),
@@ -417,24 +493,16 @@ object StreamOps {
     * [[graft.ops.VectorOps.assignToIvfLists]] (batch and stream cannot
     * assign differently) — O(batch) work, stored vectors never re-read or
     * re-assigned — and publish as this batch's own `batch=N` partition
-    * (sibling-`.tmp` + atomic rename, the effectively-once layout every
-    * graft sink uses: a foreachBatch replay rewrites an identical
-    * partition). [[annIndexQuery]] serves top-k over the accumulated index
-    * at read time.
+    * (the kernel's [[publish]]). [[annIndexQuery]] serves top-k over the
+    * accumulated index at read time.
     */
   def annIngestStream(spark: SparkSession, emb: DataFrame,
       codebookPath: String, statePath: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    emb.writeStream
-      .option("checkpointLocation", s"$statePath.checkpoint")
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        val codebook = spark.read.parquet(codebookPath)
-        graft.ops.VectorOps.assignToIvfLists(spark, batch.toDF(), codebook)
-          .write.mode("overwrite").parquet(s"$statePath.tmp/batch=$id")
-        publishPartition(spark, s"$statePath.tmp/batch=$id",
-          s"$statePath/batch=$id")
-      }
-      .start()
+    sink(emb, statePath) { (batch, id) =>
+      publish(graft.ops.VectorOps.assignToIvfLists(spark, batch,
+        spark.read.parquet(codebookPath)), statePath, s"batch=$id")
+    }
 
   /** Top-k cosine query over an [[annIngestStream]]-accumulated index:
     * probe each query's `nprobe` nearest inverted lists through the same
@@ -453,27 +521,13 @@ object StreamOps {
     // deliver the same vec_id in two micro-batches; without the collapse
     // the duplicate would occupy two top-k slots here while
     // compactAnnIndex's serving layout holds it once — the two query
-    // paths over the same state must agree (same max_by rule, shared via
-    // latestAnnState).
-    val state = latestAnnState(liveRaw(spark, statePath, "vec_id"))
+    // paths over the same state must agree (the same latestPerId rule).
+    val state = latestPerId(liveRaw(spark, statePath, "vec_id"), "vec_id")
     val probes =
       graft.ops.VectorOps.ivfQueryProbes(spark, queries, codebook, nprobe)
     graft.ops.VectorOps.ivfTopK(
       graft.ops.VectorOps.ivfProbeCandidates(spark, state, probes), k)
   }
-
-  /** Collapse an [[annIngestStream]] `batch=N` index to one row per vec_id
-    * — latest batch wins (the sink overwrites a replayed partition, so
-    * earlier duplicates are stale by construction). The ONE dedup rule
-    * behind both [[annIndexQuery]] and [[compactAnnIndex]]; a max_by
-    * partial aggregation, so the map side reduces before the shuffle.
-    */
-  private def latestAnnState(raw: DataFrame): DataFrame =
-    raw.groupBy("vec_id")
-      .agg(max_by(struct(col("embedding"), col("clabel")), col("batch"))
-        .as("t"))
-      .select(col("vec_id"), col("t.embedding").as("embedding"),
-        col("t.clabel").as("clabel"))
 
   /** Compact an [[annIngestStream]]-accumulated `batch=N` index into the
     * clabel-bucketed serving layout
@@ -493,13 +547,15 @@ object StreamOps {
   def compactAnnIndex(spark: SparkSession, statePath: String,
       tableName: String, path: String, nBuckets: Int = 32): Unit =
     graft.ops.VectorOps.writeIvfBucketedState(
-      latestAnnState(liveRaw(spark, statePath, "vec_id")), tableName, path,
-      nBuckets, overwrite = true)
+      latestPerId(liveRaw(spark, statePath, "vec_id"), "vec_id"), tableName,
+      path, nBuckets, overwrite = true)
 
   /** Collapse a `batch=N` per-item state to one row per `idCol` — latest
-    * batch wins, the [[latestAnnState]] rule generalized over any
-    * per-item schema (every non-id column rides one max_by payload
-    * struct). The shared dedup step of the four compaction jobs below.
+    * batch wins (the sink overwrites a replayed partition, so earlier
+    * duplicates are stale by construction). Every non-id column rides one
+    * max_by payload struct, a partial aggregation, so the map side reduces
+    * before the shuffle. The ONE dedup rule of every 1-row-per-id state's
+    * direct reads and compactions.
     */
   private def latestPerId(raw: DataFrame, idCol: String): DataFrame = {
     val dataCols = raw.columns.filter(c => c != idCol && c != "batch").toSeq
@@ -550,7 +606,7 @@ object StreamOps {
     * [[graft.ops.VectorOps.assignToCentroids]] (batch, incremental and
     * stream cannot assign differently) — O(batch) work, stored vectors
     * never re-read — and publish as this batch's own `batch=N` partition
-    * (sibling-`.tmp` + atomic rename). A re-delivered or revised vec_id
+    * ([[publish]]). A re-delivered or revised vec_id
     * supersedes at READ time (latest-batch-wins in
     * [[densityPruneServed]]); deletes ride [[tombstoneStream]] at the
     * same `statePath` with idCol `vec_id`. WITHIN a batch the feed is
@@ -564,18 +620,11 @@ object StreamOps {
   def densityPruneStream(spark: SparkSession, emb: DataFrame,
       codebookPath: String, statePath: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    emb.writeStream
-      .option("checkpointLocation", s"$statePath.checkpoint")
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        val codebook = spark.read.parquet(codebookPath)
-        val one = batch.toDF().groupBy("vec_id")
-          .agg(max("embedding").as("embedding"))
-        graft.ops.VectorOps.assignToCentroids(spark, one, codebook)
-          .write.mode("overwrite").parquet(s"$statePath.tmp/batch=$id")
-        publishPartition(spark, s"$statePath.tmp/batch=$id",
-          s"$statePath/batch=$id")
-      }
-      .start()
+    sink(emb, statePath) { (batch, id) =>
+      val one = batch.groupBy("vec_id").agg(max("embedding").as("embedding"))
+      publish(graft.ops.VectorOps.assignToCentroids(spark, one,
+        spark.read.parquet(codebookPath)), statePath, s"batch=$id")
+    }
 
   /** The served prototypicality ranks of a [[densityPruneStream]] state:
     * tombstone-healed assignments collapse to each vector's LATEST batch
@@ -611,10 +660,8 @@ object StreamOps {
   def densityPruneCompacted(spark: SparkSession, tableName: String,
       codebookPath: String, tombstones: Option[DataFrame] = None)
       : DataFrame = {
-    val state = tombstones.fold(spark.table(tableName))(t =>
-      spark.table(tableName).join(broadcast(t.select("vec_id")),
-        Seq("vec_id"), "left_anti"))
-    graft.ops.VectorOps.prototypicalityRanks(spark, state,
+    graft.ops.VectorOps.prototypicalityRanks(spark,
+      dropDead(spark.table(tableName), tombstones, "vec_id", "vec_id"),
       spark.read.parquet(codebookPath))
   }
 
@@ -689,25 +736,19 @@ object StreamOps {
     * the batch against the broadcast codebooks (O(batch) — stored
     * vectors are never re-encoded; the state holds M small ids per
     * vector, nothing else) and publish as this batch's own `batch=N`
-    * partition (sibling-`.tmp` + atomic rename, the effectively-once
-    * layout). A vector's M code rows always travel together (whole-item
-    * contract), so readers collapse latest-batch-wins per vec_id and a
-    * re-delivered or re-crawled vector supersedes cleanly.
+    * partition ([[publish]]). A vector's M code rows always travel
+    * together (whole-item contract), so readers collapse latest-batch-wins
+    * per vec_id and a re-delivered or re-crawled vector supersedes
+    * cleanly.
     */
   def pqIngestStream(spark: SparkSession, emb: DataFrame,
       codebookPath: String, statePath: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    emb.writeStream
-      .option("checkpointLocation", s"$statePath.checkpoint")
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        val cb = spark.read.parquet(codebookPath)
-        graft.ops.VectorOps.encodePq(spark,
-            graft.ops.VectorOps.pqSubvectors(batch.toDF()), cb)
-          .write.mode("overwrite").parquet(s"$statePath.tmp/batch=$id")
-        publishPartition(spark, s"$statePath.tmp/batch=$id",
-          s"$statePath/batch=$id")
-      }
-      .start()
+    sink(emb, statePath) { (batch, id) =>
+      publish(graft.ops.VectorOps.encodePq(spark,
+        graft.ops.VectorOps.pqSubvectors(batch),
+        spark.read.parquet(codebookPath)), statePath, s"batch=$id")
+    }
 
   /** Top-k ADC query over a [[pqIngestStream]]-accumulated code table:
     * latest-batch-wins per vec_id ([[latestWholeItem]] — the same rule
@@ -769,24 +810,18 @@ object StreamOps {
       centroidPath: String, codebookPath: String, statePath: String,
       carry: Seq[String] = Nil)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    emb.writeStream
-      .option("checkpointLocation", s"$statePath.checkpoint")
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        val cent = spark.read.parquet(centroidPath)
-        val cb = spark.read.parquet(codebookPath)
-        val assigned = graft.ops.VectorOps.assignToIvfLists(spark,
-          batch.toDF(), cent, carry = carry)
-        graft.ops.VectorOps.encodePq(spark,
-            graft.ops.VectorOps.pqSubvectors(
-              graft.ops.VectorOps.residualOf(assigned, cent,
-                carry = carry),
-              carry = "clabel" +: carry),
-            cb, carry = "clabel" +: carry)
-          .write.mode("overwrite").parquet(s"$statePath.tmp/batch=$id")
-        publishPartition(spark, s"$statePath.tmp/batch=$id",
-          s"$statePath/batch=$id")
-      }
-      .start()
+    sink(emb, statePath) { (batch, id) =>
+      val cent = spark.read.parquet(centroidPath)
+      val cb = spark.read.parquet(codebookPath)
+      val assigned = graft.ops.VectorOps.assignToIvfLists(spark, batch, cent,
+        carry = carry)
+      publish(graft.ops.VectorOps.encodePq(spark,
+          graft.ops.VectorOps.pqSubvectors(
+            graft.ops.VectorOps.residualOf(assigned, cent, carry = carry),
+            carry = "clabel" +: carry),
+          cb, carry = "clabel" +: carry),
+        statePath, s"batch=$id")
+    }
 
   /** Top-k query over an [[ivfPqIngestStream]]-accumulated code state:
     * latest-batch-wins per vec_id ([[latestWholeItem]]), tombstones healed
@@ -833,13 +868,12 @@ object StreamOps {
   /** Streaming tombstone sink — how deletes ARRIVE at an accumulated
     * `batch=N` state (the batch heals are d123/d126/v127; this is their
     * feed). Per micro-batch of deleted ids: publish the batch's own
-    * `<statePath>.tombstones/batch=N` partition (sibling-`.tmp` + atomic
-    * rename — the effectively-once layout every graft sink uses; a
-    * replay rewrites an identical partition, and an id tombstoned twice
-    * is one anti-join fact). The state itself is NEVER rewritten on the
-    * ingest path: readers serve through [[liveState]]'s anti-join view,
-    * and the periodic compaction jobs ([[compactMinhashState]] /
-    * [[compactSemanticState]] / [[compactHammingState]] /
+    * `<statePath>.tombstones/batch=N` partition ([[publish]]; an id
+    * tombstoned twice is one anti-join fact). The state itself is NEVER
+    * rewritten on the ingest path: readers serve through [[liveState]]'s
+    * anti-join view, and the periodic compaction jobs
+    * ([[compactMinhashState]] / [[compactSemanticState]] /
+    * [[compactHammingState]] /
     * [[compactFrameState]] / [[compactAnnIndex]]) apply tombstones
     * physically — each compacts from [[liveRaw]], so a deleted id never
     * reaches a serving layout (TombstoneCompactionSpec proves
@@ -848,16 +882,10 @@ object StreamOps {
   def tombstoneStream(spark: SparkSession, deletes: DataFrame,
       statePath: String, idCol: String = "doc_id")
       : org.apache.spark.sql.streaming.StreamingQuery =
-    deletes.writeStream
-      .option("checkpointLocation", s"$statePath.tombstones.checkpoint")
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        batch.toDF().select(idCol).distinct()
-          .write.mode("overwrite")
-          .parquet(s"$statePath.tombstones.tmp/batch=$id")
-        publishPartition(spark, s"$statePath.tombstones.tmp/batch=$id",
-          s"$statePath.tombstones/batch=$id")
-      }
-      .start()
+    sink(deletes, tombstonePath(statePath)) { (batch, id) =>
+      publish(batch.select(idCol).distinct(), tombstonePath(statePath),
+        s"batch=$id")
+    }
 
   /** Streaming UPDATE sink — d131's tombstone+re-ingest semantics in ONE
     * micro-batch through the sink layout, completing the CDC story: a
@@ -865,8 +893,7 @@ object StreamOps {
     * must supersede the stored version without rewriting state and
     * without a correctness gap between the delete and the re-ingest.
     *
-    * Three publishes per micro-batch (each sibling-`.tmp` + atomic
-    * rename, the effectively-once layout):
+    * Three publishes per micro-batch (each through [[publish]]):
     *
     *  1. the batch's signatures as an ordinary `batch=N` partition —
     *     readers collapse latest-batch-wins ([[updatedState]] /
@@ -893,29 +920,18 @@ object StreamOps {
   def updateDedupStream(spark: SparkSession, docs: DataFrame,
       statePath: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", s"$statePath.checkpoint")
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        graft.ops.TextOps.minhashSignaturesWithKeys(batch.toDF())
-          .write.mode("overwrite").parquet(s"$statePath.tmp/batch=$id")
-        publishPartition(spark, s"$statePath.tmp/batch=$id",
-          s"$statePath/batch=$id")
-        batch.toDF().select("doc_id").distinct()
-          .withColumn("upto", lit(id))
-          .write.mode("overwrite")
-          .parquet(s"$statePath.supersede.tmp/batch=$id")
-        publishPartition(spark, s"$statePath.supersede.tmp/batch=$id",
-          s"$statePath.supersede/batch=$id")
-        val all = spark.read.parquet(statePath)
-        val mine = all.filter(col("batch") === id).drop("batch")
-        val prior = latestPerId(all.filter(col("batch") =!= id), "doc_id")
-          .join(mine.select("doc_id"), Seq("doc_id"), "left_anti")
-        graft.ops.TextOps.incrementalPairsFromKeyed(prior, mine)
-          .write.mode("overwrite").parquet(s"$statePath.pairs.tmp/batch=$id")
-        publishPartition(spark, s"$statePath.pairs.tmp/batch=$id",
-          s"$statePath.pairs/batch=$id")
-      }
-      .start()
+    sink(docs, statePath) { (batch, id) =>
+      publish(graft.ops.TextOps.minhashSignaturesWithKeys(batch), statePath,
+        s"batch=$id")
+      publish(batch.select("doc_id").distinct().withColumn("upto", lit(id)),
+        s"$statePath.supersede", s"batch=$id")
+      val all = spark.read.parquet(statePath)
+      val mine = all.filter(col("batch") === id).drop("batch")
+      val prior = latestPerId(all.filter(col("batch") =!= id), "doc_id")
+        .join(mine.select("doc_id"), Seq("doc_id"), "left_anti")
+      publish(graft.ops.TextOps.incrementalPairsFromKeyed(prior, mine),
+        s"$statePath.pairs", s"batch=$id")
+    }
 
   /** The current doc-state view of an [[updateDedupStream]] state: latest
     * batch wins per doc (a revision supersedes by writing a newer row),
@@ -949,18 +965,8 @@ object StreamOps {
             col("d2") === col("sd2") && col("batch") < col("upto"),
             "left_anti")
       }
-    val tPath = new org.apache.hadoop.fs.Path(s"$statePath.tombstones")
-    val live =
-      if (!fs.exists(tPath)) superseded
-      else {
-        val t = spark.read.parquet(s"$statePath.tombstones").select("doc_id")
-        superseded
-          .join(broadcast(t.withColumnRenamed("doc_id", "d1")), Seq("d1"),
-            "left_anti")
-          .join(broadcast(t.withColumnRenamed("doc_id", "d2")), Seq("d2"),
-            "left_anti")
-      }
-    live.drop("batch")
+    val dead = tombstonesOf(spark, statePath)
+    dropDead(dropDead(superseded, dead, "d1"), dead, "d2").drop("batch")
   }
 
   /** Streaming tokenization under the FROZEN merge rules — the streaming
@@ -974,7 +980,7 @@ object StreamOps {
     * ([[graft.ops.BpeOps.applyMerges]] — t146's serving path verbatim),
     * the batch's docs join to that O(batch-vocabulary) table, and the
     * per-doc summaries publish as this batch's own `batch=N` partition
-    * (sibling-`.tmp` + atomic rename). The K rules are collected once per
+    * ([[publish]]). The K rules are collected once per
     * batch — a bounded ~10-row artifact read, the probed-list-literal
     * convention. A re-delivered or revised doc supersedes via
     * latest-batch-wins in [[bpeTokenState]] — ACROSS batches; within ONE
@@ -988,19 +994,14 @@ object StreamOps {
   def bpeTokenizeStream(spark: SparkSession, docs: DataFrame,
       rulesPath: String, statePath: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", s"$statePath.checkpoint")
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        val pairs = spark.read.parquet(rulesPath)
-          .orderBy("rnk").collect().map(_.getAs[String]("pair")).toSeq
-        val b = dedupWithinBatch(batch.toDF())
-        val tok = graft.ops.BpeOps.tokTableFor(b, pairs)
-        graft.ops.BpeOps.docSummary(graft.ops.BpeOps.piecesOver(b, tok))
-          .write.mode("overwrite").parquet(s"$statePath.tmp/batch=$id")
-        publishPartition(spark, s"$statePath.tmp/batch=$id",
-          s"$statePath/batch=$id")
-      }
-      .start()
+    sink(docs, statePath) { (batch, id) =>
+      val pairs = spark.read.parquet(rulesPath)
+        .orderBy("rnk").collect().map(_.getAs[String]("pair")).toSeq
+      val b = dedupWithinBatch(batch)
+      val tok = graft.ops.BpeOps.tokTableFor(b, pairs)
+      publish(graft.ops.BpeOps.docSummary(graft.ops.BpeOps.piecesOver(b, tok)),
+        statePath, s"batch=$id")
+    }
 
   /** The current per-doc token accounting of a [[bpeTokenizeStream]]
     * state: latest batch wins per doc (a revised doc's newer summary
@@ -1075,76 +1076,62 @@ object StreamOps {
   def pagerankDeltaStream(spark: SparkSession, edges: DataFrame,
       docs: DataFrame, statePath: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    edges.writeStream
-      .option("checkpointLocation", s"$statePath.checkpoint")
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        // ENFORCED quiescent-point contract (not just documented): the
-        // compacted generation's version is the highest batch id it
-        // absorbed. A replaying batch at id <= that version finds its own
-        // edges already inside the generation (no batch column left to
-        // exclude), computes an empty delta, and would silently skip
-        // publishing its PageRank overlays — served ranks would then
-        // permanently omit the batch's influence. Fail the query fast
-        // instead; the operator re-runs compaction AFTER the checkpoint
-        // commits (or restores the pre-compaction state).
-        prEdgeVersion(spark, statePath).foreach { case (m, _) =>
-          if (id <= m) throw new IllegalStateException(
-            s"pagerankDeltaStream: batch $id replayed at or below the " +
-              s"compacted edge generation v=$m — compaction absorbed a " +
-              "batch whose streaming checkpoint had not committed; its " +
-              "overlays cannot be recomputed from the remaining state")
-        }
-        val reg = new graft.ops.CacheRegistry
-        val nodes = reg.add(docs.select("doc_id").persist())
-        val nn = nodes.count()
-        val conf = spark.sparkContext.hadoopConfiguration
-        val prRoot = s"$statePath/pr"
-        val fs = new org.apache.hadoop.fs.Path(statePath)
-          .getFileSystem(conf)
-        val delta = reg.add(
-          prNoveltyDelta(spark, batch.toDF(), statePath, id, reg).persist())
-        if (delta.count() > 0) {
-          delta.write.mode("overwrite")
-            .parquet(s"$statePath.tmp/edges/batch=$id")
-          publishPartition(spark, s"$statePath.tmp/edges/batch=$id",
-            s"$statePath/edges/batch=$id")
-          delta.groupBy("src").agg(count(lit(1)).as("cnt"))
-            .write.mode("overwrite")
-            .parquet(s"$statePath.tmp/outdeg/batch=$id")
-          publishPartition(spark, s"$statePath.tmp/outdeg/batch=$id",
-            s"$statePath/outdeg/batch=$id")
-          val outdegNew = reg.add(prServedOutdeg(spark, statePath).persist())
-          val all = prUnionEdges(spark, statePath, id, delta)
-          val k = graft.ops.TextOps.PrIters
-          val publish = (df: DataFrame, i: Int) => {
-            df.write.mode("overwrite")
-              .parquet(s"$statePath.tmp/pr/iter=$i/batch=$id")
-            publishPartition(spark, s"$statePath.tmp/pr/iter=$i/batch=$id",
-              s"$prRoot/iter=$i/batch=$id")
-          }
-          if (!fs.exists(new org.apache.hadoop.fs.Path(s"$prRoot/iter=$k"))) {
-            // first effective batch: the full build — the ONE place the
-            // graph is repartitioned on src and iterated whole (t135's
-            // audited base-build shape, amortized over every later delta)
-            val allR = reg.add(all.repartition(col("src")).persist())
-            var ranks = graft.ops.TextOps.prInit(nodes, nn)
-            for (i <- 1 to k) {
-              ranks = reg.add(graft.ops.TextOps
-                .prStep(nodes, ranks, allR, outdegNew, nn).persist())
-              publish(ranks, i)
-            }
-          } else {
-            val served: Int => DataFrame = i =>
-              if (i == 0) graft.ops.TextOps.prInit(nodes, nn)
-              else prServedIter(spark, statePath, i, id)
-            val (ovs, _) = graft.ops.TextOps.prOverlays(nn, served, all,
-              outdegNew, delta.select("src").distinct(), reg)
-            for (i <- 1 to k) publish(ovs(i - 1), i)
-          }
-        }
-        reg.release()
+    sink(edges, statePath) { (batch, id) =>
+      // ENFORCED quiescent-point contract (not just documented): the
+      // compacted generation's version is the highest batch id it
+      // absorbed. A replaying batch at id <= that version finds its own
+      // edges already inside the generation (no batch column left to
+      // exclude), computes an empty delta, and would silently skip
+      // publishing its PageRank overlays — served ranks would then
+      // permanently omit the batch's influence. Fail the query fast
+      // instead; the operator re-runs compaction AFTER the checkpoint
+      // commits (or restores the pre-compaction state).
+      prEdgeVersion(spark, statePath).foreach { case (m, _) =>
+        if (id <= m) throw new IllegalStateException(
+          s"pagerankDeltaStream: batch $id replayed at or below the " +
+            s"compacted edge generation v=$m — compaction absorbed a " +
+            "batch whose streaming checkpoint had not committed; its " +
+            "overlays cannot be recomputed from the remaining state")
       }
-      .start()
+      val reg = new graft.ops.CacheRegistry
+      val nodes = reg.add(docs.select("doc_id").persist())
+      val nn = nodes.count()
+      val fs = new org.apache.hadoop.fs.Path(statePath)
+        .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val delta = reg.add(
+        prNoveltyDelta(spark, batch, statePath, id, reg).persist())
+      if (delta.count() > 0) {
+        publish(delta, statePath, s"edges/batch=$id")
+        publish(delta.groupBy("src").agg(count(lit(1)).as("cnt")), statePath,
+          s"outdeg/batch=$id")
+        val outdegNew = reg.add(prServedOutdeg(spark, statePath).persist())
+        val all = prUnionEdges(spark, statePath, id, delta)
+        val k = graft.ops.TextOps.PrIters
+        val publishIter = (df: DataFrame, i: Int) =>
+          publish(df, statePath, s"pr/iter=$i/batch=$id")
+        val prDone = new org.apache.hadoop.fs.Path(s"$statePath/pr/iter=$k")
+        if (!fs.exists(prDone)) {
+          // first effective batch: the full build — the ONE place the
+          // graph is repartitioned on src and iterated whole (t135's
+          // audited base-build shape, amortized over every later delta)
+          val allR = reg.add(all.repartition(col("src")).persist())
+          var ranks = graft.ops.TextOps.prInit(nodes, nn)
+          for (i <- 1 to k) {
+            ranks = reg.add(graft.ops.TextOps
+              .prStep(nodes, ranks, allR, outdegNew, nn).persist())
+            publishIter(ranks, i)
+          }
+        } else {
+          val served: Int => DataFrame = i =>
+            if (i == 0) graft.ops.TextOps.prInit(nodes, nn)
+            else prServedIter(spark, statePath, i, id)
+          val (ovs, _) = graft.ops.TextOps.prOverlays(nn, served, all,
+            outdegNew, delta.select("src").distinct(), reg)
+          for (i <- 1 to k) publishIter(ovs(i - 1), i)
+        }
+      }
+      reg.release()
+    }
 
   /** Batch srcs above this count stop being inlined as bucket-pruning
     * literals in [[prNoveltyDelta]] (the probed-list-literal convention
@@ -1489,10 +1476,8 @@ object StreamOps {
         spark.read.parquet(s"$statePath/outdegc/v=${g.version}")
           .select("src", "cnt"))
         .foldLeft(recentOd)(_.unionByName(_))
-    newOd.groupBy("src").agg(sum("cnt").as("cnt"))
-      .write.mode("overwrite").parquet(s"$statePath.tmp/outdegc/v=$m")
-    publishPartition(spark, s"$statePath.tmp/outdegc/v=$m",
-      s"$statePath/outdegc/v=$m")
+    publish(newOd.groupBy("src").agg(sum("cnt").as("cnt")), statePath,
+      s"outdegc/v=$m")
     // the read barrier: rename the sentinel into place LAST
     publishGenSentinel(fs, s"$statePath/edgesc", m, tbl, isMajor)
     // deferred retire (one full cycle each):
@@ -1564,10 +1549,8 @@ object StreamOps {
       val raw = spark.read.parquet(root)
       val maxBatch =
         raw.agg(max("batch")).head.getAs[Number](0).longValue
-      latestPerId(raw, "doc_id")
-        .write.mode("overwrite").parquet(s"$statePath.tmp/prc/iter=$i")
-      publishPartition(spark, s"$statePath.tmp/prc/iter=$i",
-        s"$root/batch=$maxBatch")
+      publish(latestPerId(raw, "doc_id"), statePath,
+        s"pr/iter=$i/batch=$maxBatch")
       val rootPath = new org.apache.hadoop.fs.Path(root)
       val fs = rootPath.getFileSystem(conf)
       fs.listStatus(rootPath).foreach { st =>
@@ -1588,8 +1571,7 @@ object StreamOps {
     * and stream cannot canonicalize differently), reduce to the batch's
     * own O(batch) partial keeper state — min and sum are associative+
     * commutative, so within-batch duplicates collapse in the same
-    * aggregate — and publish as `urls/batch=N` (sibling-`.tmp` + atomic
-    * rename; a replay rewrites an identical partition). Input batches
+    * aggregate — and publish as `urls/batch=N` ([[publish]]). Input batches
     * must carry disjoint doc_ids across batches (the d101 batch-API
     * contract — a re-ingested doc_id adds to its URL's n_docs once per
     * carrying batch).
@@ -1604,26 +1586,21 @@ object StreamOps {
   def urlStateStream(spark: SparkSession, docs: DataFrame,
       statePath: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", s"$statePath.checkpoint")
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        stateGens(spark, s"$statePath/urlsc").lastOption.foreach { g =>
-          if (id <= g.version) throw new IllegalStateException(
-            s"urlStateStream: batch $id replayed at or below the " +
-              s"compacted keeper generation v=${g.version} — compaction " +
-              "absorbed a batch whose streaming checkpoint had not " +
-              "committed; republishing would double its URL counts")
-        }
-        batch.toDF()
+    sink(docs, statePath) { (batch, id) =>
+      stateGens(spark, s"$statePath/urlsc").lastOption.foreach { g =>
+        if (id <= g.version) throw new IllegalStateException(
+          s"urlStateStream: batch $id replayed at or below the " +
+            s"compacted keeper generation v=${g.version} — compaction " +
+            "absorbed a batch whose streaming checkpoint had not " +
+            "committed; republishing would double its URL counts")
+      }
+      publish(batch
           .select(col("doc_id"),
             graft.ops.TextOps.canonicalizeUrl(col("url")).as("canon_url"))
           .groupBy("canon_url")
-          .agg(min("doc_id").as("keeper_id"), count(lit(1)).as("n_docs"))
-          .write.mode("overwrite").parquet(s"$statePath.tmp/urls/batch=$id")
-        publishPartition(spark, s"$statePath.tmp/urls/batch=$id",
-          s"$statePath/urls/batch=$id")
-      }
-      .start()
+          .agg(min("doc_id").as("keeper_id"), count(lit(1)).as("n_docs")),
+        statePath, s"urls/batch=$id")
+    }
 
   /** Tiered compaction of a [[urlStateStream]] keeper state — the
     * [[compactPagerankEdges]] LSM shape on the second qualifying state:
@@ -1795,7 +1772,7 @@ object StreamOps {
     * to its per-doc term-frequency postings (one map-side explode + a
     * batch-local partial aggregation — the batch never sees the corpus)
     * and publishes them as this batch's own `batch=N` partition
-    * (sibling-`.tmp` + atomic rename). A re-delivered or revised doc
+    * ([[publish]]). A re-delivered or revised doc
     * supersedes at READ time: [[bm25Served]] keeps only each doc's
     * latest-batch postings rows, so stale term rows of an earlier
     * version — including terms the revision no longer contains — stop
@@ -1811,15 +1788,10 @@ object StreamOps {
   def postingsStream(spark: SparkSession, docs: DataFrame,
       statePath: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", s"$statePath.checkpoint")
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        graft.ops.TextOps.docPostings(dedupWithinBatch(batch.toDF()))
-          .write.mode("overwrite").parquet(s"$statePath.tmp/batch=$id")
-        publishPartition(spark, s"$statePath.tmp/batch=$id",
-          s"$statePath/batch=$id")
-      }
-      .start()
+    sink(docs, statePath) { (batch, id) =>
+      publish(graft.ops.TextOps.docPostings(dedupWithinBatch(batch)),
+        statePath, s"batch=$id")
+    }
 
   /** Streaming DSIR postings maintenance — the selection family's sink,
     * completing its one-shot (t152) / incremental (d155) / streaming trio.
@@ -1843,25 +1815,18 @@ object StreamOps {
   def dsirIngestStream(spark: SparkSession, docs: DataFrame,
       statePath: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", s"$statePath.checkpoint")
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        val one = batch.toDF().groupBy("doc_id")
-          .agg(max(struct(col("text"), col("source"))).as("ts"))
-          .select(col("doc_id"), col("ts.source").as("source"),
-            col("ts.text").as("text"))
-        graft.ops.TextOps.dsirPostings(one)
-          .write.mode("overwrite").parquet(s"$statePath.tmp/posts/batch=$id")
-        publishPartition(spark, s"$statePath.tmp/posts/batch=$id",
-          s"$statePath/posts/batch=$id")
-        one.select(col("doc_id"),
-            (col("source") === graft.ops.TextOps.DsirTargetSource)
-              .as("is_target"))
-          .write.mode("overwrite").parquet(s"$statePath.tmp/roster/batch=$id")
-        publishPartition(spark, s"$statePath.tmp/roster/batch=$id",
-          s"$statePath/roster/batch=$id")
-      }
-      .start()
+    sink(docs, statePath) { (batch, id) =>
+      val one = batch.groupBy("doc_id")
+        .agg(max(struct(col("text"), col("source"))).as("ts"))
+        .select(col("doc_id"), col("ts.source").as("source"),
+          col("ts.text").as("text"))
+      publish(graft.ops.TextOps.dsirPostings(one), statePath,
+        s"posts/batch=$id")
+      publish(one.select(col("doc_id"),
+          (col("source") === graft.ops.TextOps.DsirTargetSource)
+            .as("is_target")),
+        statePath, s"roster/batch=$id")
+    }
 
   /** The DSIR selection over a [[dsirIngestStream]] state — the serving
     * read: tombstone-healed roster rows collapse to each doc's LATEST
@@ -1893,22 +1858,9 @@ object StreamOps {
     */
   private def dsirLive(spark: SparkSession, statePath: String)
       : (DataFrame, DataFrame) = {
-    val tPath = new org.apache.hadoop.fs.Path(s"$statePath.tombstones")
-    val fs = tPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def heal(df: DataFrame): DataFrame =
-      if (!fs.exists(tPath)) df
-      else df.join(
-        broadcast(spark.read.parquet(s"$statePath.tombstones")
-          .select("doc_id")),
-        Seq("doc_id"), "left_anti")
-    val roster = heal(spark.read.parquet(s"$statePath/roster"))
-    val latest = roster.groupBy("doc_id").agg(max("batch").as("batch"))
-    val rosterLive = roster.join(latest, Seq("doc_id", "batch"))
-      .select("doc_id", "is_target")
-    val posts = heal(spark.read.parquet(s"$statePath/posts"))
-      .join(latest, Seq("doc_id", "batch"))
-      .select("doc_id", "is_target", "b", "n_f")
-    (rosterLive, posts)
+    val (_, at) = rosterPointer(spark, statePath)
+    (at("roster").select("doc_id", "is_target"),
+      at("posts").select("doc_id", "is_target", "b", "n_f"))
   }
 
   /** Compact a [[dsirIngestStream]] `batch=N` state into the serving
@@ -1966,8 +1918,7 @@ object StreamOps {
             .as("d_t"),
             sum(when(!col("is_target"), col("n_f")).otherwise(0L))
               .as("d_r"))
-        (posts0.join(ids, Seq("doc_id"), "left_anti"),
-          roster0.join(ids, Seq("doc_id"), "left_anti"),
+        (dropDead(posts0, tombstones), dropDead(roster0, tombstones),
           bags0.join(deltas, Seq("b"), "left")
             .select(col("b"),
               (col("c_t") - coalesce(col("d_t"), lit(0L))).as("c_t"),
@@ -1998,24 +1949,14 @@ object StreamOps {
   def lmIngestStream(spark: SparkSession, docs: DataFrame,
       statePath: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", s"$statePath.checkpoint")
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        val one = dedupWithinBatch(batch.toDF())
-        graft.ops.TextOps.lmTokPartials(one)
-          .write.mode("overwrite").parquet(s"$statePath.tmp/toks/batch=$id")
-        publishPartition(spark, s"$statePath.tmp/toks/batch=$id",
-          s"$statePath/toks/batch=$id")
-        graft.ops.TextOps.lmPairPartials(one)
-          .write.mode("overwrite").parquet(s"$statePath.tmp/pairs/batch=$id")
-        publishPartition(spark, s"$statePath.tmp/pairs/batch=$id",
-          s"$statePath/pairs/batch=$id")
-        one.select("doc_id")
-          .write.mode("overwrite").parquet(s"$statePath.tmp/roster/batch=$id")
-        publishPartition(spark, s"$statePath.tmp/roster/batch=$id",
-          s"$statePath/roster/batch=$id")
-      }
-      .start()
+    sink(docs, statePath) { (batch, id) =>
+      val one = dedupWithinBatch(batch)
+      publish(graft.ops.TextOps.lmTokPartials(one), statePath,
+        s"toks/batch=$id")
+      publish(graft.ops.TextOps.lmPairPartials(one), statePath,
+        s"pairs/batch=$id")
+      publish(one.select("doc_id"), statePath, s"roster/batch=$id")
+    }
 
   /** The LM scores over a [[lmIngestStream]] state — the serving read:
     * tombstone-healed roster rows collapse to each doc's LATEST batch,
@@ -2041,22 +1982,9 @@ object StreamOps {
     */
   private def lmLive(spark: SparkSession, statePath: String)
       : (DataFrame, DataFrame, DataFrame) = {
-    val tPath = new org.apache.hadoop.fs.Path(s"$statePath.tombstones")
-    val fs = tPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def heal(df: DataFrame): DataFrame =
-      if (!fs.exists(tPath)) df
-      else df.join(
-        broadcast(spark.read.parquet(s"$statePath.tombstones")
-          .select("doc_id")),
-        Seq("doc_id"), "left_anti")
-    val roster = heal(spark.read.parquet(s"$statePath/roster"))
-    val latest = roster.groupBy("doc_id").agg(max("batch").as("batch"))
-    val toks = heal(spark.read.parquet(s"$statePath/toks"))
-      .join(latest, Seq("doc_id", "batch")).select("doc_id", "w", "c")
-    val pairs = heal(spark.read.parquet(s"$statePath/pairs"))
-      .join(latest, Seq("doc_id", "batch"))
-      .select("doc_id", "w1", "w2", "np")
-    (latest.select("doc_id"), toks, pairs)
+    val (latest, at) = rosterPointer(spark, statePath)
+    (latest.select("doc_id"), at("toks").select("doc_id", "w", "c"),
+      at("pairs").select("doc_id", "w1", "w2", "np"))
   }
 
   /** Compact a [[lmIngestStream]] `batch=N` state into the serving
@@ -2135,8 +2063,7 @@ object StreamOps {
         val d1 = deadToks.groupBy("w").agg(sum("c").as("d"))
         val d2 = deadPairs.groupBy("w1", "w2").agg(sum("np").as("d"))
         val dnt = deadToks.agg(coalesce(sum("c"), lit(0L)).as("dnt"))
-        (roster0.join(ids, Seq("doc_id"), "left_anti"),
-          pairs0.join(ids, Seq("doc_id"), "left_anti"),
+        (dropDead(roster0, tombstones), dropDead(pairs0, tombstones),
           c10.join(d1, Seq("w"), "left")
             .select(col("w"),
               (col("c") - coalesce(col("d"), lit(0L))).as("c"))
@@ -2171,16 +2098,14 @@ object StreamOps {
 
   /** The current postings of a [[postingsStream]] state: tombstone-healed
     * rows collapsed to each doc's LATEST batch (all of a doc's term rows
-    * carry its ingest batch, so the (doc_id, max batch) equi-join keeps
-    * exactly the newest version's postings). Shared by [[bm25Served]]
+    * carry its ingest batch, so [[latestWholeItem]] keeps exactly the
+    * newest version's postings). Shared by [[bm25Served]]
     * (direct read) and [[compactPostingsState]] (serving rebuild).
     */
   private def servedPostings(spark: SparkSession,
-      statePath: String): DataFrame = {
-    val raw = liveRaw(spark, statePath, "doc_id")
-    val latest = raw.groupBy("doc_id").agg(max("batch").as("batch"))
-    raw.join(latest, Seq("doc_id", "batch")).select("doc_id", "term", "tf")
-  }
+      statePath: String): DataFrame =
+    latestWholeItem(liveRaw(spark, statePath, "doc_id"), "doc_id")
+      .select("doc_id", "term", "tf")
 
   /** Compact a [[postingsStream]] `batch=N` state into the term-bucketed
     * serving layout — the lexical member of the compaction family: the
@@ -2250,10 +2175,8 @@ object StreamOps {
   private def bm25CompactedParts(spark: SparkSession, tableName: String,
       path: String, qterms: Seq[String], tombstones: Option[DataFrame])
       : (DataFrame, DataFrame, DataFrame) = {
-    val heal = (df: DataFrame) => tombstones.fold(df)(t =>
-      df.join(broadcast(t.select("doc_id")), Seq("doc_id"), "left_anti"))
-    val postings = heal(
-      spark.table(tableName).filter(col("term").isin(qterms: _*)))
+    val postings = dropDead(
+      spark.table(tableName).filter(col("term").isin(qterms: _*)), tombstones)
     val dlRaw = spark.read.parquet(s"$path.dl")
     val base = spark.read.parquet(s"$path.stats")
     val stats = tombstones.fold(base) { t =>
@@ -2267,7 +2190,7 @@ object StreamOps {
         .select((col("n_docs") - col("d_docs")).as("n_docs"),
           (col("sum_dl") - col("d_dl")).as("sum_dl"))
     }
-    (postings, heal(dlRaw), stats)
+    (postings, dropDead(dlRaw, tombstones), stats)
   }
 
   /** Hybrid lexical+dense retrieval served from the COMPACTED layouts —
@@ -2376,9 +2299,7 @@ object StreamOps {
       tombstones.map(_.select(col("doc_id").as("vec_id"))), pred)
     val qv = queries.select(col("vec_id").as("query_id"),
       col("embedding").as("qv"))
-    val heal = (nb0: DataFrame) => tombstones.fold(nb0)(t => nb0.join(
-      broadcast(t.select(col("doc_id").as("neighbor_id"))),
-      Seq("neighbor_id"), "left_anti"))
+    val heal = dropDead(_: DataFrame, tombstones, "neighbor_id")
     val denseRk = rerankTable match {
       case None =>
         graft.ops.VectorOps.exactRerankOn(spark, qv,
@@ -2475,16 +2396,9 @@ object StreamOps {
     val cands = graft.ops.VectorOps.listLutAdcScore(codes, lut)
     val qv = queries.select(col("vec_id").as("query_id"),
       col("embedding").as("qv"))
-    val nbAll = rawVecs.select(col("vec_id").as("neighbor_id"),
-      col("embedding").as("nv"))
-    val tPath = new org.apache.hadoop.fs.Path(s"$ivfPqStatePath.tombstones")
-    val fs = tPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val nb =
-      if (!fs.exists(tPath)) nbAll
-      else nbAll.join(
-        broadcast(spark.read.parquet(s"$ivfPqStatePath.tombstones")
-          .select(col("vec_id").as("neighbor_id"))),
-        Seq("neighbor_id"), "left_anti")
+    val nb = dropDead(rawVecs.select(col("vec_id").as("neighbor_id"),
+        col("embedding").as("nv")),
+      tombstonesOf(spark, ivfPqStatePath), "neighbor_id", "vec_id")
     val dense = graft.ops.VectorOps.exactRerankOn(spark, qv, nb, cands)
       .select(col("query_id"), col("neighbor_id").as("doc_id"),
         col("rnk").as("dense_rn"))
@@ -2505,24 +2419,17 @@ object StreamOps {
     * unordered Dataset, so "latest within a batch" is undefined; `max`
     * over the orderable embedding array is arbitrary but TOTAL, so a
     * replayed batch republishes an identical partition) and publish as
-    * the batch's own `batch=N` partition (sibling-`.tmp` + atomic
-    * rename, the effectively-once layout every graft sink uses). Deletes
+    * the batch's own `batch=N` partition ([[publish]]). Deletes
     * ride [[tombstoneStream]] at idCol `vec_id`; a revision supersedes
     * by latest-batch-wins at read time ([[liveRawVecs]]). O(batch) work
     * per trigger — stored vectors are never re-read or rewritten.
     */
   def rawVecIngestStream(spark: SparkSession, emb: DataFrame,
       statePath: String): org.apache.spark.sql.streaming.StreamingQuery =
-    emb.writeStream
-      .option("checkpointLocation", s"$statePath.checkpoint")
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        batch.toDF().groupBy("vec_id")
-          .agg(max("embedding").as("embedding"))
-          .write.mode("overwrite").parquet(s"$statePath.tmp/batch=$id")
-        publishPartition(spark, s"$statePath.tmp/batch=$id",
-          s"$statePath/batch=$id")
-      }
-      .start()
+    sink(emb, statePath) { (batch, id) =>
+      publish(batch.groupBy("vec_id").agg(max("embedding").as("embedding")),
+        statePath, s"batch=$id")
+    }
 
   /** The live raw-vector view over a [[rawVecIngestStream]] state:
     * latest-batch-wins per vec_id ([[latestPerId]] — the same max_by
@@ -2572,16 +2479,10 @@ object StreamOps {
   def decontamStream(spark: SparkSession, docs: DataFrame,
       evalGramPath: String, statePath: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", s"$statePath.checkpoint")
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        graft.ops.TextOps.decontamCountsAll(dedupWithinBatch(batch.toDF()),
-            spark.read.parquet(evalGramPath))
-          .write.mode("overwrite").parquet(s"$statePath.tmp/batch=$id")
-        publishPartition(spark, s"$statePath.tmp/batch=$id",
-          s"$statePath/batch=$id")
-      }
-      .start()
+    sink(docs, statePath) { (batch, id) =>
+      publish(graft.ops.TextOps.decontamCountsAll(dedupWithinBatch(batch),
+        spark.read.parquet(evalGramPath)), statePath, s"batch=$id")
+    }
 
   /** The contamination report over a [[decontamStream]] state:
     * latest-batch-wins per doc ([[latestPerId]]), tombstones healed
@@ -2612,10 +2513,8 @@ object StreamOps {
     */
   def decontamCompacted(spark: SparkSession, path: String,
       tombstones: Option[DataFrame] = None): DataFrame = {
-    val ledger = spark.read.parquet(path)
-    val live = tombstones.fold(ledger)(t => ledger.join(
-      broadcast(t.select("doc_id")), Seq("doc_id"), "left_anti"))
-    graft.ops.TextOps.decontamReport(live)
+    graft.ops.TextOps.decontamReport(
+      dropDead(spark.read.parquet(path), tombstones))
   }
 
   /** Streaming gram-postings sink — the streaming member of the
@@ -2638,20 +2537,12 @@ object StreamOps {
   def gramPostingsStream(spark: SparkSession, docs: DataFrame,
       statePath: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", s"$statePath.checkpoint")
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        val one = dedupWithinBatch(batch.toDF())
-        graft.ops.TextOps.shingleTableN(one, 5)
-          .write.mode("overwrite").parquet(s"$statePath.tmp/posts/batch=$id")
-        publishPartition(spark, s"$statePath.tmp/posts/batch=$id",
-          s"$statePath/posts/batch=$id")
-        one.select("doc_id")
-          .write.mode("overwrite").parquet(s"$statePath.tmp/roster/batch=$id")
-        publishPartition(spark, s"$statePath.tmp/roster/batch=$id",
-          s"$statePath/roster/batch=$id")
-      }
-      .start()
+    sink(docs, statePath) { (batch, id) =>
+      val one = dedupWithinBatch(batch)
+      publish(graft.ops.TextOps.shingleTableN(one, 5), statePath,
+        s"posts/batch=$id")
+      publish(one.select("doc_id"), statePath, s"roster/batch=$id")
+    }
 
   /** The current (roster, postings) of a [[gramPostingsStream]] state:
     * tombstone-healed, each doc's postings pruned to its LATEST roster
@@ -2661,20 +2552,8 @@ object StreamOps {
     */
   private def gramLive(spark: SparkSession, statePath: String)
       : (DataFrame, DataFrame) = {
-    val tPath = new org.apache.hadoop.fs.Path(s"$statePath.tombstones")
-    val fs = tPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def heal(df: DataFrame): DataFrame =
-      if (!fs.exists(tPath)) df
-      else df.join(
-        broadcast(spark.read.parquet(s"$statePath.tombstones")
-          .select("doc_id")),
-        Seq("doc_id"), "left_anti")
-    val roster = heal(spark.read.parquet(s"$statePath/roster"))
-    val latest = roster.groupBy("doc_id").agg(max("batch").as("batch"))
-    val posts = heal(spark.read.parquet(s"$statePath/posts"))
-      .join(latest, Seq("doc_id", "batch"))
-      .select("doc_id", "sh")
-    (latest.select("doc_id"), posts)
+    val (latest, at) = rosterPointer(spark, statePath)
+    (latest.select("doc_id"), at("posts").select("doc_id", "sh"))
   }
 
   /** Onboard a NEW benchmark suite against a [[gramPostingsStream]]
@@ -2778,10 +2657,7 @@ object StreamOps {
   def suiteOnboardCompacted(spark: SparkSession, tableName: String,
       m: Int, r: Int, tombstones: Option[DataFrame] = None): DataFrame = {
     import spark.implicits._
-    def heal(df: DataFrame): DataFrame =
-      tombstones.fold(df)(t => df.join(broadcast(t.select("doc_id")),
-        Seq("doc_id"), "left_anti"))
-    val roster = heal(spark.table(s"${tableName}_roster"))
+    val roster = dropDead(spark.table(s"${tableName}_roster"), tombstones)
     // job 1: the fold's K lowest ids — a TakeOrdered over the doc_id
     // column only (column pruning keeps the gram arrays unread)
     val suiteIds = roster.filter(col("doc_id") % m === r)
@@ -2795,8 +2671,8 @@ object StreamOps {
     val evalGrams = roster.filter(col("doc_id").isin(suiteIds: _*))
       .select("grams").as[Seq[String]].collect()
       .flatten.distinct.sorted.toSeq
-    val train = heal(spark.table(s"${tableName}_posts")
-        .filter(col("sh").isin(evalGrams: _*)))
+    val train = dropDead(spark.table(s"${tableName}_posts")
+        .filter(col("sh").isin(evalGrams: _*)), tombstones)
       .join(broadcast(suiteIds.toDF("doc_id")), Seq("doc_id"), "left_anti")
     graft.ops.TextOps.decontamReport(graft.ops.TextOps.decontamCountsOn(
       train, evalGrams.toDF("sh")))
@@ -2826,63 +2702,6 @@ object StreamOps {
   private def dedupWithinBatch(batch: DataFrame): DataFrame =
     batch.groupBy("doc_id").agg(max("text").as("text"))
 
-  /** The tombstone-healed accumulated state with the `batch` column KEPT —
-    * the compaction jobs' shared input (their latest-batch-wins collapse
-    * needs `batch`; [[liveState]] is this view minus it). One broadcast
-    * anti-join on the id column when a tombstone table exists; a missing
-    * table means no deletes yet. Compacting from here is what makes
-    * [[tombstoneStream]]'s contract physically true: the serving layouts
-    * are rebuilt from survivors only, so a delete needs no state rewrite
-    * at ingest time yet cannot be resurrected by maintenance.
-    */
-  private def liveRaw(spark: SparkSession, statePath: String,
-      idCol: String): DataFrame = {
-    val state = spark.read.parquet(statePath)
-    val tPath = new org.apache.hadoop.fs.Path(s"$statePath.tombstones")
-    val fs = tPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(tPath)) state
-    else state.join(
-      broadcast(spark.read.parquet(s"$statePath.tombstones").select(idCol)),
-      Seq(idCol), "left_anti")
-  }
-
-  /** Atomically publish a completed batch-partition directory staged at
-    * `tmp` to its final location `dst` inside a partitioned table root:
-    * delete a stale `dst` (a replayed batch), then one FileSystem rename.
-    * The staging dir is a SIBLING of the table root (`<root>.tmp/...`), so
-    * partition discovery over the root never sees half-written files — a
-    * reader observes either the complete partition or its absence. (A
-    * `batch=N.tmp` dir INSIDE the root would be discovered as a malformed
-    * partition value and corrupt the inferred `batch` column type.)
-    *
-    * SCOPE: the "never a torn partition" contract is exactly as strong as
-    * the filesystem's directory rename. That holds on the local FS, HDFS,
-    * and viewfs (atomic metadata ops) but NOT on flat-namespace object
-    * stores — S3A/GCS "rename" is a per-file copy+delete, during which a
-    * lister sees a partial partition. Those schemes are rejected here
-    * rather than silently degrading effectively-once to maybe-torn; an
-    * object-store deployment should publish via a table format whose
-    * commit is a metadata swap instead of this path.
-    */
-  private val nonAtomicRenameSchemes =
-    Set("s3", "s3a", "s3n", "gs", "wasb", "wasbs", "oss", "cos", "swift")
-
-  private def publishPartition(spark: SparkSession, tmp: String, dst: String)
-      : Unit = {
-    val src = new org.apache.hadoop.fs.Path(tmp)
-    val d = new org.apache.hadoop.fs.Path(dst)
-    val fs = src.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val scheme = Option(fs.getUri.getScheme).getOrElse("file").toLowerCase
-    if (nonAtomicRenameSchemes.contains(scheme))
-      throw new UnsupportedOperationException(
-        s"publishPartition: $scheme:// rename is copy+delete, not atomic — " +
-          "the torn-partition guarantee does not hold on this filesystem")
-    if (fs.exists(d)) fs.delete(d, true)
-    fs.mkdirs(d.getParent)
-    if (!fs.rename(src, d))
-      throw new java.io.IOException(s"publishPartition: rename $tmp -> $dst failed")
-  }
-
   /** Streaming retention state sink — the streaming member of the
     * analytics trio (one-shot q107 / batch-incremental d113 / here),
     * mirroring the dedup families' batch+incremental+streaming coverage.
@@ -2891,9 +2710,7 @@ object StreamOps {
     * cannot bucket differently), reduce the batch to its distinct
     * (user_id, wk) partial — the O(batch→users×weeks) collapse happens
     * BEFORE anything is written — and publish it as this batch's own
-    * `batch=N` partition (sibling-`.tmp` + atomic rename, the
-    * effectively-once layout every graft sink uses: a foreachBatch replay
-    * rewrites an identical partition).
+    * `batch=N` partition ([[publish]]).
     *
     * The accumulated state is union-of-distincts, NOT globally distinct —
     * dedup across batches happens at read time ([[retentionMatrix]]),
@@ -2904,18 +2721,11 @@ object StreamOps {
   def retentionStream(spark: SparkSession, events: DataFrame,
       statePath: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    events.writeStream
-      .option("checkpointLocation", s"$statePath.checkpoint")
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        batch.toDF()
-          .select(col("user_id"),
-            graft.ops.Relational.retentionWeek(col("ts")).as("wk"))
-          .distinct()
-          .write.mode("overwrite").parquet(s"$statePath.tmp/batch=$id")
-        publishPartition(spark, s"$statePath.tmp/batch=$id",
-          s"$statePath/batch=$id")
-      }
-      .start()
+    sink(events, statePath) { (batch, id) =>
+      publish(batch.select(col("user_id"),
+          graft.ops.Relational.retentionWeek(col("ts")).as("wk")).distinct(),
+        statePath, s"batch=$id")
+    }
 
   /** The retention matrix from [[retentionStream]]'s accumulated state:
     * the d113 merge (distinct over the unioned partials) + the shared
@@ -2966,32 +2776,24 @@ object StreamOps {
     */
   def continuousIndex(spark: SparkSession, dir: String, indexPath: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    streamMarketDefinitions(spark, dir)
-      .writeStream
-      .option("checkpointLocation", s"$indexPath.checkpoint")
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val live = new org.apache.hadoop.fs.Path(indexPath)
-        val retired = new org.apache.hadoop.fs.Path(s"${indexPath}_old")
-        val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        // heal a swap that crashed between retire and publish before reading
-        graft.betfair.SnapshotSwap.recover(fs, live, retired)
-        val latest = batch
-          .groupBy("marketId")
-          .agg(max_by(struct(col("pt"), col("definition")), col("pt")).as("x"))
-          .select(col("marketId"), col("x.pt").as("pt"),
-            col("x.definition").as("definition"))
-        val merged =
-          if (!fs.exists(live)) latest
-          else spark.read.parquet(indexPath).unionByName(latest)
-            .groupBy("marketId")
-            .agg(max_by(struct(col("pt"), col("definition")), col("pt")).as("x"))
-            .select(col("marketId"), col("x.pt").as("pt"),
-              col("x.definition").as("definition"))
-        val tmp = new org.apache.hadoop.fs.Path(s"$indexPath.tmp")
-        merged.write.mode("overwrite").parquet(tmp.toString)
-        graft.betfair.SnapshotSwap.publish(fs, tmp, live, retired)
-      }
-      .start()
+    sink(streamMarketDefinitions(spark, dir), indexPath) { (batch, _) =>
+      val live = new org.apache.hadoop.fs.Path(indexPath)
+      val retired = new org.apache.hadoop.fs.Path(s"${indexPath}_old")
+      val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      // heal a swap that crashed between retire and publish before reading
+      graft.betfair.SnapshotSwap.recover(fs, live, retired)
+      val latestPerMarket = (df: DataFrame) => df.groupBy("marketId")
+        .agg(max_by(struct(col("pt"), col("definition")), col("pt")).as("x"))
+        .select(col("marketId"), col("x.pt").as("pt"),
+          col("x.definition").as("definition"))
+      val latest = latestPerMarket(batch)
+      val merged =
+        if (!fs.exists(live)) latest
+        else latestPerMarket(spark.read.parquet(indexPath).unionByName(latest))
+      val tmp = new org.apache.hadoop.fs.Path(s"$indexPath.tmp")
+      merged.write.mode("overwrite").parquet(tmp.toString)
+      graft.betfair.SnapshotSwap.publish(fs, tmp, live, retired)
+    }
 
   /** Streaming ingestion of exchange-stream NDJSON files: parse each line's
     * market-change message, keep the latest marketDefinition per market via

@@ -300,4 +300,45 @@ class BetfairDatabaseSpec extends SparkSpec {
     assert(r.getAs[String]("marketName") == "Bulk WIN")
     assert(r.getAs[String]("marketMetadataFilePath").endsWith("metadata.json"))
   }
+
+  test("index and insert free every cache they create") {
+    val (_, db) = freshDb()
+    def persisted: Int = spark.sparkContext.getPersistentRDDs.size
+    val beforeIndex = persisted
+    db.index(force = true)
+    assert(persisted == beforeIndex,
+      "index(force = true) left RDDs persisted")
+    val srcDir = Fixtures.tempDir("graftsrccache")
+    Fixtures.write(srcDir.resolve("1.300000003.json"),
+      Fixtures.catalogueJson("1.300000003", "7f Hcap", "WIN", "7",
+        "Horse Racing", "York"))
+    Fixtures.writeLines(srcDir.resolve("1.300000003"),
+      Seq("""{"op":"mcm","mc":[{"id":"1.300000003","rc":[]}]}"""))
+    val beforeInsert = persisted
+    assert(db.insert(srcDir.toString, pattern = ImportPatterns.flat)
+      .rowsInserted == 1)
+    assert(persisted == beforeInsert, "insert left RDDs persisted")
+  }
+
+  test("scan: a tree wider than the driver-listing threshold lists on " +
+      "executors and classifies every file") {
+    val dir = Fixtures.tempDir("graftwide")
+    val ids = (1 to 70).map(i => f"1.7000$i%05d")
+    ids.zipWithIndex.foreach { case (id, i) =>
+      Fixtures.write(dir.resolve(f"ev$i%02d/$id.json"), "{}")
+      Fixtures.write(dir.resolve(f"ev$i%02d/$id.bz2"), "")
+      Fixtures.write(dir.resolve(f"ev$i%02d/notes.txt"), "")
+    }
+    Fixtures.write(dir.resolve("1.799999999.json"), "{}")
+    val got = Discover.scan(spark, dir.toString)
+      .select("fileName", "kind", "stem").collect()
+      .map(r => (r.getString(0), r.getString(1), r.getString(2)))
+    val expected = ids.flatMap(id =>
+      Seq(s"$id.json" -> "metadata", s"$id.bz2" -> "data")) :+
+      ("1.799999999.json" -> "metadata")
+    assert(got.map(r => (r._1, r._2)).sorted.toSeq == expected.sorted)
+    // each file pairs by stem: the path minus its classifying suffix
+    assert(got.forall { case (name, _, stem) =>
+      stem.endsWith("/" + name.stripSuffix(".json").stripSuffix(".bz2")) })
+  }
 }
