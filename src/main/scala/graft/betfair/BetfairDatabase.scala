@@ -2,7 +2,7 @@ package graft.betfair
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, FileUtil, Path}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Public API of the Spark-native betfair market index — the reference's
@@ -135,25 +135,27 @@ class BetfairDatabase(spark: SparkSession, databaseDir: String) {
   }
 
   /** A16: drop index rows whose data file no longer exists. Returns the
-    * number of removed rows. Existence checks run in executors.
+    * number of removed rows. Existence checks run in executors; the scanned
+    * and kept row counts are observed on the snapshot write itself, so the
+    * write is the only job.
     */
   def clean(): Long = {
-    val df = indexDF
-    val before = df.count()
-    import spark.implicits._
+    val scanned, kept = Observation()
     val sconf = SerializableHadoopConf(spark)
-    val existing = df.mapPartitions { rows =>
-      val conf = sconf.value
-      var cachedFs: FileSystem = null
-      rows.filter { row =>
-        val p = new Path(row.getAs[String]("marketDataFilePath"))
-        if (cachedFs == null) cachedFs = p.getFileSystem(conf)
-        cachedFs.exists(p)
-      }
-    }(org.apache.spark.sql.Encoders.row(Schemas.indexSchema))
-      .toDF()
+    val existing = indexDF.observe(scanned, count(lit(1)).as("rows"))
+      .mapPartitions { rows =>
+        val conf = sconf.value
+        var cachedFs: FileSystem = null
+        rows.filter { row =>
+          val p = new Path(row.getAs[String]("marketDataFilePath"))
+          if (cachedFs == null) cachedFs = p.getFileSystem(conf)
+          cachedFs.exists(p)
+        }
+      }(org.apache.spark.sql.Encoders.row(Schemas.indexSchema))
+      .observe(kept, count(lit(1)).as("rows"))
     writeSnapshot(existing)
-    before - size
+    def rows(o: Observation): Long = o.get("rows").asInstanceOf[Long]
+    rows(scanned) - rows(kept)
   }
 
   /** A14/A15: incremental insert of a source directory with re-layout

@@ -115,15 +115,18 @@ object IndexPipeline {
       .withColumn("_dir", regexp_replace(col("metaPath"), "/metadata\\.json$", ""))
       .withColumn("_stemWanted", concat(col("_dir"), lit("/"), col("marketId")))
       .dropDuplicates("_stemWanted")
+    // bulkPaired and dataFree feed several counters and the index: cached,
+    // so each pairing join runs once per build rather than once per use
     val bulkPaired = bulkValid.join(data,
         bulkValid("_stemWanted") === data("stem"))
       .withColumn("_stem", col("stem"))
       .withColumn("_dataPath", col("dataPath"))
       .drop("stem", "dataPath", "dir", "_dir", "_stemWanted")
+      .cache()
     val consumedStems = bulkPaired.select(col("_stem").as("stem")).distinct()
 
     // ---- data/metadata pairing after bulk consumption (A2)
-    val dataFree = data.join(consumedStems, Seq("stem"), "left_anti")
+    val dataFree = data.join(consumedStems, Seq("stem"), "left_anti").cache()
     val pairedMeta = meta.join(dataFree, Seq("stem"))
     val metaWithoutData = meta.join(dataFree, Seq("stem"), "left_anti")
 
@@ -156,30 +159,38 @@ object IndexPipeline {
 
     // ---- counters (A20): total = |data ∪ metadata| stems before bulk
     // consumption (reference: betfairdatabase/processor.py:147-149).
-    // This call owns the four intermediate caches and frees them once the
+    // All of them come from ONE action: each counter's rows are tagged with
+    // its name, and one groupBy tallies the union.
+    // This call owns the six intermediate caches and frees them once the
     // counters are taken; by then the index sits in its own cache, which
     // the caller owns (or this call frees, if counting fails).
     val counters = try {
-      val totalMarkets = entries.filter(col("kind").isin("metadata", "data"))
-        .select("stem").distinct().count()
-      val cWithoutData = metaWithoutData.count()
-      val cWithoutMeta = extracted.filter(col("outcome") === "missing").count()
+      def tag(df: DataFrame, name: String): DataFrame =
+        df.select(lit(name).as("counter"))
       // a paired metadata file that produced NO parsed row (empty/whitespace
       // file — nothing for PERMISSIVE mode to route to _corrupt_record) is a
       // parse error in the reference (json.load raises; "Error parsing …")
       // — count it corrupt or the market vanishes from the audit entirely
       val unreadableMeta = pathPairs
         .join(perMarketRaw.select("metaPath"), Seq("metaPath"), "left_anti")
-      val cCorrupt = corrupt.count() +
-        extracted.filter(col("outcome") === "corrupt").count() +
-        bulkRaw.filter(col("_corrupt_record").isNotNull).count() +
-        unreadableMeta.count()
-      Counters(totalMarkets, cWithoutData, cWithoutMeta, cCorrupt,
-        index.count())
+      val tally = Seq(
+        tag(entries.filter(col("kind").isin("metadata", "data"))
+          .select("stem").distinct(), "total"),
+        tag(metaWithoutData, "withoutData"),
+        tag(extracted.filter(col("outcome") === "missing"), "withoutMeta"),
+        tag(corrupt, "corrupt"),
+        tag(extracted.filter(col("outcome") === "corrupt"), "corrupt"),
+        tag(bulkRaw.filter(col("_corrupt_record").isNotNull), "corrupt"),
+        tag(unreadableMeta, "corrupt"),
+        tag(index, "rows")
+      ).reduce(_ unionByName _).groupBy("counter").count().collect()
+        .map(r => r.getString(0) -> r.getLong(1)).toMap.withDefaultValue(0L)
+      Counters(tally("total"), tally("withoutData"), tally("withoutMeta"),
+        tally("corrupt"), tally("rows"))
     } catch {
       case e: Throwable => index.unpersist(); throw e
-    } finally Seq(entries, bulkRaw, extracted, perMarketRaw)
-      .foreach(_.unpersist())
+    } finally Seq(entries, bulkRaw, bulkPaired, dataFree, extracted,
+        perMarketRaw).foreach(_.unpersist())
     BuildResult(index, counters)
   }
 

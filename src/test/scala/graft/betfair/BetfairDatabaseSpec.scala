@@ -1,7 +1,12 @@
 package graft.betfair
 
 import java.nio.file.{Files, Path}
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 
 /** Integration tests over the synthesized multi-sport fixture database —
@@ -340,5 +345,64 @@ class BetfairDatabaseSpec extends SparkSpec {
     // each file pairs by stem: the path minus its classifying suffix
     assert(got.forall { case (name, _, stem) =>
       stem.endsWith("/" + name.stripSuffix(".json").stripSuffix(".bz2")) })
+  }
+
+  test("scan: the driver listing classifies every regular file of a " +
+      "year/Mon/day/event tree") {
+    val dir = Fixtures.tempDir("graftdeep")
+    val event = dir.resolve("2023/Jun/1/32000001")
+    Files.createDirectories(dir.resolve("2023/Jun/2/32000002")) // empty
+    Fixtures.write(event.resolve(".DS_Store"), "")
+    Fixtures.write(event.resolve("_SUCCESS"), "")
+    Fixtures.write(event.resolve("notes.txt"), "")
+    // one market downloaded twice: plaintext and bz2
+    Fixtures.write(event.resolve("1.216418252"), "")
+    Fixtures.write(event.resolve("1.216418252.bz2"), "")
+    Fixtures.write(event.resolve("metadata.json"), "[]")
+    val expected = Files.walk(dir).iterator.asScala
+      .filter(Files.isRegularFile(_))
+      .flatMap(p => Discover.classify(p.toString)).toSeq
+    import spark.implicits._
+    val got = Discover.scan(spark, dir.toString).as[Discover.Entry]
+      .collect().toSeq
+    assert(got.sortBy(_.path) == expected.sortBy(_.path))
+    assert(got.map(_.fileName).sorted == Seq("1.216418252", "1.216418252.bz2",
+      "metadata.json"))
+    assert(got.filter(_.kind == "data").map(_.stem).distinct ==
+      Seq(event.resolve("1.216418252").toString))
+  }
+
+  test("build over the fixture corpus runs a bounded number of jobs") {
+    // the count measured once each pairing join ran once and the counters
+    // came from one tally action (local[4], AQE on); the earlier build,
+    // which re-derived the pairing for every counter's count(), ran 41
+    val MaxBuildJobs = 33
+    val (dir, _) = freshDb()
+    val group = s"graft-build-${java.util.UUID.randomUUID}"
+    val sentinel = s"$group-sentinel"
+    val jobs = new AtomicInteger
+    val drained = new CountDownLatch(1)
+    // listener events arrive in submission order: once the sentinel job's
+    // start is seen, every job of the build has been counted
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`group`) => jobs.incrementAndGet()
+          case Some(`sentinel`) => drained.countDown()
+          case _ =>
+        }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "IndexPipeline.build")
+      try IndexPipeline.build(spark, dir.toString).index.unpersist()
+      finally sc.clearJobGroup()
+      sc.setJobGroup(sentinel, "listener sentinel")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(drained.await(60, TimeUnit.SECONDS))
+    } finally sc.removeSparkListener(listener)
+    assert(jobs.get <= MaxBuildJobs,
+      s"IndexPipeline.build ran ${jobs.get} jobs, more than $MaxBuildJobs")
   }
 }
