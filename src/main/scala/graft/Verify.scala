@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -16,15 +15,9 @@ object Verify {
       System.err.println(s"[verify] filter name '$n' matches no query — " +
         "check for a typo (it would otherwise silently not run)")))
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
+    // the verified configuration is the benched one: GraftSession
+    val spark = GraftSession.builder(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // same session shape as Bench/Cli (see Bench.scala): the verified
-      // configuration must be the benched configuration
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()

@@ -1,6 +1,6 @@
 package graft.betfair
 
-import org.apache.spark.sql.SparkSession
+import graft.GraftSession
 
 /** Command-line surface mirroring the reference's `bfdb` subcommands
   * (reference: betfairdatabase/cli.py — index/select/insert/clean/export/
@@ -112,20 +112,8 @@ object Cli {
       return
     }
     if (cmds.length < 2) fail(s"$cmd: missing database directory argument")
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .appName("graft-bfdb")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // generated-class cache sized for a long-lived multi-query session
-      // (default 100 thrashes; see Bench.scala for the measurements)
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      // AQE may re-pick partitioning inside cache materialization — the
-      // iterative operators' compact persisted tables otherwise freeze
-      // the full shuffle fan-out at any data size (see Bench.scala)
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      .getOrCreate()
+    val spark = GraftSession.builder(sys.env.getOrElse("SPARK_MASTER",
+      "local[*]")).appName("graft-bfdb").getOrCreate()
     // quiet overrides verbose, like the reference (cli.py:160)
     val logLevel =
       if (flag("-q", "--quiet")) "OFF"

@@ -1,6 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{Column, DataFrame, DataFrameWriter, Dataset,
+  Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout,
   OutputMode, StreamingQuery}
@@ -79,8 +81,8 @@ object StreamOps {
     */
   private def publishPartition(spark: SparkSession, tmp: String, dst: String)
       : Unit = {
-    val src = new org.apache.hadoop.fs.Path(tmp)
-    val d = new org.apache.hadoop.fs.Path(dst)
+    val src = new Path(tmp)
+    val d = new Path(dst)
     val fs = src.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val scheme = Option(fs.getUri.getScheme).getOrElse("file").toLowerCase
     if (nonAtomicRenameSchemes.contains(scheme))
@@ -104,7 +106,7 @@ object StreamOps {
     */
   private def tombstonesOf(spark: SparkSession, statePath: String)
       : Option[DataFrame] = {
-    val p = new org.apache.hadoop.fs.Path(tombstonePath(statePath))
+    val p = new Path(tombstonePath(statePath))
     if (!p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
       None
     else Some(spark.read.parquet(p.toString))
@@ -161,6 +163,172 @@ object StreamOps {
           all.filter(col("batch") === id).drop("batch")),
         s"$statePath.pairs", s"batch=$id")
     }
+
+  /** THE TIERED STATE KERNEL: the LSM protocol of an append-only state
+    * whose `batch=N` partitions (one or more SIDES, e.g. `edges` and
+    * `outdeg`) are compacted into versioned generations under
+    * `<statePath>/<gensDir>`. The PageRank edge state
+    * ([[compactPagerankEdges]]) and the URL keeper state
+    * ([[compactUrlState]]) both run on it, so the protocol is stated and
+    * coded once, here.
+    *
+    * GENERATIONS. Generation M (M = the highest batch id it absorbed) is
+    * a bucketed catalog table at `<gensDir>/v=M`, plus any per-generation
+    * side artifacts (`outdegc/v=M`). A MINOR absorbs only the batch
+    * partitions above the frontier: its write volume is proportional to
+    * the delta, never to the accumulated state. A MAJOR also folds the
+    * whole live set into one generation; it is the only O(state) write and
+    * runs at its own, slower cadence. A run is major when asked, when it
+    * writes the first generation (there is nothing to tier over), or when
+    * a minor would push the live set past `maxGens` — the backstop that
+    * bounds the read set without operator discipline.
+    *
+    * READ SET. [[live]] is the highest major plus every minor above it.
+    * Minors cover disjoint batch ranges and a major covers everything
+    * below itself, so the set holds each batch partial exactly once;
+    * reading a superseded generation still on disk would double-count
+    * (outdegrees, URL occurrence counts). [[frontier]] is the highest
+    * version and [[recent]] reads the batch partitions above it. A reader
+    * pins all three when it constructs its Tier.
+    *
+    * READ BARRIER. All of generation M's artifacts are written first; its
+    * `v=M.ok` sentinel (line 1 the table's catalog name, line 2
+    * `major`/`minor`) is renamed into place LAST. Mid-compaction a reader
+    * serves the prior read set, still complete on disk, and after the
+    * rename the new one — never a half generation.
+    *
+    * DEFERRED RETIRE, one full cycle each. A run deletes the batch
+    * partitions at or below the frontier it started from (their covering
+    * generation published a cycle ago, and a reader pinned then reads only
+    * the batches above it), and the generations a major had superseded
+    * BEFORE this run (its own supersessions retire next run). The grace
+    * contract is that a read completes within one compaction cycle. A
+    * crashed run is healed by re-running: pre-sentinel artifacts are
+    * dropped and rewritten, post-sentinel leftovers retire next run.
+    *
+    * QUIESCENT COMPACTION, ENFORCED. Compaction runs between committed
+    * stream batches: the barrier protects readers, not a writer replaying
+    * a crashed batch. A batch replayed at or below the frontier finds its
+    * rows already inside a generation and its partition retired, so its
+    * sink fails fast ([[guardReplay]]) rather than publish a wrong state.
+    */
+  private[graft] final class Tier(spark: SparkSession, statePath: String,
+      gensDir: String) {
+    private val fs = new Path(statePath)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    /** Every published generation, ascending by version. */
+    val all: Seq[StateGen] = stateGens(spark, s"$statePath/$gensDir")
+    val live: Seq[StateGen] = liveGens(all)
+    /** The highest absorbed batch id; -1 before the first generation. */
+    val frontier: Long = all.lastOption.fold(-1L)(_.version)
+
+    /** `cols` of the `side` partitions above the frontier, at most `upTo`
+      * and other than `exclude` (a replayed batch's own); None when there
+      * are none.
+      */
+    def recent(side: String, cols: Seq[String], exclude: Long = -1L,
+        upTo: Long = Long.MaxValue): Option[DataFrame] =
+      if (!batchIds(fs, s"$statePath/$side").exists(n =>
+          n > frontier && n <= upTo && n != exclude)) None
+      else Some(spark.read.parquet(s"$statePath/$side")
+        .filter(col("batch") > frontier && col("batch") <= upTo &&
+          col("batch") =!= exclude)
+        .select(cols.map(col): _*))
+
+    /** Fail `sink`'s batch `id` if it replays at or below the frontier. */
+    def guardReplay(id: Long, sink: String, consequence: String): Unit =
+      if (id <= frontier) throw new IllegalStateException(
+        s"$sink: batch $id replayed at or below the compacted generation " +
+          s"v=$frontier — compaction absorbed a batch whose streaming " +
+          s"checkpoint had not committed; $consequence")
+
+    /** Publish the next generation M over the `sides` partitions (the
+      * first side's highest batch id is M; a no-op when nothing is newer
+      * than the frontier), then retire. `write(M, fold)` writes M's side
+      * artifacts under `genDirs` and returns the bucketed writer of its
+      * table over the side rows up to M (`recent(side, cols, upTo = M)`)
+      * plus the `fold` generations: the live set on a major, else none.
+      */
+    def compact(sides: Seq[String], tableBase: String, major: Boolean,
+        maxGens: Int, genDirs: Seq[String] = Seq.empty)(
+        write: (Long, Seq[StateGen]) => DataFrameWriter[Row]): Unit = {
+      val m = (-1L +: batchIds(fs, s"$statePath/${sides.head}")).max
+      if (m <= frontier) return // nothing new since the last generation
+      val isMajor = major || live.isEmpty || live.size + 1 > maxGens
+      val tbl = s"${tableBase}_v$m"
+      spark.sql(s"DROP TABLE IF EXISTS $tbl") // a crashed prior attempt
+      write(m, if (isMajor) live else Seq.empty).mode("overwrite")
+        .option("path", s"$statePath/$gensDir/v=$m").saveAsTable(tbl)
+      val ok = new Path(s"$statePath/$gensDir/v=$m.ok")
+      val okTmp = new Path(s"$ok.tmp")
+      val out = fs.create(okTmp, true)
+      try out.write(s"$tbl\n${if (isMajor) "major" else "minor"}"
+        .getBytes("UTF-8")) finally out.close()
+      if (fs.exists(ok)) fs.delete(ok, true)
+      if (!fs.rename(okTmp, ok))
+        throw new java.io.IOException(s"sentinel rename failed: $ok")
+      for (side <- sides; n <- batchIds(fs, s"$statePath/$side")
+          if n <= frontier)
+        fs.delete(new Path(s"$statePath/$side/batch=$n"), true)
+      all.filterNot(live.contains).foreach { g =>
+        spark.sql(s"DROP TABLE IF EXISTS ${g.table}")
+        ((gensDir +: genDirs).map(d => s"$d/v=${g.version}") :+
+          s"$gensDir/v=${g.version}.ok")
+          .foreach(r => fs.delete(new Path(s"$statePath/$r"), true))
+      }
+    }
+  }
+
+  /** One published generation of a [[Tier]]: its version (= the highest
+    * batch id it absorbed), the catalog name of its bucketed table, and
+    * whether it is MAJOR (covers every batch up to its version) or MINOR
+    * (covers only the batches since the previous generation).
+    */
+  private[graft] final case class StateGen(version: Long, table: String,
+    major: Boolean)
+
+  /** Every generation published under `gensRoot`, ascending by version,
+    * read from the `v=M.ok` sentinels: line 1 is the table's catalog
+    * name, line 2 the kind (`major`/`minor`; absent = major, the
+    * pre-tiering format).
+    */
+  private[graft] def stateGens(spark: SparkSession,
+      gensRoot: String): Seq[StateGen] = {
+    val root = new Path(gensRoot)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(root)) return Seq.empty
+    fs.listStatus(root).map(_.getPath.getName).toSeq
+      .collect { case n if n.startsWith("v=") && n.endsWith(".ok") =>
+        n.stripPrefix("v=").stripSuffix(".ok").toLong }
+      .sorted
+      .map { v =>
+        val in = fs.open(new Path(s"$root/v=$v.ok"))
+        val lines =
+          try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
+          finally in.close()
+        StateGen(v, lines.head.trim,
+          lines.drop(1).headOption.forall(_.trim != "minor"))
+      }
+  }
+
+  /** A [[Tier]]'s read set: the highest major plus every minor above it. */
+  private[graft] def liveGens(gens: Seq[StateGen]): Seq[StateGen] = {
+    val lastMajor = gens.lastIndexWhere(_.major)
+    if (lastMajor < 0) gens else gens.drop(lastMajor)
+  }
+
+  /** The batch ids present under a `batch=N` root — empty when the root
+    * is missing or holds no partitions (a parquet read of either would
+    * throw, not return empty).
+    */
+  private def batchIds(fs: org.apache.hadoop.fs.FileSystem,
+      root: String): Seq[Long] = {
+    val p = new Path(root)
+    if (!fs.exists(p)) Seq.empty
+    else fs.listStatus(p).map(_.getPath.getName).toSeq
+      .collect { case n if n.startsWith("batch=") =>
+        n.stripPrefix("batch=").toLong }
+  }
 
   /** Watermarked tumbling-window counts per event type. */
   def windowedCounts(events: DataFrame, watermarkDelay: String = "10 minutes",
@@ -950,7 +1118,7 @@ object StreamOps {
     */
   def updatedPairs(spark: SparkSession, statePath: String): DataFrame = {
     val pairs = spark.read.parquet(s"$statePath.pairs")
-    val supPath = new org.apache.hadoop.fs.Path(s"$statePath.supersede")
+    val supPath = new Path(s"$statePath.supersede")
     val fs = supPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val superseded =
       if (!fs.exists(supPath)) pairs
@@ -1065,38 +1233,21 @@ object StreamOps {
     * edge compaction). All reads of this batch's own partitions are
     * excluded by the `batch` filter, so a replayed batch recomputes from
     * exactly the prior-graph state. Run [[compactPagerankEdges]] /
-    * [[compactPagerankState]] only at a quiescent stream point (between
-    * committed batches) — the read barrier protects concurrent READERS,
-    * not a writer replaying a crashed batch. That contract is ENFORCED,
-    * not assumed: each batch checks its id against the compacted
-    * generation's version (= the highest batch id the generation
-    * absorbed) and fails the query fast when it replays at or below it,
-    * instead of silently publishing nothing (see the in-batch guard).
+    * [[compactPagerankState]] only at a quiescent stream point, which
+    * the edge [[Tier]] enforces.
     */
   def pagerankDeltaStream(spark: SparkSession, edges: DataFrame,
       docs: DataFrame, statePath: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
     sink(edges, statePath) { (batch, id) =>
-      // ENFORCED quiescent-point contract (not just documented): the
-      // compacted generation's version is the highest batch id it
-      // absorbed. A replaying batch at id <= that version finds its own
-      // edges already inside the generation (no batch column left to
-      // exclude), computes an empty delta, and would silently skip
-      // publishing its PageRank overlays — served ranks would then
-      // permanently omit the batch's influence. Fail the query fast
-      // instead; the operator re-runs compaction AFTER the checkpoint
-      // commits (or restores the pre-compaction state).
-      prEdgeVersion(spark, statePath).foreach { case (m, _) =>
-        if (id <= m) throw new IllegalStateException(
-          s"pagerankDeltaStream: batch $id replayed at or below the " +
-            s"compacted edge generation v=$m — compaction absorbed a " +
-            "batch whose streaming checkpoint had not committed; its " +
-            "overlays cannot be recomputed from the remaining state")
-      }
+      // a replay under a generation finds its edges already absorbed,
+      // computes an empty delta and would silently skip its overlays
+      edgeTier(spark, statePath).guardReplay(id, "pagerankDeltaStream",
+        "its overlays cannot be recomputed from the remaining state")
       val reg = new graft.ops.CacheRegistry
       val nodes = reg.add(docs.select("doc_id").persist())
       val nn = nodes.count()
-      val fs = new org.apache.hadoop.fs.Path(statePath)
+      val fs = new Path(statePath)
         .getFileSystem(spark.sparkContext.hadoopConfiguration)
       val delta = reg.add(
         prNoveltyDelta(spark, batch, statePath, id, reg).persist())
@@ -1109,7 +1260,7 @@ object StreamOps {
         val k = graft.ops.TextOps.PrIters
         val publishIter = (df: DataFrame, i: Int) =>
           publish(df, statePath, s"pr/iter=$i/batch=$id")
-        val prDone = new org.apache.hadoop.fs.Path(s"$statePath/pr/iter=$k")
+        val prDone = new Path(s"$statePath/pr/iter=$k")
         if (!fs.exists(prDone)) {
           // first effective batch: the full build — the ONE place the
           // graph is repartitioned on src and iterated whole (t135's
@@ -1141,100 +1292,21 @@ object StreamOps {
     */
   private[graft] val PrSrcLiteralCap = 1024
 
-  /** The batch partition ids currently present under a `batch=N` root —
-    * empty when the root is missing or holds no partitions (a parquet
-    * read of either would throw, not return empty).
-    */
-  private def batchIds(fs: org.apache.hadoop.fs.FileSystem,
-      root: String): Seq[Long] = {
-    val p = new org.apache.hadoop.fs.Path(root)
-    if (!fs.exists(p)) Seq.empty
-    else fs.listStatus(p).map(_.getPath.getName).toSeq
-      .collect { case n if n.startsWith("batch=") =>
-        n.stripPrefix("batch=").toLong }
-  }
+  /** The PageRank edge state's [[Tier]]: generations under `edgesc/`. */
+  private def edgeTier(spark: SparkSession, statePath: String): Tier =
+    new Tier(spark, statePath, "edgesc")
 
-  /** One compacted generation of a tiered append-only state: its
-    * version (= the highest batch id it absorbed), the catalog name of
-    * its bucketed table, and whether it is MAJOR (covers everything up
-    * to its version) or MINOR (covers only the batch range since the
-    * previous generation). Shared by the PageRank edge tiers and the
-    * URL keeper tiers — one catalog, two states.
-    */
-  private[graft] final case class StateGen(version: Long, table: String,
-    major: Boolean)
-
-  /** Every published generation under `gensRoot`, ascending by
-    * version — read from the `v=M.ok` read-barrier sentinels. A
-    * sentinel is written LAST ([[publishGenSentinel]]), so a generation
-    * is visible only when its artifacts are complete; line 1 of its
-    * content is the table's catalog name, line 2 the generation kind
-    * (`major`/`minor`; absent = major, the pre-tiering format).
-    */
-  private[graft] def stateGens(spark: SparkSession,
-      gensRoot: String): Seq[StateGen] = {
-    val root = new org.apache.hadoop.fs.Path(gensRoot)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) return Seq.empty
-    fs.listStatus(root).map(_.getPath.getName).toSeq
-      .collect { case n if n.startsWith("v=") && n.endsWith(".ok") =>
-        n.stripPrefix("v=").stripSuffix(".ok").toLong }
-      .sorted
-      .map { v =>
-        val in = fs.open(new org.apache.hadoop.fs.Path(s"$root/v=$v.ok"))
-        val lines =
-          try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
-          finally in.close()
-        StateGen(v, lines.head.trim,
-          lines.drop(1).headOption.forall(_.trim != "minor"))
-      }
-  }
-
-  /** The CONSISTENT read set of a tiered state's generations: the
-    * highest MAJOR plus every minor above it, ascending. Minors cover
-    * disjoint batch ranges by construction and the major covers
-    * everything below itself, so the union of exactly this set holds
-    * each underlying fact once — reading a superseded generation that
-    * is still on disk for a pinned reader would double-count (fatal for
-    * outdegrees, flow mass, and URL occurrence counts alike, not just
-    * wasteful).
-    */
-  private[graft] def liveGens(gens: Seq[StateGen]): Seq[StateGen] = {
-    val lastMajor = gens.lastIndexWhere(_.major)
-    if (lastMajor < 0) gens else gens.drop(lastMajor)
-  }
-
-  /** The read barrier: stage the sentinel beside its final name, rename
-    * into place LAST — a generation becomes visible only complete.
-    */
-  private def publishGenSentinel(fs: org.apache.hadoop.fs.FileSystem,
-      gensRoot: String, version: Long, table: String,
-      major: Boolean): Unit = {
-    val okPath = new org.apache.hadoop.fs.Path(s"$gensRoot/v=$version.ok")
-    val okTmp =
-      new org.apache.hadoop.fs.Path(s"$gensRoot/v=$version.ok.tmp")
-    val out = fs.create(okTmp, true)
-    try out.write(s"$table\n${if (major) "major" else "minor"}"
-      .getBytes("UTF-8")) finally out.close()
-    if (fs.exists(okPath)) fs.delete(okPath, true)
-    if (!fs.rename(okTmp, okPath))
-      throw new java.io.IOException(s"sentinel rename failed: $okPath")
-  }
-
-  /** Every published edge generation under `edgesc/` ([[stateGens]]). */
+  /** Every published edge generation ([[Tier.all]]). */
   private[graft] def prEdgeGens(spark: SparkSession,
       statePath: String): Seq[StateGen] =
-    stateGens(spark, s"$statePath/edgesc")
+    edgeTier(spark, statePath).all
 
-  /** The edge state's consistent generation read set ([[liveGens]]). */
+  /** The edge state's consistent read set ([[Tier.live]]). */
   private[graft] def prLiveEdgeGens(spark: SparkSession,
       statePath: String): Seq[StateGen] =
-    liveGens(prEdgeGens(spark, statePath))
+    edgeTier(spark, statePath).live
 
-  /** The current compacted edge frontier: (max version, that generation's
-    * table name) — the version is what splits compacted from uncompacted
-    * batch partitions. Readers wanting edge ROWS use [[prLiveEdgeGens]].
-    */
+  /** The edge frontier: (max version, that generation's table name). */
   private[graft] def prEdgeVersion(spark: SparkSession,
       statePath: String): Option[(Long, String)] =
     prEdgeGens(spark, statePath).lastOption.map(g => (g.version, g.table))
@@ -1265,30 +1337,14 @@ object StreamOps {
       statePath: String, excludeBatch: Long,
       reg: graft.ops.CacheRegistry = graft.ops.CacheRegistry.harness)
       : DataFrame = {
-    val fs = new org.apache.hadoop.fs.Path(statePath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val b = batchDf.select("src", "dst").distinct()
-    val gens = prLiveEdgeGens(spark, statePath)
-    val after = gens.lastOption.map(_.version).getOrElse(-1L)
-    val recent =
-      if (batchIds(fs, s"$statePath/edges").exists(n =>
-          n > after && n != excludeBatch))
-        Some(spark.read.parquet(s"$statePath/edges")
-          .filter(col("batch") > after && col("batch") =!= excludeBatch)
-          .select("src", "dst"))
-      else None
-    // ONE bounded literal cut shared by every generation's pruned scan
-    val srcs =
-      if (gens.isEmpty) Seq.empty[Long]
-      else b.select("src").distinct()
-        .limit(PrSrcLiteralCap + 1).collect().map(_.getLong(0)).toSeq
-    val compacted = gens.map { g =>
-      val state = spark.table(g.table).select("src", "dst")
-      if (srcs.length <= PrSrcLiteralCap)
-        state.filter(col("src").isin(srcs: _*))
-      else state
-    }
-    val prior = (recent.toSeq ++ compacted)
+    // ONE bounded literal cut shared by every generation's pruned scan,
+    // collected only when a generation exists
+    lazy val srcs = b.select("src").distinct()
+      .limit(PrSrcLiteralCap + 1).collect().map(_.getLong(0)).toSeq
+    val prior = prStateEdges(spark, statePath, excludeBatch, gen =>
+        if (srcs.length > PrSrcLiteralCap) gen
+        else gen.filter(col("src").isin(srcs: _*)))
       .reduceOption(_.unionByName(_))
     prior.fold(b) { p0 =>
       val p = reg.add(p0.persist())
@@ -1309,24 +1365,20 @@ object StreamOps {
     */
   private[graft] def prServedOutdeg(spark: SparkSession,
       statePath: String): DataFrame = {
-    val fs = new org.apache.hadoop.fs.Path(statePath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val gens = prLiveEdgeGens(spark, statePath)
-    val after = gens.lastOption.map(_.version).getOrElse(-1L)
-    val recent =
-      if (batchIds(fs, s"$statePath/outdeg").exists(_ > after))
-        Some(spark.read.parquet(s"$statePath/outdeg")
-          .filter(col("batch") > after).select("src", "cnt"))
-      else None
-    // counts are additive, so the tiered read set merges for free: each
-    // generation's outdegc covers exactly the batch range its edge table
-    // does, and one groupBy-sum over the union is the served outdegree
-    val compacted = gens.map(g =>
-      spark.read.parquet(s"$statePath/outdegc/v=${g.version}")
-        .select("src", "cnt"))
-    (recent.toSeq ++ compacted).reduce(_.unionByName(_))
-      .groupBy("src").agg(sum("cnt").as("outdeg"))
+    val tier = edgeTier(spark, statePath)
+    (tier.recent("outdeg", Seq("src", "cnt")).toSeq ++
+        tier.live.map(prGenOutdeg(spark, statePath, _)))
+      .reduce(_.unionByName(_)).groupBy("src").agg(sum("cnt").as("outdeg"))
   }
+
+  /** Generation `g`'s merged outdegree partials, `outdegc/v=M`: counts
+    * are additive, so each generation's partials cover exactly the batch
+    * range its edge table does.
+    */
+  private def prGenOutdeg(spark: SparkSession, statePath: String,
+      g: StateGen): DataFrame =
+    spark.read.parquet(s"$statePath/outdegc/v=${g.version}")
+      .select("src", "cnt")
 
   /** The union graph (compacted generation + uncompacted partitions +
     * this batch's delta) as a plain (src, dst) view — consumed by the
@@ -1339,26 +1391,19 @@ object StreamOps {
       .foldLeft(delta.select("src", "dst"))(_.unionByName(_))
 
   /** The accumulated graph's stored (src, dst) views: the uncompacted
-    * `batch=N` partitions above the read frontier (minus `excludeBatch`)
-    * plus the [[prLiveEdgeGens]] read set — each edge exactly once (the
-    * stream lands only NOVEL edges and the read set covers disjoint batch
-    * ranges). Shared by the per-batch union graph ([[prUnionEdges]]) and
-    * the maintained-state rebuild reads ([[hitsFromEdgeState]]).
+    * `batch=N` partitions above the frontier (minus `excludeBatch`) plus
+    * the [[prLiveEdgeGens]] read set, each generation scan through `cut` —
+    * each edge exactly once (the stream lands only NOVEL edges and the
+    * read set covers disjoint batch ranges). Shared by the novelty probe
+    * ([[prNoveltyDelta]]), the per-batch union graph ([[prUnionEdges]])
+    * and the maintained-state rebuild reads ([[hitsFromEdgeState]]).
     */
   private def prStateEdges(spark: SparkSession, statePath: String,
-      excludeBatch: Long = -1L): Seq[DataFrame] = {
-    val fs = new org.apache.hadoop.fs.Path(statePath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val gens = prLiveEdgeGens(spark, statePath)
-    val after = gens.lastOption.map(_.version).getOrElse(-1L)
-    val recent =
-      if (batchIds(fs, s"$statePath/edges").exists(n =>
-          n > after && n != excludeBatch))
-        Seq(spark.read.parquet(s"$statePath/edges")
-          .filter(col("batch") > after && col("batch") =!= excludeBatch)
-          .select("src", "dst"))
-      else Seq.empty
-    recent ++ gens.map(g => spark.table(g.table).select("src", "dst"))
+      excludeBatch: Long = -1L,
+      cut: DataFrame => DataFrame = identity): Seq[DataFrame] = {
+    val tier = edgeTier(spark, statePath)
+    tier.recent("edges", Seq("src", "dst"), excludeBatch).toSeq ++
+      tier.live.map(g => cut(spark.table(g.table).select("src", "dst")))
   }
 
   /** The second centrality served from the MAINTAINED edge state: the
@@ -1398,115 +1443,30 @@ object StreamOps {
         .filter(col("batch") =!= excludeBatch), "doc_id")
 
   /** Compact a [[pagerankDeltaStream]] EDGE state into the next
-    * src-bucketed serving generation — the maintenance job that bounds
-    * what every delta batch's novelty probe has to touch: without it an
+    * generation of its [[Tier]] — the maintenance job that bounds what
+    * every delta batch's novelty probe has to touch: without it an
     * unbounded crawl accumulates one `edges/batch=N` partition per batch
-    * forever. TIERED (the LSM shape): a MINOR compaction (the default)
-    * absorbs ONLY the uncompacted `batch=N` partitions into generation
-    * M (M = the highest ingested batch id) — its write volume is
-    * proportional to the absorbed partitions, never to the accumulated
-    * graph — and readers union the [[prLiveEdgeGens]] read set (highest
-    * major + minors above it, each still bucket-pruned per probe). A
-    * MAJOR compaction (`major = true`, or automatic once a minor would
-    * push the live set past `maxGens` — the backstop that bounds the
-    * read set without operator discipline) rewrites that whole read set
-    * into one generation, bounding the per-probe generation count; it is
-    * the only O(graph) write in the lifecycle and runs at its own (much
-    * slower) cadence. Each generation is a `src`-bucketed,
-    * (src, dst)-sorted catalog table (the
-    * [[graft.ops.TextOps.writeBandBucketedState]] layout convention —
-    * bucket pruning on the single `src` column is what makes the novelty
-    * probe read only the batch's srcs' buckets), with the generation's
-    * outdegree partials merged into `outdegc/v=M` alongside (counts are
-    * additive, so per-generation outdegc tiers for free).
-    *
-    * READER-SAFE PUBLISH (the read barrier): all of generation M's
-    * artifacts are written first; the `v=M.ok` sentinel (line 1 = the
-    * table's catalog name, line 2 = `major`/`minor`) is renamed into
-    * place LAST. Readers pin the read set derived from the sentinels
-    * present at pin time, so mid-compaction they serve the prior set
-    * (still complete on disk) and post-publish the new one — never a
-    * half generation, and never a generation twice (a superseded
-    * generation awaiting retirement is EXCLUDED from the read set by
-    * the highest-major rule — unioning it would double-count edges).
-    * Retirement is DEFERRED one cycle: this run deletes batch
-    * partitions ≤ P (P = the frontier before this run — their covering
-    * generation published a full cycle ago) and generations a major
-    * superseded BEFORE this run; the grace contract is that a read
-    * completes within one compaction cycle. A crashed run is healed by
-    * re-running (pre-sentinel artifacts are overwritten; post-sentinel
-    * leftovers are retired by the next run).
+    * forever. Each generation is a `src`-bucketed, (src, dst)-sorted
+    * catalog table (the [[graft.ops.TextOps.writeBandBucketedState]]
+    * layout convention — bucket pruning on the single `src` column is
+    * what makes the novelty probe read only the batch's srcs' buckets),
+    * with the generation's outdegree partials merged into `outdegc/v=M`
+    * alongside ([[prGenOutdeg]]).
     */
   def compactPagerankEdges(spark: SparkSession, statePath: String,
       tableBase: String, nBuckets: Int = 32, major: Boolean = false,
       maxGens: Int = 8): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(statePath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val edgeBatches = batchIds(fs, s"$statePath/edges")
-    if (edgeBatches.isEmpty) return
-    val m = edgeBatches.max
-    val allGens = prEdgeGens(spark, statePath)
-    val live = liveGens(allGens)
-    val after = live.lastOption.map(_.version).getOrElse(-1L)
-    if (m <= after) return // nothing new since the last generation
-    // the first generation has no prior to tier over — it is a major by
-    // construction, whatever was asked for. The maxGens backstop bounds
-    // the read set's generation count WITHOUT operator discipline (the
-    // enforce-don't-document theme): once a minor would make the live
-    // set exceed it, the run upgrades itself to a major.
-    val isMajor = major || live.isEmpty || live.size + 1 > maxGens
-    val recent = spark.read.parquet(s"$statePath/edges")
-      .filter(col("batch") > after && col("batch") <= m)
-      .select("src", "dst")
-    val newEdges =
-      if (!isMajor) recent
-      else live.map(g => spark.table(g.table).select("src", "dst"))
-        .foldLeft(recent)(_.unionByName(_))
-    val tbl = s"${tableBase}_v$m"
-    spark.sql(s"DROP TABLE IF EXISTS $tbl") // a crashed prior attempt
-    newEdges.write.mode("overwrite")
-      .bucketBy(nBuckets, "src").sortBy("src", "dst")
-      .option("path", s"$statePath/edgesc/v=$m").saveAsTable(tbl)
-    val recentOd = spark.read.parquet(s"$statePath/outdeg")
-      .filter(col("batch") > after && col("batch") <= m)
-      .select("src", "cnt")
-    val newOd =
-      if (!isMajor) recentOd
-      else live.map(g =>
-        spark.read.parquet(s"$statePath/outdegc/v=${g.version}")
-          .select("src", "cnt"))
-        .foldLeft(recentOd)(_.unionByName(_))
-    publish(newOd.groupBy("src").agg(sum("cnt").as("cnt")), statePath,
-      s"outdegc/v=$m")
-    // the read barrier: rename the sentinel into place LAST
-    publishGenSentinel(fs, s"$statePath/edgesc", m, tbl, isMajor)
-    // deferred retire (one full cycle each):
-    //  - batch partitions <= P: covered by generations published at
-    //    least one cycle ago (a reader pinned at P's read set reads
-    //    batches > P only);
-    //  - generations a major had already superseded BEFORE this run
-    //    (they left the read set when that major published — this run's
-    //    own supersessions, major or not, retire next run).
-    if (live.nonEmpty) {
-      Seq("edges", "outdeg").foreach { side =>
-        val root = new org.apache.hadoop.fs.Path(s"$statePath/$side")
-        if (fs.exists(root)) fs.listStatus(root).foreach { st =>
-          val n = st.getPath.getName
-          if (n.startsWith("batch=") &&
-              n.stripPrefix("batch=").toLong <= after)
-            fs.delete(st.getPath, true)
-        }
-      }
-    }
-    val liveSet = live.map(_.version).toSet
-    allGens.filterNot(g => liveSet.contains(g.version)).foreach { g =>
-      spark.sql(s"DROP TABLE IF EXISTS ${g.table}")
-      fs.delete(new org.apache.hadoop.fs.Path(
-        s"$statePath/edgesc/v=${g.version}"), true)
-      fs.delete(new org.apache.hadoop.fs.Path(
-        s"$statePath/edgesc/v=${g.version}.ok"), true)
-      fs.delete(new org.apache.hadoop.fs.Path(
-        s"$statePath/outdegc/v=${g.version}"), true)
+    val tier = edgeTier(spark, statePath)
+    tier.compact(Seq("edges", "outdeg"), tableBase, major, maxGens,
+        Seq("outdegc")) { (m, fold) =>
+      publish((tier.recent("outdeg", Seq("src", "cnt"), upTo = m).toSeq ++
+          fold.map(prGenOutdeg(spark, statePath, _)))
+          .reduce(_.unionByName(_)).groupBy("src").agg(sum("cnt").as("cnt")),
+        statePath, s"outdegc/v=$m")
+      (tier.recent("edges", Seq("src", "dst"), upTo = m).toSeq ++
+          fold.map(g => spark.table(g.table).select("src", "dst")))
+        .reduce(_.unionByName(_))
+        .write.bucketBy(nBuckets, "src").sortBy("src", "dst")
     }
   }
 
@@ -1539,8 +1499,7 @@ object StreamOps {
     */
   def compactPagerankState(spark: SparkSession, statePath: String): Unit = {
     val conf = spark.sparkContext.hadoopConfiguration
-    val prRoot = new org.apache.hadoop.fs.Path(
-      s"$statePath/pr/iter=${graft.ops.TextOps.PrIters}")
+    val prRoot = new Path(s"$statePath/pr/iter=${graft.ops.TextOps.PrIters}")
     // no effective batch has published yet (an empty-delta stream, or
     // compaction scheduled before first data): a no-op, not a read error
     if (!prRoot.getFileSystem(conf).exists(prRoot)) return
@@ -1551,7 +1510,7 @@ object StreamOps {
         raw.agg(max("batch")).head.getAs[Number](0).longValue
       publish(latestPerId(raw, "doc_id"), statePath,
         s"pr/iter=$i/batch=$maxBatch")
-      val rootPath = new org.apache.hadoop.fs.Path(root)
+      val rootPath = new Path(root)
       val fs = rootPath.getFileSystem(conf)
       fs.listStatus(rootPath).foreach { st =>
         val name = st.getPath.getName
@@ -1574,26 +1533,15 @@ object StreamOps {
     * aggregate — and publish as `urls/batch=N` ([[publish]]). Input batches
     * must carry disjoint doc_ids across batches (the d101 batch-API
     * contract — a re-ingested doc_id adds to its URL's n_docs once per
-    * carrying batch).
-    *
-    * The quiescent-compaction contract is ENFORCED exactly as in
-    * [[pagerankDeltaStream]]: a batch replaying at or below the
-    * compacted generation's version finds its rows already merged into
-    * the generation (its partition was retired), and republishing would
-    * double its URLs' counts at the next compaction — fail the query
-    * fast instead.
+    * carrying batch). A replay under a compacted generation fails fast
+    * ([[Tier]]).
     */
   def urlStateStream(spark: SparkSession, docs: DataFrame,
       statePath: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
     sink(docs, statePath) { (batch, id) =>
-      stateGens(spark, s"$statePath/urlsc").lastOption.foreach { g =>
-        if (id <= g.version) throw new IllegalStateException(
-          s"urlStateStream: batch $id replayed at or below the " +
-            s"compacted keeper generation v=${g.version} — compaction " +
-            "absorbed a batch whose streaming checkpoint had not " +
-            "committed; republishing would double its URL counts")
-      }
+      urlTier(spark, statePath).guardReplay(id, "urlStateStream",
+        "republishing would double its URL counts")
       publish(batch
           .select(col("doc_id"),
             graft.ops.TextOps.canonicalizeUrl(col("url")).as("canon_url"))
@@ -1602,73 +1550,45 @@ object StreamOps {
         statePath, s"urls/batch=$id")
     }
 
-  /** Tiered compaction of a [[urlStateStream]] keeper state — the
-    * [[compactPagerankEdges]] LSM shape on the second qualifying state:
-    * a MINOR generation merges ONLY the batch partitions since the last
-    * generation (write volume O(delta-URLs), the point of tiering — a
-    * full rewrite of an ever-growing keeper table per cadence was the
-    * one O(corpus) maintenance shape left); a MAJOR additionally folds
-    * every live generation into one (its own cadence bounds the read
-    * set's generation count, enforced by `maxGens` — past it a minor
-    * upgrades itself, the enforce-don't-document backstop). Generations
-    * are canon_url-bucketed+sorted, so the keeper lookup probes them
-    * bucket-pruned ([[urlKeeperProbe]]); the `v=M.ok` sentinel publishes
-    * LAST (read barrier, shared [[publishGenSentinel]]). Because the
-    * state is MERGEABLE (not disjoint facts like edges), a URL may
-    * appear in several live generations — the serve's one groupBy
-    * re-merges; what the read-set rule guarantees is that each BATCH
-    * PARTIAL is covered exactly once, which is what keeps n_docs exact.
-    * Deferred retire (one full cycle each, the compactPagerankEdges
-    * rule): absorbed batch partitions at or below the previous frontier,
-    * and generations a major had already superseded before this run.
+  /** The URL keeper state's [[Tier]]: generations under `urlsc/`. */
+  private def urlTier(spark: SparkSession, statePath: String): Tier =
+    new Tier(spark, statePath, "urlsc")
+
+  /** The (canon_url, keeper_id, n_docs) columns of a keeper partial. */
+  private val KeeperCols = Seq("canon_url", "keeper_id", "n_docs")
+
+  /** Generation `g`'s keeper table (one row per url). */
+  private def keeperGen(spark: SparkSession, g: StateGen): DataFrame =
+    spark.table(g.table).select(KeeperCols.map(col): _*)
+
+  /** Tiered compaction of a [[urlStateStream]] keeper state into the next
+    * generation of its [[Tier]]. A minor's write volume is O(delta-URLs):
+    * a full rewrite of an ever-growing keeper table per cadence was the
+    * one O(corpus) maintenance shape left. Generations are
+    * canon_url-bucketed+sorted, so the keeper lookup probes them
+    * bucket-pruned ([[urlKeeperProbe]]). Because the state is MERGEABLE
+    * (not disjoint facts like edges), a URL may appear in several live
+    * generations — the serve's merge re-combines them; what the read set
+    * guarantees is that each BATCH PARTIAL is covered exactly once, which
+    * is what keeps n_docs exact.
     */
   def compactUrlState(spark: SparkSession, statePath: String,
       tableBase: String, nBuckets: Int = 32, major: Boolean = false,
       maxGens: Int = 8): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(statePath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val batches = batchIds(fs, s"$statePath/urls")
-    if (batches.isEmpty) return
-    val m = batches.max
-    val allGens = stateGens(spark, s"$statePath/urlsc")
-    val live = liveGens(allGens)
-    val after = live.lastOption.map(_.version).getOrElse(-1L)
-    if (m <= after) return // nothing new since the last generation
-    val isMajor = major || live.isEmpty || live.size + 1 > maxGens
-    val recent = spark.read.parquet(s"$statePath/urls")
-      .filter(col("batch") > after && col("batch") <= m)
-      .select("canon_url", "keeper_id", "n_docs")
-    val newRows =
-      (if (!isMajor) recent
-       else live.map(g =>
-         spark.table(g.table).select("canon_url", "keeper_id", "n_docs"))
-         .foldLeft(recent)(_.unionByName(_)))
-        .groupBy("canon_url")
-        .agg(min("keeper_id").as("keeper_id"), sum("n_docs").as("n_docs"))
-    val tbl = s"${tableBase}_v$m"
-    spark.sql(s"DROP TABLE IF EXISTS $tbl") // a crashed prior attempt
-    newRows.write.mode("overwrite")
-      .bucketBy(nBuckets, "canon_url").sortBy("canon_url")
-      .option("path", s"$statePath/urlsc/v=$m").saveAsTable(tbl)
-    publishGenSentinel(fs, s"$statePath/urlsc", m, tbl, isMajor)
-    if (live.nonEmpty) {
-      val root = new org.apache.hadoop.fs.Path(s"$statePath/urls")
-      if (fs.exists(root)) fs.listStatus(root).foreach { st =>
-        val n = st.getPath.getName
-        if (n.startsWith("batch=") &&
-            n.stripPrefix("batch=").toLong <= after)
-          fs.delete(st.getPath, true)
-      }
-    }
-    val liveSet = live.map(_.version).toSet
-    allGens.filterNot(g => liveSet.contains(g.version)).foreach { g =>
-      spark.sql(s"DROP TABLE IF EXISTS ${g.table}")
-      fs.delete(new org.apache.hadoop.fs.Path(
-        s"$statePath/urlsc/v=${g.version}"), true)
-      fs.delete(new org.apache.hadoop.fs.Path(
-        s"$statePath/urlsc/v=${g.version}.ok"), true)
+    val tier = urlTier(spark, statePath)
+    tier.compact(Seq("urls"), tableBase, major, maxGens) { (m, fold) =>
+      mergeKeepers((tier.recent("urls", KeeperCols, upTo = m).toSeq ++
+          fold.map(keeperGen(spark, _))).reduce(_.unionByName(_)))
+        .write.bucketBy(nBuckets, "canon_url").sortBy("canon_url")
     }
   }
+
+  /** Merge keeper partials that may repeat a canon_url: min keeper, summed
+    * n_docs.
+    */
+  private def mergeKeepers(partials: DataFrame): DataFrame =
+    partials.groupBy("canon_url")
+      .agg(min("keeper_id").as("keeper_id"), sum("n_docs").as("n_docs"))
 
   /** The merged keeper state of a [[urlStateStream]] + [[compactUrlState]]
     * lifecycle: the consistent generation read set ([[liveGens]] — each
@@ -1731,22 +1651,9 @@ object StreamOps {
     */
   private def urlKeeperMerged(spark: SparkSession, statePath: String,
       cut: DataFrame => DataFrame): DataFrame = {
-    val fs = new org.apache.hadoop.fs.Path(statePath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val gens = liveGens(stateGens(spark, s"$statePath/urlsc"))
-    val after = gens.lastOption.map(_.version).getOrElse(-1L)
-    val recent =
-      if (batchIds(fs, s"$statePath/urls").exists(_ > after))
-        Seq(cut(spark.read.parquet(s"$statePath/urls")
-          .filter(col("batch") > after)
-          .select("canon_url", "keeper_id", "n_docs"))
-          .groupBy("canon_url")
-          .agg(min("keeper_id").as("keeper_id"),
-            sum("n_docs").as("n_docs")))
-      else Seq.empty
-    val parts = gens.map(g => cut(
-      spark.table(g.table).select("canon_url", "keeper_id", "n_docs"))) ++
-      recent
+    val tier = urlTier(spark, statePath)
+    val parts = tier.live.map(g => cut(keeperGen(spark, g))) ++
+      tier.recent("urls", KeeperCols).map(r => mergeKeepers(cut(r)))
     require(parts.nonEmpty, s"no URL keeper state at $statePath")
     parts.reduce(mergeKeeperPair)
   }
@@ -2777,8 +2684,8 @@ object StreamOps {
   def continuousIndex(spark: SparkSession, dir: String, indexPath: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
     sink(streamMarketDefinitions(spark, dir), indexPath) { (batch, _) =>
-      val live = new org.apache.hadoop.fs.Path(indexPath)
-      val retired = new org.apache.hadoop.fs.Path(s"${indexPath}_old")
+      val live = new Path(indexPath)
+      val retired = new Path(s"${indexPath}_old")
       val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
       // heal a swap that crashed between retire and publish before reading
       graft.betfair.SnapshotSwap.recover(fs, live, retired)
@@ -2790,7 +2697,7 @@ object StreamOps {
       val merged =
         if (!fs.exists(live)) latest
         else latestPerMarket(spark.read.parquet(indexPath).unionByName(latest))
-      val tmp = new org.apache.hadoop.fs.Path(s"$indexPath.tmp")
+      val tmp = new Path(s"$indexPath.tmp")
       merged.write.mode("overwrite").parquet(tmp.toString)
       graft.betfair.SnapshotSwap.publish(fs, tmp, live, retired)
     }

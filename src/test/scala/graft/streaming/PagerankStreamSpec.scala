@@ -428,4 +428,66 @@ class PagerankStreamSpec extends SparkSpec {
       s"expected the compaction-overrun guard, got: $ex")
     q.stop()
   }
+
+  test("edge compaction retires outdeg partials and outdegc generations one cycle late") {
+    val s = spark
+    import s.implicits._
+    implicit val sqlCtx = s.sqlContext
+    val dir = Files.createTempDirectory("prretire").toString
+    val state = s"$dir/state"
+    val base = "g_pr_retire_spec"
+    (0 to 5).foreach(v => s.sql(s"DROP TABLE IF EXISTS ${base}_v$v"))
+    val docs = (1L to 40L).toDF("doc_id").persist()
+    def batchesOn(side: String): Seq[Long] =
+      new java.io.File(s"$state/$side").listFiles.map(_.getName)
+        .filter(_.startsWith("batch=")).map(_.stripPrefix("batch=").toLong)
+        .toSeq.sorted
+    def sidesOn(): Seq[Seq[Long]] = Seq("edges", "outdeg").map(batchesOn)
+    def genOnDisk(v: Long): Seq[Boolean] =
+      Seq(new java.io.File(s"$state/edgesc/v=$v").exists,
+        new java.io.File(s"$state/edgesc/v=$v.ok").exists,
+        new java.io.File(s"$state/outdegc/v=$v").exists,
+        s.catalog.tableExists(s"${base}_v$v"))
+    val mem = MemoryStream[(Long, Long)]
+    val q = StreamOps.pagerankDeltaStream(s,
+      mem.toDF().toDF("src", "dst"), docs, state)
+    // every batch carries edges no earlier batch had, so each publishes
+    def ingest(b: Int): Unit = {
+      mem.addData((1L to 40L).filter(_ % 6 == b).map(i =>
+        (i, (i + b + 1) % 40 + 1)): _*)
+      q.processAllAvailable()
+    }
+
+    ingest(0); ingest(1)
+    StreamOps.compactPagerankEdges(s, state, base)
+    assert(sidesOn() == Seq(Seq(0L, 1L), Seq(0L, 1L)),
+      "the first generation has no earlier frontier: nothing retires")
+    ingest(2)
+    StreamOps.compactPagerankEdges(s, state, base)
+    assert(sidesOn() == Seq(Seq(2L), Seq(2L)),
+      "major -> minor retires both sides at or below v=1 only")
+    ingest(3)
+    StreamOps.compactPagerankEdges(s, state, base)
+    assert(StreamOps.prEdgeGens(s, state).map(_.major) ==
+      Seq(true, false, false))
+    assert(sidesOn() == Seq(Seq(3L), Seq(3L)),
+      "minor -> minor retires both sides at or below v=2 only")
+
+    // a major supersedes v=1..3; they stay for one cycle
+    ingest(4)
+    StreamOps.compactPagerankEdges(s, state, base, major = true)
+    (1L to 3L).foreach(v => assert(genOnDisk(v).forall(identity),
+      s"generation v=$v must survive the cycle that superseded it"))
+    // the next minor retires edgesc, its sentinel, outdegc and the table
+    ingest(5)
+    StreamOps.compactPagerankEdges(s, state, base)
+    (1L to 3L).foreach(v => assert(!genOnDisk(v).exists(identity),
+      s"superseded generation v=$v must be retired, got ${genOnDisk(v)}"))
+    assert(genOnDisk(4L).forall(identity) && genOnDisk(5L).forall(identity))
+    assert(sidesOn() == Seq(Seq(5L), Seq(5L)))
+    q.stop()
+    docs.unpersist()
+    graft.ops.CacheRegistry.harness.release()
+    (0 to 5).foreach(v => s.sql(s"DROP TABLE IF EXISTS ${base}_v$v"))
+  }
 }

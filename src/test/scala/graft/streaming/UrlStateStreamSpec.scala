@@ -161,4 +161,62 @@ class UrlStateStreamSpec extends SparkSpec {
       s"expected the compaction-overrun guard, got: $ex")
     q.stop()
   }
+
+  test("url compaction retires absorbed batches and superseded generations one cycle late") {
+    val s = spark
+    import s.implicits._
+    implicit val sqlCtx = s.sqlContext
+    val dir = Files.createTempDirectory("urlretire").toString
+    val state = s"$dir/state"
+    val base = "url_retire_spec"
+    (0 to 5).foreach(v => s.sql(s"DROP TABLE IF EXISTS ${base}_v$v"))
+    def batchesOn(): Seq[Long] =
+      new java.io.File(s"$state/urls").listFiles.map(_.getName)
+        .filter(_.startsWith("batch=")).map(_.stripPrefix("batch=").toLong)
+        .toSeq.sorted
+    def genOnDisk(v: Long): Seq[Boolean] =
+      Seq(new java.io.File(s"$state/urlsc/v=$v").exists,
+        new java.io.File(s"$state/urlsc/v=$v.ok").exists,
+        s.catalog.tableExists(s"${base}_v$v"))
+    val mem = MemoryStream[(Long, String)]
+    val q = StreamOps.urlStateStream(s,
+      mem.toDF().toDF("doc_id", "url"), state)
+    def ingest(b: Int): Unit = {
+      mem.addData((0 until 6).map(i =>
+        (b * 100L + i, s"http://h$i.example.com/p/${(b + i) % 4}")): _*)
+      q.processAllAvailable()
+    }
+
+    ingest(0); ingest(1)
+    StreamOps.compactUrlState(s, state, base)
+    assert(batchesOn() == Seq(0L, 1L),
+      "the first generation has no earlier frontier: nothing retires")
+    ingest(2)
+    StreamOps.compactUrlState(s, state, base)
+    assert(batchesOn() == Seq(2L),
+      "major -> minor retires the partitions at or below v=1 only")
+    ingest(3)
+    StreamOps.compactUrlState(s, state, base)
+    assert(StreamOps.stateGens(s, s"$state/urlsc").map(_.major) ==
+      Seq(true, false, false))
+    assert(batchesOn() == Seq(3L),
+      "minor -> minor retires the partitions at or below v=2 only")
+
+    // a major supersedes v=1..3; they stay for one cycle
+    ingest(4)
+    StreamOps.compactUrlState(s, state, base, major = true)
+    assert(batchesOn() == Seq(4L))
+    (1L to 3L).foreach(v => assert(genOnDisk(v) == Seq(true, true, true),
+      s"generation v=$v must survive the cycle that superseded it"))
+    // the next minor retires them: data dir, sentinel and catalog table
+    ingest(5)
+    StreamOps.compactUrlState(s, state, base)
+    (1L to 3L).foreach(v => assert(genOnDisk(v) == Seq(false, false, false),
+      s"superseded generation v=$v must be retired, got ${genOnDisk(v)}"))
+    assert(genOnDisk(4L) == Seq(true, true, true) &&
+      genOnDisk(5L) == Seq(true, true, true))
+    assert(batchesOn() == Seq(5L))
+    q.stop()
+    (0 to 5).foreach(v => s.sql(s"DROP TABLE IF EXISTS ${base}_v$v"))
+  }
 }
