@@ -47,9 +47,9 @@ class BetfairDatabase(spark: SparkSession, databaseDir: String) {
         s"Index already exists in '$databaseDir'.") // IndexExistsError
       fs.delete(new Path(indexPath), true)
     }
+    // the build emits one row per (metadata path, data path) already
     val result = IndexPipeline.build(spark, databaseDir)
-    try writeSnapshot(result.index
-      .dropDuplicates("marketMetadataFilePath", "marketDataFilePath"))
+    try writeSnapshot(result.index)
     finally result.index.unpersist()
     result.counters
   }
@@ -162,7 +162,7 @@ class BetfairDatabase(spark: SparkSession, databaseDir: String) {
     * (import pattern) and duplicate policy. Returns the full audit counters
     * (adds/updates/skips split, reference processor.py:47-53) — source-scan
     * counts (totalMarkets, corrupt, missing-data/metadata) come from the
-    * source build, the action split from the checkpointed plan.
+    * source build, the action split is observed on the plan checkpoint write.
     *
     * Dataflow, in three strictly ordered phases:
     *   1. RESOLVE (pure reads): build the source-market DataFrame (same
@@ -250,9 +250,14 @@ class BetfairDatabase(spark: SparkSession, databaseDir: String) {
           col("_processData"))): _*)
 
     // checkpoint: one row per source market — small next to the data files.
-    // Nothing reads the source build after it, so its cache is freed here
+    // Nothing reads the source build after it, so its cache is freed here.
+    // The action split is observed on this write, not counted by a job
     val planPath = s"$databaseDir/.graft_insert_plan_tmp"
-    try resolved.write.mode("overwrite").parquet(planPath)
+    val split = Observation()
+    def tally(action: String) = count(when(col("_action") === action, 1))
+      .as(action)
+    try resolved.observe(split, tally("INSERT"), tally("UPDATE"), tally("SKIP"))
+      .write.mode("overwrite").parquet(planPath)
     finally built.index.unpersist()
     val plan = spark.read.parquet(planPath)
 
@@ -306,12 +311,12 @@ class BetfairDatabase(spark: SparkSession, databaseDir: String) {
         Seq("marketMetadataFilePath"), "left_anti")
       .unionByName(newRows)
       .dropDuplicates("marketMetadataFilePath", "marketDataFilePath")
-    // one pass over the (tiny, one-row-per-market) plan for the action split
-    val actionCounts = plan.groupBy("_action").count().collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    val updated = actionCounts.getOrElse("UPDATE", 0L)
-    val skipped = actionCounts.getOrElse("SKIP", 0L)
-    val inserted = actionCounts.getOrElse("INSERT", 0L) + updated
+    // the optimizer prunes the metrics of an empty plan with the plan
+    val actionCounts = split.get.view.mapValues(_.asInstanceOf[Long]).toMap
+      .withDefaultValue(0L)
+    val updated = actionCounts("UPDATE")
+    val skipped = actionCounts("SKIP")
+    val inserted = actionCounts("INSERT") + updated
     writeSnapshot(merged)
     fs.delete(new Path(planPath), true)
     built.counters.copy(rowsInserted = inserted, marketsUpdated = updated,

@@ -21,7 +21,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * (one row per file); all heavy I/O stays distributed.
   *
   * The walk calls `listStatus` once per directory, as Spark's own
-  * `InMemoryFileIndex` does for the JSON scans of the same tree. Do not
+  * `InMemoryFileIndex` does. Do not
   * replace it with `fs.listFiles(dir, true)`: that returns
   * `LocatedFileStatus`, whose constructor copies permission, owner and
   * group, and on file:// without libhadoop `RawLocalFileSystem` fetches
@@ -67,9 +67,8 @@ object Discover {
   /** Every classified file among `level` and, recursively, under the
     * directories in it. PathCanon: decoded OS-style path on file:// (scheme
     * kept when the default FS is remote), scheme-qualified elsewhere — the
-    * SAME canonical form input_file_name() is mapped to in IndexPipeline,
-    * so the metadata join key always matches. Shared by the driver and the
-    * executor listing.
+    * index stores these paths and IndexPipeline pairs files by them. Shared
+    * by the driver and the executor listing.
     */
   private def listTree(fs: FileSystem, level: Seq[FileStatus], strip: Boolean)
       : Seq[Entry] = {

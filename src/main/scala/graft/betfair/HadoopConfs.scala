@@ -33,13 +33,12 @@ object SerializableHadoopConf {
 }
 
 /** Canonical file-path form used as the pairing key across the whole index
-  * pipeline. Discover listings and `input_file_name()` must canonicalize the
-  * SAME way or the metadata join silently produces an empty index:
-  *   - `input_file_name()` returns a percent-encoded URI (`file:///a%20b`),
-  *   - Hadoop listings return `Path`s whose string form varies by scheme.
-  * Canonical form: decoded URI path for the local `file` scheme (matches
-  * reference-style OS paths, e.g. `/data/1.23`), full scheme-qualified
-  * `Path.toString` for everything else (`hdfs://nn/data/1.23`, `s3a://...`).
+  * pipeline and stored in the index. Hadoop listings return `Path`s whose
+  * string form varies by scheme, and URI strings are percent-encoded
+  * (`file:///a%20b`); both map to one form: decoded URI path for the local
+  * `file` scheme (matches reference-style OS paths, e.g. `/data/1.23`), full
+  * scheme-qualified `Path.toString` for everything else
+  * (`hdfs://nn/data/1.23`, `s3a://...`).
   */
 object PathCanon {
 
@@ -49,7 +48,7 @@ object PathCanon {
     * `new Path(...).getFileSystem` against the default FS and point
     * clean()/insert() at the wrong filesystem — there, `file://` paths must
     * keep their scheme (decoded, so the pairing key still matches across
-    * listing and `input_file_name()` forms). Decided once per pipeline from
+    * listing and URI forms). Decided once per pipeline from
     * the driver conf and captured into executor closures as a boolean.
     */
   def stripFileScheme(conf: org.apache.hadoop.conf.Configuration): Boolean = {
@@ -66,9 +65,7 @@ object PathCanon {
     } else p.toString
   }
 
-  /** Canonicalize a (possibly percent-encoded) URI string, e.g. the output
-    * of `input_file_name()`.
-    */
+  /** Canonicalize a (possibly percent-encoded) URI string. */
   def canonicalUri(s: String): String = canonicalUri(s, stripFile = true)
 
   def canonicalUri(s: String, stripFile: Boolean): String =

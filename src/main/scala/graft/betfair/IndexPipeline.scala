@@ -1,13 +1,33 @@
 package graft.betfair
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.UserDefinedFunction
+import java.nio.charset.StandardCharsets
+
+import scala.jdk.CollectionConverters._
+
+import com.fasterxml.jackson.databind.{JsonMappingException, ObjectMapper}
+import org.apache.commons.io.IOUtils
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.expressions.{UserDefinedFunction, Window}
 import org.apache.spark.sql.functions._
 import Schemas._
 
-/** The index-build dataflow (SURVEY.md §3.2): discover → pair → parse →
-  * flatten → derive → racing join → 37-column projection. One lazy plan; the
-  * only shuffle is the (broadcast) racing join and the final write.
+/** The index-build dataflow (SURVEY.md §3.2): one plan over the [[Discover]]
+  * listing, with one shuffle before the racing window.
+  *   1. Classify: one narrow pass tags every listed file with its pairing
+  *      key. Data and per-market metadata files are keyed by stem; each bulk
+  *      `metadata.json` is read once and split into its elements, keyed
+  *      `dir/marketId` (A3).
+  *   2. Pair: one hash shuffle on the key brings a key's files together and
+  *      applies the reference's pairing rules ([[pair]]).
+  *   3. Read: in the same tasks, each paired metadata file is read or the
+  *      definition extracted from the data file (A4); one `from_json` then
+  *      parses them all (A5-A9).
+  * Then flatten → derive → racing window → 37-column projection. The
+  * action that fills the index cache is the build's only action: it counts
+  * the rows, and one [[Observation]] on the resolved pairs takes the other
+  * counters.
   */
 object IndexPipeline {
 
@@ -38,52 +58,111 @@ object IndexPipeline {
   private val raceMetaUdf: UserDefinedFunction =
     udf((name: String) => Functions.extractRaceMetadata(name))
 
-  /** input_file_name() → the pipeline's canonical path form (decodes the
-    * percent-encoded URI and matches Discover's key — see [[PathCanon]];
-    * `strip` is decided from the driver conf and captured as a boolean).
+  /** One listed file's claim on a pairing key. kind: data | metadata |
+    * bulk (one element of a bulk file: `json` is its text, `ord` its
+    * position in the file) | bulkCorrupt (an unparseable bulk file, keyed
+    * by its own path).
     */
-  private def canonPathUdf(strip: Boolean): UserDefinedFunction =
-    udf((s: String) => PathCanon.canonicalUri(s, strip))
+  private[betfair] case class Keyed(key: String, kind: String, path: String,
+      ord: Int, json: String)
 
-  /** Read the metadata JSON files whose names match `glob` — per-market
-    * catalogue or definition files (`1.*.json`, one object per file) or
-    * bulk `metadata.json` files (JSON arrays of metadata dicts; A3).
-    * multiLine tolerates pretty-printing, PERMISSIVE routes corrupt bodies
-    * to _corrupt_record (reference A22).
-    *
-    * The file set comes from a recursive glob scan of the tree, NOT a
-    * driver-collected path list — a 100 TB archive has millions of metadata
-    * files, and both the driver array and the serialized path list in the
-    * scan would be the bottleneck. Spark parallelizes the listing above
-    * `parallelPartitionDiscovery.threshold` dirs; the downstream inner join
-    * on the canonical path keeps exactly the paired markets.
+  /** One pair of a market's files, or one counted outcome. step, as
+    * [[pair]] emits it: read (a per-market metadata file) | parse (metadata
+    * text in `json`: a bulk element) | extract (the definition is in the
+    * data file) | withoutData | corrupt; as [[resolve]] leaves it: parse |
+    * def (an extracted definition) | withoutData | withoutMeta | corrupt.
+    * `total` marks one row per market stem.
     */
-  private def readMetadata(spark: SparkSession, dir: String, glob: String)
-      : DataFrame =
-    spark.read
-      .schema(metadataSchema)
-      .option("multiLine", "true")
-      .option("mode", "PERMISSIVE")
-      .option("columnNameOfCorruptRecord", "_corrupt_record")
-      .option("recursiveFileLookup", "true")
-      .option("pathGlobFilter", glob)
-      .json(dir)
-      .withColumn("metaPath",
-        canonPathUdf(PathCanon.stripFileScheme(
-          spark.sparkContext.hadoopConfiguration))(input_file_name()))
+  private[betfair] case class Step(step: String, metaPath: String,
+      dataPath: String, stem: String, json: String, total: Boolean)
 
-  /** Parse extracted definition JSON strings (from MarketDefExtract). */
-  private def parseExtracted(extracted: DataFrame): DataFrame = {
-    val parsed = extracted
-      .filter(col("outcome") === "ok")
-      .withColumn("m", from_json(col("json"),
-        metadataSchema.asInstanceOf[org.apache.spark.sql.types.StructType]))
-    parsed.select(
-      (metadataSchema.fieldNames.filterNot(_ == "_corrupt_record")
-        .map(f => col(s"m.$f").as(f)) :+
-        lit(null).cast("string").as("_corrupt_record") :+
-        col("metaPath") :+ col("stem").as("_stem") :+
-        col("dataPath").as("_dataPath")): _*)
+  private def readText(conf: Configuration, path: String): String = {
+    val p = new Path(path)
+    val in = p.getFileSystem(conf).open(p)
+    try new String(IOUtils.toByteArray(in), StandardCharsets.UTF_8)
+    finally in.close()
+  }
+
+  /** The elements of a bulk metadata file (A3): an array of metadata dicts,
+    * or one dict; an empty file has none. Each element with a `marketId`
+    * is keyed `dir/marketId` and keeps its JSON text for `from_json`.
+    * Throws on a file that does not parse, as the reference's json.load.
+    */
+  private def bulkElements(mapper: ObjectMapper, path: String, text: String)
+      : Seq[Keyed] = {
+    val root = mapper.readTree(text)
+    val elements =
+      if (root.isArray) root.elements.asScala.toSeq
+      else if (root.isObject) Seq(root)
+      else if (root.isMissingNode) Nil
+      else throw new JsonMappingException(null, s"bulk metadata root $root")
+    val prefix = path.stripSuffix("metadata.json")
+    elements.zipWithIndex.collect {
+      case (e, ord) if e.hasNonNull("marketId") &&
+          e.get("marketId").isValueNode =>
+        Keyed(prefix + e.get("marketId").asText, "bulk", path, ord,
+          mapper.writeValueAsString(e))
+    }
+  }
+
+  /** Stage 1 for one listed file. */
+  private def classify(conf: Configuration, mapper: ObjectMapper,
+      e: Discover.Entry): Seq[Keyed] =
+    if (e.kind != "bulk") Seq(Keyed(e.stem, e.kind, e.path, 0, null))
+    else
+      try bulkElements(mapper, e.path, readText(conf, e.path))
+      catch {
+        case _: java.io.IOException =>
+          Seq(Keyed(e.path, "bulkCorrupt", e.path, 0, null))
+      }
+
+  /** Stage 2: the reference's pairing rules over one key's files (A2, A3).
+    * A bulk element (the last one, when its file lists the id twice, as the
+    * reference's dict keeps it) takes every data file of its key and
+    * shadows the per-market file there, which then counts as a market
+    * without data. Otherwise a per-market file pairs with each data file of
+    * its stem, or is a market without data; a data file with no metadata
+    * gets its definition extracted. The first row of a key with a data or
+    * per-market file counts the market in `totalMarkets`.
+    */
+  private def pair(key: String, files: Seq[Keyed]): Seq[Step] = {
+    val data = files.filter(_.kind == "data").map(_.path).sorted
+    val meta = files.find(_.kind == "metadata").map(_.path)
+    val bulk = files.filter(_.kind == "bulk").maxByOption(_.ord)
+    def step(s: String, metaPath: String, dataPath: String,
+        json: String = null) = Step(s, metaPath, dataPath, key, json, false)
+    val market = (bulk, meta) match {
+      case (Some(b), _) if data.nonEmpty =>
+        data.map(step("parse", b.path, _, b.json)) ++
+          meta.map(step("withoutData", _, null))
+      case (_, Some(m)) if data.nonEmpty => data.map(step("read", m, _))
+      case (_, Some(m)) => Seq(step("withoutData", m, null))
+      case _ => data.map(step("extract", key + ".json", _))
+    }
+    val corruptBulk = files.filter(_.kind == "bulkCorrupt")
+      .map(f => step("corrupt", f.path, null))
+    market.take(1).map(_.copy(total = true)) ++ market.drop(1) ++ corruptBulk
+  }
+
+  /** Stage 3 for one step: read the per-market file (an empty one is a
+    * parse error in the reference, so corrupt) or extract the definition.
+    */
+  private def resolve(conf: Configuration, mapper: ObjectMapper, s: Step,
+      writeMetadataFiles: Boolean): Step = s.step match {
+    case "read" =>
+      val text = try readText(conf, s.metaPath)
+      catch { case _: java.io.IOException => "" }
+      if (text.trim.isEmpty) s.copy(step = "corrupt")
+      else s.copy(step = "parse", json = text)
+    case "extract" =>
+      val x = MarketDefExtract.extractFile(conf, mapper, s.stem, s.dataPath,
+        writeMetadataFiles)
+      x.outcome match {
+        case "ok" => s.copy(step = "def", json = x.json)
+        case "missing" => s.copy(step = "withoutMeta")
+        case _ => s.copy(step = "corrupt")
+      }
+    case _ => s
   }
 
   /** Build the full index DataFrame for a source directory. Returns the
@@ -93,104 +172,53 @@ object IndexPipeline {
       writeMetadataFiles: Boolean = true): BuildResult = {
     import spark.implicits._
     Functions.register(spark)
-    // the recursive JSON scans below hit Spark's session FileStatusCache
-    // (no TTL): a rebuild after extraction wrote new metadata files would
-    // otherwise see the previous listing
-    spark.catalog.refreshByPath(sourceDir)
+    val sconf = SerializableHadoopConf(spark)
+    val keyed = Discover.scan(spark, sourceDir).as[Discover.Entry]
+      .mapPartitions { it =>
+        val (conf, mapper) = (sconf.value, new ObjectMapper())
+        it.flatMap(classify(conf, mapper, _))
+      }
+    // an explicit partition count: AQE would coalesce the few small rows
+    // of a key shuffle into one task and run every file read in it
+    val steps = keyed.repartition(spark.sparkContext.defaultParallelism,
+        col("key"))
+      .groupBy("key")
+      .agg(collect_list(struct(keyed.columns.toSeq.map(col): _*)))
+      .as[(String, Seq[Keyed])]
+      .mapPartitions { it =>
+        val (conf, mapper) = (sconf.value, new ObjectMapper())
+        it.flatMap { case (key, files) => pair(key, files) }
+          .map(resolve(conf, mapper, _, writeMetadataFiles))
+      }
+    val parsed = steps.withColumn("m", from_json(col("json"), metadataSchema))
+    val step = col("step")
+    // an extracted definition keeps whatever of it fits the schema
+    val corrupt = step === "corrupt" || (step === "parse" &&
+      (col("m").isNull || col("m._corrupt_record").isNotNull))
+    val good = step.isin("parse", "def") && !corrupt
 
-    val entries = Discover.scan(spark, sourceDir).cache()
-    val meta = entries.filter(col("kind") === "metadata")
-      .select(col("stem"), col("path").as("metaPath"))
-    val data = entries.filter(col("kind") === "data")
-      .select(col("stem"), col("path").as("dataPath"), col("dir"))
-
-    // ---- A3 bulk metadata: explode arrays, pair within the same directory,
-    // take precedence over per-market files (consume the data file).
-    // (.cache(): Spark disallows querying only _corrupt_record off a raw
-    // JSON scan; the parsed result must be materialized first.)
-    val bulkRaw = readMetadata(spark, sourceDir, "metadata.json").cache()
-    val bulkValid = bulkRaw
-      .filter(col("_corrupt_record").isNull && col("marketId").isNotNull)
-      // reference: file_cache keyed by marketId — last entry per id wins
-      .withColumn("_dir", regexp_replace(col("metaPath"), "/metadata\\.json$", ""))
-      .withColumn("_stemWanted", concat(col("_dir"), lit("/"), col("marketId")))
-      .dropDuplicates("_stemWanted")
-    // bulkPaired and dataFree feed several counters and the index: cached,
-    // so each pairing join runs once per build rather than once per use
-    val bulkPaired = bulkValid.join(data,
-        bulkValid("_stemWanted") === data("stem"))
-      .withColumn("_stem", col("stem"))
-      .withColumn("_dataPath", col("dataPath"))
-      .drop("stem", "dataPath", "dir", "_dir", "_stemWanted")
-      .cache()
-    val consumedStems = bulkPaired.select(col("_stem").as("stem")).distinct()
-
-    // ---- data/metadata pairing after bulk consumption (A2)
-    val dataFree = data.join(consumedStems, Seq("stem"), "left_anti").cache()
-    val pairedMeta = meta.join(dataFree, Seq("stem"))
-    val metaWithoutData = meta.join(dataFree, Seq("stem"), "left_anti")
-
-    // ---- A4: definitions for data files with no per-market metadata
-    val dataNoMeta = dataFree.join(meta, Seq("stem"), "left_anti")
-      .select(col("stem"), col("dataPath")).as[(String, String)]
-    val extracted = MarketDefExtract
-      .extract(spark, dataNoMeta, writeMetadataFiles).cache()
-    val extractedDefs = parseExtracted(extracted)
-
-    // ---- per-market metadata reads (A5-A9): recursive glob scan, no
-    // driver-side path collection; the inner join below narrows to paired
-    val perMarketRaw = readMetadata(spark, sourceDir, "1.*.json").cache()
-    val pathPairs = pairedMeta
-      .select(col("metaPath"), col("stem").as("_stem"),
-        col("dataPath").as("_dataPath"))
-    val perMarket = perMarketRaw.join(pathPairs, Seq("metaPath"))
-
-    val unified = perMarket.unionByName(bulkPaired)
-      .unionByName(extractedDefs)
-
-    val corrupt = unified.filter(col("_corrupt_record").isNotNull)
-    val good = unified.filter(col("_corrupt_record").isNull)
-
-    val flat = flatten(good)
-    val withRacing = racingJoin(flat)
-    // cache: the caller both counts (counters, invariant) and writes the
-    // index; without this the whole parse+join pipeline runs twice
-    val index = project(withRacing).cache()
-
-    // ---- counters (A20): total = |data ∪ metadata| stems before bulk
-    // consumption (reference: betfairdatabase/processor.py:147-149).
-    // All of them come from ONE action: each counter's rows are tagged with
-    // its name, and one groupBy tallies the union.
-    // This call owns the six intermediate caches and frees them once the
-    // counters are taken; by then the index sits in its own cache, which
-    // the caller owns (or this call frees, if counting fails).
+    // counters (A20): observed on the only action, the one that fills the
+    // index cache; total = |data ∪ metadata| stems before bulk consumption
+    // (reference: betfairdatabase/processor.py:147-149)
+    val observed = Observation()
+    def tally(c: Column, name: String) = count(when(c, 1)).as(name)
+    val pairs = parsed.observe(observed, tally(col("total"), "total"),
+      tally(step === "withoutData", "withoutData"),
+      tally(step === "withoutMeta", "withoutMeta"),
+      tally(corrupt, "corrupt"))
+      .filter(good).select(col("m.*"), col("metaPath"), col("dataPath"))
+    val index = project(racingJoin(flatten(pairs))).cache()
     val counters = try {
-      def tag(df: DataFrame, name: String): DataFrame =
-        df.select(lit(name).as("counter"))
-      // a paired metadata file that produced NO parsed row (empty/whitespace
-      // file — nothing for PERMISSIVE mode to route to _corrupt_record) is a
-      // parse error in the reference (json.load raises; "Error parsing …")
-      // — count it corrupt or the market vanishes from the audit entirely
-      val unreadableMeta = pathPairs
-        .join(perMarketRaw.select("metaPath"), Seq("metaPath"), "left_anti")
-      val tally = Seq(
-        tag(entries.filter(col("kind").isin("metadata", "data"))
-          .select("stem").distinct(), "total"),
-        tag(metaWithoutData, "withoutData"),
-        tag(extracted.filter(col("outcome") === "missing"), "withoutMeta"),
-        tag(corrupt, "corrupt"),
-        tag(extracted.filter(col("outcome") === "corrupt"), "corrupt"),
-        tag(bulkRaw.filter(col("_corrupt_record").isNotNull), "corrupt"),
-        tag(unreadableMeta, "corrupt"),
-        tag(index, "rows")
-      ).reduce(_ unionByName _).groupBy("counter").count().collect()
-        .map(r => r.getString(0) -> r.getLong(1)).toMap.withDefaultValue(0L)
-      Counters(tally("total"), tally("withoutData"), tally("withoutMeta"),
-        tally("corrupt"), tally("rows"))
+      val rows = index.count()
+      val n = observed.get.view.mapValues(_.asInstanceOf[Long]).toMap
+      // the optimizer prunes the metrics of an empty listing with the plan
+      require(n.nonEmpty || rows == 0, "build: no counters observed")
+      def get(name: String) = n.getOrElse(name, 0L)
+      Counters(get("total"), get("withoutData"), get("withoutMeta"),
+        get("corrupt"), rows)
     } catch {
       case e: Throwable => index.unpersist(); throw e
-    } finally Seq(entries, bulkRaw, bulkPaired, dataFree, extracted,
-        perMarketRaw).foreach(_.unpersist())
+    }
     BuildResult(index, counters)
   }
 
@@ -266,40 +294,43 @@ object IndexPipeline {
         localTimeUdf(marketSettledTime, eventTimezone))
         .as("localMarketSettledTime"),
       col("metaPath").as("marketMetadataFilePath"),
-      col("_dataPath").as("marketDataFilePath"))
+      col("dataPath").as("marketDataFilePath"))
   }
 
   /** A10/A11: race metadata from WIN-market names, propagated to all markets
-    * of the same race via broadcast left join on the race key
+    * of the same race by a window over the race key
     * (eventTypeId,countryCode,venue,marketTime — reference
-    * betfairdatabase/racing.py:86-113).
+    * betfairdatabase/racing.py:86-113). A window, not a self-join: a join
+    * would run the uncached upstream — the file reads and the extraction,
+    * which writes files — twice.
     */
   private[betfair] def racingJoin(flat: DataFrame): DataFrame = {
     val racing = col("eventTypeId").isin(RacingEventTypeIds: _*)
     val keyValid = col("eventTypeId").isNotNull &&
       col("eventCountryCode").isNotNull && col("eventVenue").isNotNull &&
       col("marketStartTime").isNotNull
-    val withKey = flat.withColumn("_raceKey",
-      when(racing && keyValid,
-        concat_ws(",", col("eventTypeId"), col("eventCountryCode"),
-          col("eventVenue"), col("marketStartTime"))))
-    val winSide = withKey
-      .filter(col("_raceKey").isNotNull && col("marketType") === "WIN" &&
-        col("marketName").isNotNull)
-      .withColumn("_rm", raceMetaUdf(col("marketName")))
-      .groupBy(col("_raceKey").as("_winKey"))
-      // deterministic last-writer (reference dict is insertion-order-last)
-      .agg(max_by(col("_rm"), col("marketMetadataFilePath")).as("_rm"))
-    withKey.join(broadcast(winSide),
-        withKey("_raceKey") === winSide("_winKey"), "left_outer")
-      .withColumn("raceId", when(col("_winKey").isNotNull, col("_raceKey")))
-      .withColumn("raceTypeFromName",
-        when(col("_winKey").isNotNull, col("_rm._1")))
-      .withColumn("raceDistanceMeters",
-        when(col("_winKey").isNotNull, col("_rm._2")))
-      .withColumn("raceDistanceFurlongs",
-        when(col("_winKey").isNotNull, col("_rm._3")))
-      .drop("_raceKey", "_winKey", "_rm")
+    val raceKey = col("_raceKey")
+    val win = raceKey.isNotNull && col("marketType") === "WIN" &&
+      col("marketName").isNotNull
+    // a market outside any race is a group of its own, so the non-racing
+    // majority spreads over the partitions instead of one null-key group
+    val race = Window.partitionBy(raceKey,
+      when(raceKey.isNull, col("marketDataFilePath")))
+    flat.withColumn("_raceKey",
+        when(racing && keyValid,
+          concat_ws(",", col("eventTypeId"), col("eventCountryCode"),
+            col("eventVenue"), col("marketStartTime"))))
+      // deterministic last-writer (reference dict is insertion-order-last);
+      // max_by skips the null orderings of non-WIN rows, so _rm is non-null
+      // exactly when the race has a WIN market (the UDF returns a struct
+      // for every name)
+      .withColumn("_rm", max_by(when(win, raceMetaUdf(col("marketName"))),
+        when(win, col("marketMetadataFilePath"))).over(race))
+      .withColumn("raceId", when(col("_rm").isNotNull, raceKey))
+      .withColumn("raceTypeFromName", col("_rm._1"))
+      .withColumn("raceDistanceMeters", col("_rm._2"))
+      .withColumn("raceDistanceFurlongs", col("_rm._3"))
+      .drop("_raceKey", "_rm")
   }
 
   /** A12: the fixed 37-column contract projection, in order. */
