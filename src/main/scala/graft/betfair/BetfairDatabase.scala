@@ -65,12 +65,14 @@ class BetfairDatabase(spark: SparkSession, databaseDir: String) {
     * betfairdatabase/database.py:119-157). The where string is Spark SQL,
     * which covers the reference's documented SQLite surface (=, ==, AND/OR,
     * IN, BETWEEN, IS NULL, true/false literals, time()/strftime() via the
-    * registered compat UDFs).
+    * registered compat UDFs, registered once per session).
     */
   def select(columns: Seq[String] = null, where: String = null,
       limit: Int = -1): DataFrame = {
-    graft.fn.Compat.register(spark)
-    Functions.register(spark)
+    if (!spark.catalog.functionExists("sqlite_time"))
+      graft.fn.Compat.register(spark)
+    if (!spark.catalog.functionExists("bf_race_meta"))
+      Functions.register(spark)
     var df = indexDF
     if (where != null) df = df.where(expr(where))
     if (columns != null) df = df.select(columns.map(col): _*)

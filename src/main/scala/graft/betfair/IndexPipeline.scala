@@ -171,7 +171,6 @@ object IndexPipeline {
   def build(spark: SparkSession, sourceDir: String,
       writeMetadataFiles: Boolean = true): BuildResult = {
     import spark.implicits._
-    Functions.register(spark)
     val sconf = SerializableHadoopConf(spark)
     val keyed = Discover.scan(spark, sourceDir).as[Discover.Entry]
       .mapPartitions { it =>

@@ -1155,48 +1155,16 @@ object Multimodal {
     * composition idea ACROSS modalities: one per-doc gate combining the
     * text-exact keeper (d24 semantics — min doc_id per canonical-text
     * fingerprint, null-safe like d96), the image-cluster representative
-    * (d105 — unclustered images are their own representative), and the
-    * canonical-URL keeper (d93). A training pipeline drops a document
-    * when ANY modality says it is a duplicate of something kept — this
-    * is that verdict, oracle-checked by composing the three
+    * (d98 pairs → CC, the d105 labeling — unclustered images are their
+    * own representative), and the canonical-URL keeper (d93). A training
+    * pipeline drops a document when ANY modality says it is a duplicate
+    * of something kept — this is that verdict, composed by
+    * [[composedGate]] and oracle-checked by composing the three
     * sub-oracles.
-    *
-    * Scale: three verdict tables, each the proven plan of its family
-    * (one fp groupBy, the d98+CC image path, the canon_url groupBy),
-    * joined back on doc_id — no new join shapes, no new exchanges
-    * beyond the doc_id-keyed composition joins.
     */
-  def d106MultimodalDedup(s: SparkSession, d: String): DataFrame = {
-    import graft.ops.{CacheRegistry, Par, TextOps}
-    // the image branch runs an eager CC fixpoint (several small jobs)
-    // during construction; the text and URL verdicts are independent
-    // inputs of the composition join that used to execute sequentially
-    // INSIDE the final action after the fixpoint had finished. Same
-    // overlap as d118 (guide §2.6): run the fixpoint on one driver
-    // thread, persist + prime the two verdicts on two more, so their
-    // cost hides in the fixpoint's round tails.
-    val Seq(imgLabels, textV, urlV) = Par.run[DataFrame](s)(
-      () => d105ImageClusters(s, d).select("doc_id", "component"),
-      () => {
-        val v = CacheRegistry.harness.add(textExactVerdict(s, d).persist())
-        v.count(); v
-      },
-      () => {
-        val v = CacheRegistry.harness.add(
-          TextOps.d93UrlDedup(s, d)
-            .select(col("doc_id"), col("keeper").as("keep_url")).persist())
-        v.count(); v
-      })
-    textV.join(urlV, Seq("doc_id"))
-      .join(imgLabels, Seq("doc_id"), "left")
-      .select(col("doc_id"), col("keep_text"),
-        (col("component").isNull || col("component") === col("doc_id"))
-          .as("keep_image"),
-        col("keep_url"))
-      .withColumn("kept",
-        col("keep_text") && col("keep_image") && col("keep_url"))
-      .orderBy("doc_id")
-  }
+  def d106MultimodalDedup(s: SparkSession, d: String): DataFrame =
+    composedGate(s, textExactVerdict(s, d), urlVerdict(s, d),
+      Seq("image" -> d98ImageNearDup(s, d)))
 
   /** The d24 canonical-text exact-dup keeper verdict, shared by d106 and
     * d118. Null-safe fp equality: md5(null text) is a null fp; `<=>`
@@ -1217,67 +1185,95 @@ object Multimodal {
       .select(col("doc_id"), (col("doc_id") === col("tkeeper")).as("keep_text"))
   }
 
-  /** Full five-modality composed gate — the d118 query and the breadth
-    * capstone: d106's composition widened to EVERY modality the engine
-    * dedups. One per-doc verdict = text-exact keeper ∧ image-cluster
-    * representative (d98 pairs → CC) ∧ audio-cluster representative
-    * (d102 pairs → CC) ∧ video-cluster representative (d103 pairs → CC)
-    * ∧ canonical-URL keeper (d93) — "drop when ANY modality says this is
-    * a duplicate of something kept", the single gate a multimodal
-    * training pipeline actually runs before packing. Oracle composes the
-    * five sub-oracles (three recursive-CTE reachability chains + the
-    * null-safe text keeper + the URL keeper).
-    *
-    * Scale: no new join shapes — five proven verdict plans (each its
-    * family's audited plan) composed on doc_id; the three cluster tables
-    * carry one row per CLUSTERED doc only, so the composition joins are
-    * doc_id-keyed against sub-corpus-sized sides.
+  /** The d93 canonical-URL keeper verdict, shared by d106 and d118. */
+  private def urlVerdict(s: SparkSession, d: String): DataFrame =
+    graft.ops.TextOps.d93UrlDedup(s, d)
+      .select(col("doc_id"), col("keeper").as("keep_url"))
+
+  /** Connected components of several modalities' pair sets in ONE
+    * fixpoint. Every endpoint is tagged `bigint(doc_id) · k + m` (k
+    * modalities, m the modality's index in `pairs`), the tagged edge lists
+    * are unioned, and one [[graft.ops.TextOps.connectedComponents]] runs
+    * over them: no edge joins two tags, so no component crosses
+    * modalities, and the tag is monotone within a modality, so each
+    * component's min label is its tagged min doc_id. The labels are
+    * untagged (`m = pmod(key, k)`, `doc_id = (key − m) div k`, exact for
+    * negative ids too) and pivoted into one row per doc clustered in any
+    * modality: `(doc_id, <name>comp…)`, null where the doc has no pair in
+    * that modality.
     */
-  def d118FullMultimodalGate(s: SparkSession, d: String): DataFrame = {
-    import graft.ops.TextOps
-    def rep(pairs: DataFrame, name: String): DataFrame =
-      TextOps.connectedComponents(pairs.select(col("d1"), col("d2")))
-        .select(col("doc_id"), col("component").as(name))
-    def keeperOf(c: String): org.apache.spark.sql.Column =
-      col(c).isNull || col(c) === col("doc_id")
-    // the three modality branches each run an eager CC fixpoint (several
-    // small jobs); they are independent, so overlap them from driver
-    // threads (guide §2.6 — the result labelings are scheduling-invariant,
-    // and the composed output is oracle-gated). The text and URL verdicts
-    // are equally independent inputs of the final composition join — they
-    // used to execute sequentially INSIDE the final action after every
-    // branch had finished, so they are persisted and primed as two more
-    // branches, hiding their cost in the fixpoints' round tails.
+  private[graft] def modalityComponents(pairs: Seq[(String, DataFrame)])
+      : DataFrame = {
+    val k = pairs.size
+    def tag(c: String, m: Int): Column = col(c).cast("long") * k + m
+    val edges = pairs.zipWithIndex.map { case ((_, p), m) =>
+      p.select(tag("d1", m).as("d1"), tag("d2", m).as("d2"))
+    }.reduce(_ union _)
+    def untag(c: String): Column = expr(s"($c - m) div $k")
+    val comps = pairs.zipWithIndex.map { case ((n, _), m) =>
+      max(when(col("m") === m, untag("component"))).as(s"${n}comp")
+    }
+    graft.ops.TextOps.connectedComponents(edges)
+      .withColumn("m", pmod(col("doc_id"), lit(k.toLong)))
+      .groupBy(untag("doc_id").as("doc_id"))
+      .agg(comps.head, comps.tail: _*)
+  }
+
+  /** The composed multimodal gate shared by d106, d118 and d119: per doc,
+    * keep_text ∧ keep_<name>… ∧ keep_url, where a doc keeps modality
+    * <name> when it is unclustered there or its component's
+    * representative (min doc_id). `textV` is (doc_id, keep_text), `urlV`
+    * (doc_id, keep_url), `pairs` each modality's (d1, d2) edges, fused
+    * into one fixpoint by [[modalityComponents]].
+    *
+    * Two overlaps on driver threads ([[graft.ops.Par]], guide §2.6):
+    *  1. each modality's pair set is persisted and primed on its own
+    *     thread — they are independent queries, and one union query over
+    *     them ran its stages close to one after another (d119's three
+    *     pair sets at sf0.1, local[4] on a 4-core VM: 8.9 s against 6.9 s
+    *     as three concurrent queries);
+    *  2. the fixpoint then runs over the cached edges while the text and
+    *     URL verdicts are persisted and primed beside it: its small round
+    *     jobs leave executors idle, and the verdicts become cached inputs
+    *     of the composition join instead of running inside the final
+    *     action.
+    */
+  private def composedGate(s: SparkSession, textV: DataFrame,
+      urlV: DataFrame, pairs: Seq[(String, DataFrame)]): DataFrame = {
     import graft.ops.{CacheRegistry, Par}
-    val Seq(imgRep, audRep, vidRep, textV, urlV) = Par.run(s)(
-      () => rep(d98ImageNearDup(s, d), "icomp"),
-      () => rep(d102AudioNearDup(s, d), "acomp"),
-      () => rep(d103VideoOverlap(s, d), "vcomp"),
-      () => {
-        val v = CacheRegistry.harness.add(textExactVerdict(s, d).persist())
-        v.count(); v
-      },
-      () => {
-        val v = CacheRegistry.harness.add(
-          TextOps.d93UrlDedup(s, d)
-            .select(col("doc_id"), col("keeper").as("keep_url")).persist())
-        v.count(); v
-      })
-    textV
-      .join(urlV, Seq("doc_id"))
-      .join(imgRep, Seq("doc_id"), "left")
-      .join(audRep, Seq("doc_id"), "left")
-      .join(vidRep, Seq("doc_id"), "left")
-      .select(col("doc_id"), col("keep_text"),
-        keeperOf("icomp").as("keep_image"),
-        keeperOf("acomp").as("keep_audio"),
-        keeperOf("vcomp").as("keep_video"),
-        col("keep_url"))
-      .withColumn("kept",
-        col("keep_text") && col("keep_image") && col("keep_audio") &&
-          col("keep_video") && col("keep_url"))
+    def prime(v: DataFrame): () => DataFrame =
+      () => { val p = CacheRegistry.harness.add(v.persist()); p.count(); p }
+    val edges = Par.run[DataFrame](s)(
+      pairs.map(p => prime(p._2.select("d1", "d2"))): _*)
+    val Seq(comps, textP, urlP) = Par.run[DataFrame](s)(
+      () => modalityComponents(pairs.map(_._1).zip(edges)),
+      prime(textV), prime(urlV))
+    val keeps = pairs.map { case (n, _) =>
+      (col(s"${n}comp").isNull || col(s"${n}comp") === col("doc_id"))
+        .as(s"keep_$n")
+    }
+    val verdicts = ("keep_text" +: pairs.map("keep_" + _._1) :+ "keep_url")
+      .map(col)
+    textP.join(urlP, Seq("doc_id"))
+      .join(comps, Seq("doc_id"), "left")
+      .select(col("doc_id") +: col("keep_text") +: keeps :+ col("keep_url"): _*)
+      .withColumn("kept", verdicts.reduce(_ && _))
       .orderBy("doc_id")
   }
+
+  /** Full five-modality composed gate — the d118 query and the breadth
+    * capstone: d106's gate widened to EVERY modality the engine dedups —
+    * text-exact keeper, image (d98 pairs), audio (d102 pairs) and video
+    * (d103 pairs) cluster representatives, canonical-URL keeper — through
+    * one [[composedGate]] call. Oracle composes the five sub-oracles
+    * (three recursive-CTE reachability chains + the null-safe text keeper
+    * + the URL keeper).
+    */
+  def d118FullMultimodalGate(s: SparkSession, d: String): DataFrame =
+    composedGate(s, textExactVerdict(s, d), urlVerdict(s, d), Seq(
+      "image" -> d98ImageNearDup(s, d),
+      "audio" -> d102AudioNearDup(s, d),
+      "video" -> d103VideoOverlap(s, d)))
 
   /** The INCREMENTAL full multimodal gate — the d119 query and the
     * capstone of the round-10 incremental story, d96's "the COMPOSITION is
@@ -1289,20 +1285,17 @@ object Multimodal {
     *  1. text    — (fp → min doc_id) state, min-mergeable (the d96 stage);
     *  2. URL     — (canon_url → min doc_id) state, min-mergeable (d101);
     *  3. image   — per-doc 8-byte aHash state; per-batch pairs via
-    *               [[incrementalHammingPairs]] (the d104 probe), CC over
-    *               the ACCUMULATED pair set (output-sized — the d104
-    *               identity guarantees it equals the one-shot pair set,
-    *               so the components match d118's);
+    *               [[incrementalHammingPairs]] (the d104 probe); the
+    *               ACCUMULATED pair set equals the one-shot one (the d104
+    *               identity), so its components match d118's;
     *  4. audio   — the same with [[audioHash64]] (d111);
     *  5. video   — per-doc frame-fp state; per-batch pairs via
-    *               [[incrementalClipPairs]] (d117), CC over accumulated
-    *               pairs.
+    *               [[incrementalClipPairs]] (d117).
     *
-    * Old payloads are never re-decoded, old text/URLs never re-hashed:
-    * each batch contributes O(batch) state (8 B/image, 8 B/clip,
-    * ~33 B/frame, one row per fp/canon_url), merges are min-merge /
-    * append, and the verdict joins run against merged state exactly as
-    * the one-shot runs against its full tables.
+    * The accumulated pair sets feed one [[composedGate]] call. Old
+    * payloads are never re-decoded, old text/URLs never re-hashed: each
+    * batch contributes O(batch) state (8 B/image, 8 B/clip, ~33 B/frame,
+    * one row per fp/canon_url), and merges are min-merge / append.
     */
   def d119IncrementalMultimodalGate(s: SparkSession, d: String): DataFrame = {
     import graft.ops.{CacheRegistry, TextOps}
@@ -1337,16 +1330,12 @@ object Multimodal {
       .select(col("doc_id"),
         (col("doc_id") === col("ukeeper")).as("keep_url"))
 
-    // Hamming modalities: hash state + incremental probes + CC over the
-    // accumulated (output-sized) pair set
-    def hammingRep(hashes: DataFrame, name: String): DataFrame = {
-      val h1 = hashes.filter(col("doc_id") % 2 === 0)
-      val h2 = hashes.filter(col("doc_id") % 2 === 1)
-      val empty = hashes.filter(lit(false))
-      val pairs = incrementalHammingPairs(empty, h1)
-        .unionByName(incrementalHammingPairs(h1, h2))
-      TextOps.connectedComponents(pairs.select(col("d1"), col("d2")))
-        .select(col("doc_id"), col("component").as(name))
+    // per-modality state (hashes / frames) and the two batches' probes
+    def accumulated(state: DataFrame,
+        probe: (DataFrame, DataFrame) => DataFrame): DataFrame = {
+      val b1 = state.filter(col("doc_id") % 2 === 0)
+      val b2 = state.filter(col("doc_id") % 2 === 1)
+      probe(state.filter(lit(false)), b1).unionByName(probe(b1, b2))
     }
     val ids = docs.select(col("doc_id"))
     val imgHashes = CacheRegistry.harness.add(
@@ -1355,52 +1344,11 @@ object Multimodal {
     val audHashes = CacheRegistry.harness.add(
       audioHash64(audioDedupPayload(ids)).filter(col("ahash").isNotNull)
         .persist())
-
-    // video: frame state + incremental containment pairs + CC
     val frames = CacheRegistry.harness.add(d103Frames(s, d).persist())
-
-    def keeperOf(c: String): org.apache.spark.sql.Column =
-      col(c).isNull || col(c) === col("doc_id")
-    // the three Hamming/frame branches each run 2 incremental probes plus
-    // an eager CC fixpoint over the accumulated pairs; independent, so
-    // overlapped from driver threads (guide §2.6, the d118 convention).
-    // The text/URL state verdicts are independent inputs of the final
-    // composition join — persisted and primed as two more branches so
-    // their cost hides in the fixpoints' round tails instead of running
-    // sequentially inside the final action (the d118 pattern).
-    val Seq(imgRep, audRep, vidRep, textVp, urlVp) = graft.ops.Par.run(s)(
-      () => hammingRep(imgHashes, "icomp"),
-      () => hammingRep(audHashes, "acomp"),
-      () => {
-        val f1 = frames.filter(col("doc_id") % 2 === 0)
-        val f2 = frames.filter(col("doc_id") % 2 === 1)
-        val vPairs = incrementalClipPairs(frames.filter(lit(false)), f1)
-          .unionByName(incrementalClipPairs(f1, f2))
-        TextOps.connectedComponents(vPairs.select(col("d1"), col("d2")))
-          .select(col("doc_id"), col("component").as("vcomp"))
-      },
-      () => {
-        val v = CacheRegistry.harness.add(textV.persist())
-        v.count(); v
-      },
-      () => {
-        val v = CacheRegistry.harness.add(urlV.persist())
-        v.count(); v
-      })
-    textVp
-      .join(urlVp, Seq("doc_id"))
-      .join(imgRep, Seq("doc_id"), "left")
-      .join(audRep, Seq("doc_id"), "left")
-      .join(vidRep, Seq("doc_id"), "left")
-      .select(col("doc_id"), col("keep_text"),
-        keeperOf("icomp").as("keep_image"),
-        keeperOf("acomp").as("keep_audio"),
-        keeperOf("vcomp").as("keep_video"),
-        col("keep_url"))
-      .withColumn("kept",
-        col("keep_text") && col("keep_image") && col("keep_audio") &&
-          col("keep_video") && col("keep_url"))
-      .orderBy("doc_id")
+    composedGate(s, textV, urlV, Seq(
+      "image" -> accumulated(imgHashes, incrementalHammingPairs(_, _)),
+      "audio" -> accumulated(audHashes, incrementalHammingPairs(_, _)),
+      "video" -> accumulated(frames, incrementalClipPairs)))
   }
 
   /** Class modulus for [[d103VideoOverlap]]'s synthetic clip model. */

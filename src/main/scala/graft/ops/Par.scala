@@ -9,18 +9,18 @@ import org.apache.spark.sql.SparkSession
   *
   * Spark's scheduler happily runs several jobs at once inside one
   * application; actions are sequential only because one driver thread
-  * calls them sequentially (optimization guide §2.6). The composed
-  * multimodal gates run an EAGER connected-components fixpoint per
-  * modality (each round a localCheckpoint job + a convergence probe), so
-  * three independent modality branches serialize ~6-10 small jobs each
-  * for no reason. Running each branch on its own driver thread overlaps
-  * those rounds; with default FIFO scheduling the later branches' tasks
-  * back-fill executors the earlier branches' straggler tails leave idle —
-  * on a cluster exactly as on local[N].
+  * calls them sequentially (optimization guide §2.6). A query that runs
+  * an EAGER computation during construction — a connected-components
+  * fixpoint (each round a lazy-checkpoint job + a convergence probe), a
+  * composed gate — while independent inputs of its final join wait their
+  * turn inside the final action, primes those inputs (persist + count)
+  * on sibling driver threads instead: with default FIFO scheduling their
+  * tasks back-fill the executors the fixpoint's small round jobs and
+  * straggler tails leave idle — on a cluster exactly as on local[N].
   *
   * Determinism: each branch's result is a pure function of its inputs
   * (the CC fixpoint converges to the same labeling under any scheduling),
-  * so composed-query output is unchanged — the oracle gate re-proves it.
+  * so query output is unchanged — the oracle gate re-proves it.
   *
   * Thread-safety notes for callers: [[CacheRegistry]] is a concurrent
   * queue (safe to register from branches); `SparkSession` supports

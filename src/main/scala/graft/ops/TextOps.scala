@@ -1,5 +1,6 @@
 package graft.ops
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -2531,11 +2532,8 @@ object TextOps {
     // incremental Hamming pairs inflated each CC round ~5× through
     // optimizer cost alone, measured at sf0.1: 18 s → 4 s for the same
     // 35k-edge graph)
-    val eck = edges.select(col("d1"), col("d2")).localCheckpoint(true)
-    val eckRdd = eck.queryExecution.analyzed.collectFirst {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
-    }
-    val e0 = eck.sparkSession.createDataFrame(eck.rdd, eck.schema)
+    val (e0, eckRdd) =
+      truncate(edges.select(col("d1"), col("d2")), eager = true)
     // The incremental callers' edge plans end in union/anti-join stages
     // whose CHECKPOINTED layout concatenates every upstream stage's
     // partitions (AQE coalesces shuffle outputs, but a checkpoint captures
@@ -2550,9 +2548,8 @@ object TextOps {
     // scale a TB edge list arrives with >= parallelism partitions of real
     // data and keeps its layout — this only collapses the tiny-partition
     // overhang that AQE cannot see through a checkpoint.
-    val ePartitions = eck.rdd.getNumPartitions
-    val par = eck.sparkSession.sparkContext.defaultParallelism
-    val e = if (ePartitions > par) e0.coalesce(par) else e0
+    val par = e0.sparkSession.sparkContext.defaultParallelism
+    val e = if (eckRdd.getNumPartitions > par) e0.coalesce(par) else e0
     val sym = e
       .union(e.select(col("d2").as("d1"), col("d1").as("d2")))
       // pre-partition on the per-round join key: each propagation round then
@@ -2578,7 +2575,7 @@ object TextOps {
     var prevSum = labelSum(labels)
     var converged = false
     var rounds = 0
-    var finalCkRdd: Option[org.apache.spark.rdd.RDD[_]] = None
+    var finalCkRdd: Option[RDD[_]] = None
     while (!converged && rounds < ccMaxRounds) {
       val viaNeighbor = sym
         .join(labels, sym("d2") === labels("doc_id"))
@@ -2599,29 +2596,21 @@ object TextOps {
           coalesce(col("b.jcc"), col("a.component")).as("component"))
       // the self-join references the round's plan twice, so without
       // truncation lineage doubles per round (exponential plan size by round
-      // ~10). localCheckpoint cuts it; the label table is one compact row per
-      // clustered doc, so executor-local blocks are cheap. The checkpointed
-      // plan still carries constraints referencing pre-checkpoint expression
-      // ids (they break the next round's Union constraint rewrite), so the
-      // round's DataFrame is rebuilt from the checkpointed RDD with fresh
-      // attributes.
+      // ~10). [[truncate]] cuts it; the label table is one compact row per
+      // clustered doc, so executor-local blocks are cheap.
       // LAZY checkpoint (eager = false): the convergence probe right below
       // is itself a full-partition action, so it materializes the
       // checkpoint blocks AND computes the label sum in ONE job — an eager
       // checkpoint ran a separate count() job first, doubling the
-      // per-round job count (and the fixpoint's cost at bench scale IS
-      // the per-round job floor × rounds × 13 callers; guide §1.2 step 1).
-      val ck = raw.localCheckpoint(false)
-      val ckRdd = ck.queryExecution.analyzed.collectFirst {
-        case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
-      }
-      val next = ck.sparkSession.createDataFrame(ck.rdd, ck.schema)
+      // per-round job count (the fixpoint's cost at bench scale IS the
+      // per-round job floor × rounds; guide §1.2 step 1).
+      val (next, ckRdd) = truncate(raw, eager = false)
       val nextSum = labelSum(next)
       converged = nextSum.compareTo(prevSum) == 0
       prevSum = nextSum
       freePrevious()
-      freePrevious = () => { ckRdd.foreach(_.unpersist(false)); () }
-      finalCkRdd = ckRdd
+      freePrevious = () => { ckRdd.unpersist(false); () }
+      finalCkRdd = Some(ckRdd)
       labels = next
       rounds += 1
     }
@@ -2629,7 +2618,7 @@ object TextOps {
     // the edge checkpoint's blocks fed only sym's materialization; sym is
     // done, so release them (RDD-level blocks — Dataset.unpersist and
     // clearCache cannot see them)
-    eckRdd.foreach(_.unpersist(false))
+    eckRdd.unpersist(false)
     // the last round's checkpoint backs the RETURNED labels table; its
     // blocks live at the RDD level where Dataset.unpersist / clearCache
     // cannot see them, so register the backing RDD in the caller's registry
@@ -3074,7 +3063,7 @@ object TextOps {
       sel: Option[DataFrame]): DataFrame = {
     // the cap verdict and the selection pool are independent of the
     // multimodal gate until stage1's join, and the gate's construction
-    // runs eager fixpoints — prime them on driver threads inside that
+    // runs an eager fixpoint — prime them on driver threads inside that
     // window (guide §2.6, the d118 pattern)
     // persist, NOT lineageCheckpoint (r20, measured): a checkpointed
     // list's LogicalRDD reports defaultSizeInBytes, so stage1's joins
@@ -3912,15 +3901,15 @@ object TextOps {
       .orderBy("doc_id")
   }
 
-  /** Eager localCheckpoint + fresh-attribute rebuild, backing RDD
-    * registered for harness release — the [[connectedComponents]]
-    * truncation convention applied to the HITS trajectory: each half-step
-    * consumes a 1-node LogicalRDD instead of the alternating cached
-    * chain, whose plan TEXT repeats the entire prior lineage inside every
-    * later step (a plain persist leaves lineage in the plan; by step 6
-    * Catalyst analysis and AQE's per-execution plan-description string
-    * grow combinatorially — measured as minutes of driver CPU inside
-    * generateTreeString at sf0.001 before this cut).
+  /** [[lineageCheckpoint]] into the harness registry — the
+    * [[connectedComponents]] truncation convention applied to the HITS
+    * trajectory: each half-step consumes a 1-node LogicalRDD instead of
+    * the alternating cached chain, whose plan TEXT repeats the entire
+    * prior lineage inside every later step (a plain persist leaves
+    * lineage in the plan; by step 6 Catalyst analysis and AQE's
+    * per-execution plan-description string grow combinatorially —
+    * measured as minutes of driver CPU inside generateTreeString at
+    * sf0.001 before this cut).
     */
   private def hitsCheckpoint(df: DataFrame): DataFrame =
     lineageCheckpoint(df, CacheRegistry.harness)
@@ -3941,19 +3930,34 @@ object TextOps {
     */
   private[ops] def lineageCheckpoint(df: DataFrame, reg: CacheRegistry)
       : DataFrame = {
-    val ck = df.localCheckpoint(false)
-    ck.queryExecution.analyzed.collectFirst {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
-    }.foreach(reg.addRdd)
-    val rebuilt = ck.sparkSession.createDataFrame(ck.rdd, ck.schema)
+    val (rebuilt, backing) = truncate(df, eager = false)
+    reg.addRdd(backing)
     // same narrow-coalesce guard as [[connectedComponents]]' edge
     // checkpoint: a checkpoint captures the raw final-stage layout (often
     // a union/join's concatenated upstream partitions — wide and
     // near-empty for the KB-scale lists checkpointed here), and every
     // consumer stage would re-run that many map tasks. No-op at or under
     // core count, partitioning-only.
-    val par = ck.sparkSession.sparkContext.defaultParallelism
-    if (ck.rdd.getNumPartitions > par) rebuilt.coalesce(par) else rebuilt
+    val par = rebuilt.sparkSession.sparkContext.defaultParallelism
+    if (backing.getNumPartitions > par) rebuilt.coalesce(par) else rebuilt
+  }
+
+  /** The one lineage-truncation primitive: `localCheckpoint` `df` (eager
+    * or lazy) and rebuild it over the checkpoint's RDD with fresh
+    * attributes. The checkpointed plan still carries constraints that
+    * reference pre-checkpoint expression ids (they break a later Union's
+    * constraint rewrite), hence the rebuild. Returns the rebuilt frame and
+    * the checkpoint's backing RDD, whose blocks live at the RDD level
+    * where `Dataset.unpersist` and `clearCache` cannot see them — the
+    * caller releases it (`unpersist` or a [[CacheRegistry]]).
+    */
+  private def truncate(df: DataFrame, eager: Boolean): (DataFrame, RDD[_]) = {
+    val ck = df.localCheckpoint(eager)
+    val backing = ck.queryExecution.analyzed.collectFirst {
+      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
+    }.getOrElse(throw new IllegalStateException(
+      "localCheckpoint plan has no LogicalRDD"))
+    (ck.sparkSession.createDataFrame(ck.rdd, ck.schema), backing)
   }
 
   /** One HITS half-step: sum `scores` over the edges' `joinKey` endpoint,

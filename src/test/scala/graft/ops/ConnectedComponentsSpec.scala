@@ -50,4 +50,28 @@ class ConnectedComponentsSpec extends SparkSpec {
     val edges = Seq.empty[(Long, Long)].toDF("d1", "d2")
     assert(TextOps.connectedComponents(edges).count() == 0)
   }
+
+  test("fused modality fixpoint equals one fixpoint per modality") {
+    import spark.implicits._
+    // three modalities reusing doc ids: 1-2 linked in modality 0 and 2-3
+    // in modality 1 (one untagged graph would merge {1, 2, 3}); 1, 6, 7
+    // and 9 each occur in one modality only; -5 is negative and sits in
+    // modalities 0 and 2, where a truncating div or a plain % would untag
+    // it wrongly
+    val graphs = Seq(
+      "image" -> Seq(1L -> 2L, -5L -> 4L),
+      "audio" -> Seq(2L -> 3L, 4L -> 6L),
+      "video" -> Seq(7L -> 9L, 3L -> -5L))
+    val rows = graft.multimodal.Multimodal.modalityComponents(
+      graphs.map { case (n, es) => n -> es.toDF("d1", "d2") }).collect()
+    def column(n: String): Map[Long, Long] = rows
+      .filter(r => !r.isNullAt(r.fieldIndex(s"${n}comp")))
+      .map(r => r.getAs[Long]("doc_id") -> r.getAs[Long](s"${n}comp")).toMap
+    graphs.foreach { case (n, es) => assert(column(n) == cc(es: _*), n) }
+    assert(rows.map(_.getAs[Long]("doc_id")).sorted.toSeq ==
+      graphs.flatMap(_._2.flatMap(e => Seq(e._1, e._2))).distinct.sorted)
+    // no component crosses modalities
+    assert(column("audio")(3L) == 2L && column("video")(3L) == -5L)
+    assert(!column("image").contains(3L) && !column("audio").contains(1L))
+  }
 }
