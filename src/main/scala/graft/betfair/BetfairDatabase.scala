@@ -1,9 +1,9 @@
 package graft.betfair
 
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, FileUtil, Path}
 import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.util.SerializableConfiguration
 
 /** Public API of the Spark-native betfair market index — the reference's
   * surface (index/select/columns/size/export/clean/insert; reference
@@ -94,46 +94,39 @@ class BetfairDatabase(spark: SparkSession, databaseDir: String) {
 
   /** A18: CSV export (header, NULL -> ""). Returns the output file path.
     *
-    * `single = true` is reference parity (reference database.py:165-186):
-    * ONE CSV file — if `dest` is an existing directory the file is named
+    * Reference parity (reference database.py:165-186): ONE CSV file — if
+    * `dest` is an existing directory the file is named
     * `<database dir name>.csv` inside it, otherwise `dest` itself is the
     * file. Implemented as a coalesce(1) write to a temp dir plus a rename of
     * the lone part file (the reference's in-memory DictWriter dump is slow by
-    * design; this at least streams). `single = false` is the scale path: one
-    * CSV part per partition under `dest`, no single-node bottleneck.
+    * design; this at least streams).
     */
-  def export(dest: String, single: Boolean = true): String = {
-    val writer = (df: DataFrame) => df.write.mode("overwrite")
-      .option("header", "true").option("nullValue", "")
-      .option("emptyValue", "\"\"")
-    if (!single) {
-      writer(indexDF).csv(dest)
-      dest
-    } else {
-      val destPath = new Path(dest)
-      val dfs = destPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val target =
-        if (dfs.exists(destPath) && dfs.getFileStatus(destPath).isDirectory)
-          new Path(destPath, new Path(databaseDir).getName + ".csv")
-        else destPath
-      val tmp = new Path(target.getParent, s"_graft_export_tmp_${target.getName}")
-      try {
-        writer(indexDF.coalesce(1)).csv(tmp.toString)
-        val part = dfs.listStatus(tmp).map(_.getPath)
-          .find(p => p.getName.startsWith("part-") && p.getName.endsWith(".csv"))
-          .getOrElse(
-            throw new java.io.IOException(s"export: no part file in $tmp"))
-        // a stale target may be a non-empty directory (e.g. a prior
-        // single=false export to the same path) — delete recursively and
-        // check the result, so the rename below can't fail misleadingly
-        if (dfs.exists(target) && !dfs.delete(target, true))
-          throw new java.io.IOException(
-            s"export: could not remove stale target $target")
-        if (!dfs.rename(part, target))
-          throw new java.io.IOException(s"export: rename $part -> $target failed")
-        target.toString
-      } finally dfs.delete(tmp, true)
-    }
+  def export(dest: String): String = {
+    val destPath = new Path(dest)
+    val dfs = destPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val target =
+      if (dfs.exists(destPath) && dfs.getFileStatus(destPath).isDirectory)
+        new Path(destPath, new Path(databaseDir).getName + ".csv")
+      else destPath
+    val tmp = new Path(target.getParent, s"_graft_export_tmp_${target.getName}")
+    try {
+      indexDF.coalesce(1).write.mode("overwrite")
+        .option("header", "true").option("nullValue", "")
+        .option("emptyValue", "\"\"").csv(tmp.toString)
+      val part = dfs.listStatus(tmp).map(_.getPath)
+        .find(p => p.getName.startsWith("part-") && p.getName.endsWith(".csv"))
+        .getOrElse(
+          throw new java.io.IOException(s"export: no part file in $tmp"))
+      // a stale target may be a non-empty directory (e.g. a Spark CSV
+      // write to the same path) — delete recursively and check the result,
+      // so the rename below can't fail misleadingly
+      if (dfs.exists(target) && !dfs.delete(target, true))
+        throw new java.io.IOException(
+          s"export: could not remove stale target $target")
+      if (!dfs.rename(part, target))
+        throw new java.io.IOException(s"export: rename $part -> $target failed")
+      target.toString
+    } finally dfs.delete(tmp, true)
   }
 
   /** A16: drop index rows whose data file no longer exists. Returns the
@@ -143,7 +136,8 @@ class BetfairDatabase(spark: SparkSession, databaseDir: String) {
     */
   def clean(): Long = {
     val scanned, kept = Observation()
-    val sconf = SerializableHadoopConf(spark)
+    val sconf = new SerializableConfiguration(
+      spark.sparkContext.hadoopConfiguration)
     val existing = indexDF.observe(scanned, count(lit(1)).as("rows"))
       .mapPartitions { rows =>
         val conf = sconf.value
@@ -211,7 +205,8 @@ class BetfairDatabase(spark: SparkSession, databaseDir: String) {
 
     // ---- phase 1: RESOLVE. Existence/size probes are executor-side pure
     // reads with the driver's Hadoop conf.
-    val sconf = SerializableHadoopConf(spark)
+    val sconf = new SerializableConfiguration(
+      spark.sparkContext.hadoopConfiguration)
     val existsUdf = udf { (s: String) =>
       val p = new Path(s); p.getFileSystem(sconf.value).exists(p)
     }

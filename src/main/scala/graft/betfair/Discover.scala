@@ -4,6 +4,7 @@ import scala.collection.mutable
 
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.util.SerializableConfiguration
 
 /** A1/A2: recursive scan + classification + stem pairing.
   *
@@ -97,7 +98,8 @@ object Discover {
     else {
       // distributed listing: executors walk one subtree each, with the
       // driver's Hadoop conf (credentials/defaultFS) shipped along
-      val sconf = SerializableHadoopConf(spark)
+      val sconf = new SerializableConfiguration(
+        spark.sparkContext.hadoopConfiguration)
       val subdirs = dirs.map(_.getPath.toString).toSeq
       val listed = spark.createDataset(subdirs)
         .repartition(math.min(subdirs.length, 256))

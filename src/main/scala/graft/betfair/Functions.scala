@@ -1,7 +1,7 @@
 package graft.betfair
 
 import java.time.format.DateTimeFormatter
-import java.time.{Instant, ZoneId}
+import java.time.{DateTimeException, Instant, ZoneId, ZonedDateTime}
 import java.util.Locale
 
 import org.apache.spark.sql.SparkSession
@@ -37,15 +37,25 @@ object Functions {
         catch { case _: Exception => null }
     }
 
+  /** `ts` in zone `tz`, or null when either is null or does not parse. An
+    * unknown zone id keeps the row and nulls the derived columns, like an
+    * unparseable timestamp (the reference would raise).
+    */
+  private def atZone(ts: String, tz: String): ZonedDateTime = {
+    if (ts == null || tz == null) return null
+    val inst = parseIso(ts)
+    if (inst == null) return null
+    try inst.atZone(ZoneId.of(tz))
+    catch { case _: DateTimeException => null }
+  }
+
   /** Python str(datetime)-compatible local time: "yyyy-MM-dd HH:mm:ss",
     * fractional seconds only when nonzero (6 digits), offset "+HH:MM"
     * (":SS" suffix only for historic sub-minute offsets).
     */
   private[betfair] def localTimeString(ts: String, tz: String): String = {
-    if (ts == null || tz == null) return null
-    val inst = parseIso(ts)
-    if (inst == null) return null
-    val zdt = inst.atZone(ZoneId.of(tz))
+    val zdt = atZone(ts, tz)
+    if (zdt == null) return null
     val base = zdt.format(DateTimeFormatter.ofPattern("yyyy-MM-dd HH:mm:ss"))
     val micros = zdt.getNano / 1000
     val frac = if (micros != 0) f".$micros%06d" else ""
@@ -59,11 +69,9 @@ object Functions {
 
   /** English weekday name of the local market start (Python %A). */
   private[betfair] def localDayOfWeek(ts: String, tz: String): String = {
-    if (ts == null || tz == null) return null
-    val inst = parseIso(ts)
-    if (inst == null) return null
-    inst.atZone(ZoneId.of(tz))
-      .format(DateTimeFormatter.ofPattern("EEEE", Locale.ENGLISH))
+    val zdt = atZone(ts, tz)
+    if (zdt == null) null
+    else zdt.format(DateTimeFormatter.ofPattern("EEEE", Locale.ENGLISH))
   }
 
   // -------------------------------------------------------------------

@@ -11,6 +11,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.expressions.{UserDefinedFunction, Window}
 import org.apache.spark.sql.functions._
+import org.apache.spark.util.SerializableConfiguration
 import Schemas._
 
 /** The index-build dataflow (SURVEY.md §3.2): one plan over the [[Discover]]
@@ -171,7 +172,8 @@ object IndexPipeline {
   def build(spark: SparkSession, sourceDir: String,
       writeMetadataFiles: Boolean = true): BuildResult = {
     import spark.implicits._
-    val sconf = SerializableHadoopConf(spark)
+    val sconf = new SerializableConfiguration(
+      spark.sparkContext.hadoopConfiguration)
     val keyed = Discover.scan(spark, sourceDir).as[Discover.Entry]
       .mapPartitions { it =>
         val (conf, mapper) = (sconf.value, new ObjectMapper())

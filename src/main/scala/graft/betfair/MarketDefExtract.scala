@@ -9,6 +9,7 @@ import com.fasterxml.jackson.databind.node.ObjectNode
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.util.SerializableConfiguration
 
 /** A4: market-definition extraction from exchange-stream capture files.
   *
@@ -194,7 +195,8 @@ object MarketDefExtract {
   def extract(spark: SparkSession, files: Dataset[(String, String)],
       writeMetadataFiles: Boolean): DataFrame = {
     import spark.implicits._
-    val sconf = SerializableHadoopConf(spark)
+    val sconf = new SerializableConfiguration(
+      spark.sparkContext.hadoopConfiguration)
     files.mapPartitions { it =>
       val conf = sconf.value
       val mapper = new ObjectMapper()

@@ -1,8 +1,17 @@
 package graft.betfair
 
-/** Typed view of one index row — the public-API Dataset boundary
-  * (SURVEY.md §1.4: DataFrame for the column-name-driven ETL, one typed
-  * Dataset at the API edge). Field order matches the 37-column contract.
+/** One index row: the single declaration of the 37-column index contract.
+  * [[Schemas.indexSchema]] and [[Schemas.IndexColumns]] are derived from
+  * it, and it is the typed Dataset boundary of the public API (SURVEY.md
+  * §1.4: DataFrame for the column-name-driven ETL, one typed Dataset at the
+  * API edge).
+  *
+  * Names and order mirror the reference's SQL_TABLE_COLUMNS
+  * (reference: betfairdatabase/const.py:17-58) and are part of the public
+  * API. Types follow SURVEY.md §1.3: ids and ISO timestamps stay strings
+  * (lexical compare == chronological for ISO-8601 UTC), booleans are real
+  * booleans, counts ints, distances doubles. The derived schema marks
+  * every column nullable, the plain `String` fields included.
   */
 case class MarketIndexRow(
     marketId: String,

@@ -1,36 +1,6 @@
 package graft.betfair
 
-import java.io.{ObjectInputStream, ObjectOutputStream}
-
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-
-/** Serializable wrapper shipping the driver's Hadoop configuration into
-  * executor tasks. Building `new Configuration()` inside a task silently
-  * drops cluster filesystem settings and credentials (fs.defaultFS, s3a
-  * keys, kerberos tokens) — fine on local[*], wrong on a real cluster.
-  * (Spark's own `org.apache.spark.util.SerializableConfiguration` is
-  * `private[spark]`, hence this public twin.)
-  */
-class SerializableHadoopConf(@transient var value: Configuration)
-    extends Serializable {
-
-  private def writeObject(out: ObjectOutputStream): Unit = {
-    out.defaultWriteObject()
-    value.write(out)
-  }
-
-  private def readObject(in: ObjectInputStream): Unit = {
-    in.defaultReadObject()
-    value = new Configuration(false)
-    value.readFields(in)
-  }
-}
-
-object SerializableHadoopConf {
-  def apply(spark: org.apache.spark.sql.SparkSession): SerializableHadoopConf =
-    new SerializableHadoopConf(spark.sparkContext.hadoopConfiguration)
-}
 
 /** Canonical file-path form used as the pairing key across the whole index
   * pipeline and stored in the index. Hadoop listings return `Path`s whose
@@ -64,17 +34,4 @@ object PathCanon {
       if (stripFile) u.getPath else "file://" + u.getPath
     } else p.toString
   }
-
-  /** Canonicalize a (possibly percent-encoded) URI string. */
-  def canonicalUri(s: String): String = canonicalUri(s, stripFile = true)
-
-  def canonicalUri(s: String, stripFile: Boolean): String =
-    if (s == null || s.isEmpty) s
-    else
-      try canonical(new Path(new java.net.URI(s)), stripFile)
-      catch {
-        // not URI-parseable (already a plain path, or odd chars): best-effort
-        case _: Exception =>
-          if (stripFile) s.replaceFirst("^file:/+", "/") else s
-      }
 }

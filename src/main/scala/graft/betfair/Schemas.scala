@@ -1,69 +1,18 @@
 package graft.betfair
 
+import org.apache.spark.sql.Encoders
 import org.apache.spark.sql.types._
 
-/** Schemas for the betfair market-index engine.
-  *
-  * The 37-column index contract mirrors the reference's SQL_TABLE_COLUMNS
-  * (reference: betfairdatabase/const.py:17-58) — exact names and order are
-  * part of the public API. Types follow SURVEY.md §1.3: ids and ISO
-  * timestamps stay strings (lexical compare == chronological for ISO-8601
-  * UTC), booleans are real booleans, counts ints, distances doubles.
+/** Schemas for the betfair market-index engine. The 37-column index
+  * contract is declared once, by [[MarketIndexRow]]; its names, order and
+  * types here are derived from that case class.
   */
 object Schemas {
 
-  /** Index column names, in contract order. */
-  val IndexColumns: Seq[String] = Seq(
-    "marketId", "marketName", "marketStartTime", "persistenceEnabled",
-    "bspMarket", "marketTime", "suspendTime", "bettingType",
-    "turnInPlayEnabled", "marketType", "numberOfWinners",
-    "priceLadderDescriptionType", "lineRangeInfoMarketUnit", "eachWayDivisor",
-    "raceType", "runners", "eventTypeId", "eventTypeName", "competitionId",
-    "competitionName", "eventId", "eventName", "eventCountryCode",
-    "eventTimezone", "eventVenue", "eventOpenDate", "marketSettledTime",
-    "localDayOfWeek", "localMarketStartTime", "localEventOpenDate",
-    "localMarketSettledTime", "raceId", "raceTypeFromName",
-    "raceDistanceMeters", "raceDistanceFurlongs", "marketMetadataFilePath",
-    "marketDataFilePath")
+  val indexSchema: StructType = Encoders.product[MarketIndexRow].schema
 
-  val indexSchema: StructType = StructType(Seq(
-    StructField("marketId", StringType),
-    StructField("marketName", StringType),
-    StructField("marketStartTime", StringType),
-    StructField("persistenceEnabled", BooleanType),
-    StructField("bspMarket", BooleanType),
-    StructField("marketTime", StringType),
-    StructField("suspendTime", StringType),
-    StructField("bettingType", StringType),
-    StructField("turnInPlayEnabled", BooleanType),
-    StructField("marketType", StringType),
-    StructField("numberOfWinners", IntegerType),
-    StructField("priceLadderDescriptionType", StringType),
-    StructField("lineRangeInfoMarketUnit", StringType),
-    StructField("eachWayDivisor", DoubleType),
-    StructField("raceType", StringType),
-    StructField("runners", IntegerType),
-    StructField("eventTypeId", StringType),
-    StructField("eventTypeName", StringType),
-    StructField("competitionId", StringType),
-    StructField("competitionName", StringType),
-    StructField("eventId", StringType),
-    StructField("eventName", StringType),
-    StructField("eventCountryCode", StringType),
-    StructField("eventTimezone", StringType),
-    StructField("eventVenue", StringType),
-    StructField("eventOpenDate", StringType),
-    StructField("marketSettledTime", StringType),
-    StructField("localDayOfWeek", StringType),
-    StructField("localMarketStartTime", StringType),
-    StructField("localEventOpenDate", StringType),
-    StructField("localMarketSettledTime", StringType),
-    StructField("raceId", StringType),
-    StructField("raceTypeFromName", StringType),
-    StructField("raceDistanceMeters", DoubleType),
-    StructField("raceDistanceFurlongs", DoubleType),
-    StructField("marketMetadataFilePath", StringType),
-    StructField("marketDataFilePath", StringType)))
+  /** Index column names, in contract order. */
+  val IndexColumns: Seq[String] = indexSchema.fieldNames.toSeq
 
   private val runnerSchema = StructType(Seq(
     StructField("id", LongType),

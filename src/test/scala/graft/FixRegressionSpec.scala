@@ -77,18 +77,19 @@ class FixRegressionSpec extends SparkSpec {
   }
 
   test("PathCanon: decoded file paths, scheme-qualified remote paths") {
-    assert(PathCanon.canonicalUri("file:///data%20dir/1.23.json")
+    def uri(s: String) = new org.apache.hadoop.fs.Path(new java.net.URI(s))
+    assert(PathCanon.canonical(uri("file:///data%20dir/1.23.json"))
       == "/data dir/1.23.json")
-    assert(PathCanon.canonicalUri("file:/data/1.23") == "/data/1.23")
-    assert(PathCanon.canonicalUri("hdfs://nn:8020/x/1.2")
+    assert(PathCanon.canonical(uri("file:/data/1.23")) == "/data/1.23")
+    assert(PathCanon.canonical(uri("hdfs://nn:8020/x/1.2"))
       == "hdfs://nn:8020/x/1.2")
     assert(PathCanon.canonical(new org.apache.hadoop.fs.Path("/plain/p"))
       == "/plain/p")
     // remote default FS (ADVICE r2): file paths keep a decoded file:// scheme
     // so later Path resolution can't land on the wrong filesystem
-    assert(PathCanon.canonicalUri("file:///data%20dir/1.23.json",
+    assert(PathCanon.canonical(uri("file:///data%20dir/1.23.json"),
       stripFile = false) == "file:///data dir/1.23.json")
-    assert(PathCanon.canonicalUri("hdfs://nn:8020/x/1.2", stripFile = false)
+    assert(PathCanon.canonical(uri("hdfs://nn:8020/x/1.2"), stripFile = false)
       == "hdfs://nn:8020/x/1.2")
     val localConf = new org.apache.hadoop.conf.Configuration(false)
     localConf.set("fs.defaultFS", "file:///")

@@ -44,6 +44,43 @@ class BetfairDatabaseSpec extends SparkSpec {
     assert(db.index(force = true).rowsInserted == 6)
   }
 
+  test("index schema: the 37-column contract, names, order, types") {
+    import org.apache.spark.sql.types._
+    // the reference's SQL_TABLE_COLUMNS order (betfairdatabase/const.py);
+    // types per SURVEY.md §1.3, every column nullable
+    val contract = Seq(
+      "marketId" -> StringType, "marketName" -> StringType,
+      "marketStartTime" -> StringType, "persistenceEnabled" -> BooleanType,
+      "bspMarket" -> BooleanType, "marketTime" -> StringType,
+      "suspendTime" -> StringType, "bettingType" -> StringType,
+      "turnInPlayEnabled" -> BooleanType, "marketType" -> StringType,
+      "numberOfWinners" -> IntegerType,
+      "priceLadderDescriptionType" -> StringType,
+      "lineRangeInfoMarketUnit" -> StringType, "eachWayDivisor" -> DoubleType,
+      "raceType" -> StringType, "runners" -> IntegerType,
+      "eventTypeId" -> StringType, "eventTypeName" -> StringType,
+      "competitionId" -> StringType, "competitionName" -> StringType,
+      "eventId" -> StringType, "eventName" -> StringType,
+      "eventCountryCode" -> StringType, "eventTimezone" -> StringType,
+      "eventVenue" -> StringType, "eventOpenDate" -> StringType,
+      "marketSettledTime" -> StringType, "localDayOfWeek" -> StringType,
+      "localMarketStartTime" -> StringType,
+      "localEventOpenDate" -> StringType,
+      "localMarketSettledTime" -> StringType, "raceId" -> StringType,
+      "raceTypeFromName" -> StringType, "raceDistanceMeters" -> DoubleType,
+      "raceDistanceFurlongs" -> DoubleType,
+      "marketMetadataFilePath" -> StringType,
+      "marketDataFilePath" -> StringType)
+    val expected = StructType(contract.map { case (name, t) =>
+      StructField(name, t, nullable = true) })
+    assert(expected.length == 37)
+    val (_, db) = freshDb()
+    db.index()
+    assert(db.indexDF.schema == expected)
+    assert(Schemas.indexSchema == expected)
+    assert(Schemas.IndexColumns == expected.fieldNames.toSeq)
+  }
+
   test("select: where-dialect matrix (B1-B9)") {
     val (_, db) = freshDb()
     db.index()
@@ -395,6 +432,32 @@ class BetfairDatabaseSpec extends SparkSpec {
     assert(c.totalMarkets == 2 && c.rowsInserted == 1 && c.consistent)
     assert(db.indexDF.select("marketId").collect().map(_.getString(0)).toSeq ==
       Seq("1.500000006"))
+  }
+
+  test("an unknown event timezone keeps the market and nulls its local " +
+      "times") {
+    val dir = Fixtures.tempDir("graftbadzone")
+    Fixtures.write(dir.resolve("1.500000008.json"),
+      Fixtures.catalogueJson("1.500000008", "Bad Zone", "WIN", "7",
+        "Horse Racing", "York", timezone = "Not/AZone"))
+    streamFile(dir.resolve("1.500000008"), "1.500000008")
+    Fixtures.write(dir.resolve("1.500000009.json"),
+      Fixtures.catalogueJson("1.500000009", "Good Zone", "WIN", "7",
+        "Horse Racing", "Ripon"))
+    streamFile(dir.resolve("1.500000009"), "1.500000009")
+    val db = new BetfairDatabase(spark, dir.toString)
+    val c = db.index()
+    assert(c.rowsInserted == 2 && c.corruptFiles == 0 && c.consistent)
+    val local = Seq("localDayOfWeek", "localMarketStartTime",
+      "localEventOpenDate", "localMarketSettledTime")
+    val bad = db.indexDF.filter(col("marketId") === "1.500000008").collect()
+    assert(bad.length == 1)
+    assert(bad.head.getAs[String]("eventTimezone") == "Not/AZone")
+    assert(local.forall(name => bad.head.getAs[String](name) == null))
+    val good = db.indexDF.filter(col("marketId") === "1.500000009")
+      .collect().head
+    assert(good.getAs[String]("localMarketStartTime") ==
+      "2023-06-01 18:09:37+01:00")
   }
 
   test("bulk metadata.json: the last entry of a duplicated marketId wins") {

@@ -33,6 +33,10 @@ class FunctionsSpec extends AnyFunSuite {
     assert(Functions.localTimeString(null, "Europe/London") == null)
     assert(Functions.localTimeString("2025-03-15T17:09:37.000Z", null) == null)
     assert(Functions.localTimeString("not-a-time", "Europe/London") == null)
+    assert(Functions.localTimeString("2025-03-15T17:09:37.000Z", "Not/AZone")
+      == null)
+    assert(Functions.localDayOfWeek("2025-03-15T17:09:37.000Z", "Not/AZone")
+      == null)
   }
 
   private val goldens: Seq[(String, Option[Double], Option[Double], String)] =
