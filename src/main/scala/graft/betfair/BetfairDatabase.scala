@@ -47,10 +47,10 @@ class BetfairDatabase(spark: SparkSession, databaseDir: String) {
         s"Index already exists in '$databaseDir'.") // IndexExistsError
       fs.delete(new Path(indexPath), true)
     }
-    // the build emits one row per (metadata path, data path) already
+    // the build emits one row per (metadata path, data path) already; the
+    // snapshot write is its one action
     val result = IndexPipeline.build(spark, databaseDir)
-    try writeSnapshot(result.index)
-    finally result.index.unpersist()
+    writeSnapshot(result.index)
     result.counters
   }
 
@@ -158,7 +158,8 @@ class BetfairDatabase(spark: SparkSession, databaseDir: String) {
     * (import pattern) and duplicate policy. Returns the full audit counters
     * (adds/updates/skips split, reference processor.py:47-53) — source-scan
     * counts (totalMarkets, corrupt, missing-data/metadata) come from the
-    * source build, the action split is observed on the plan checkpoint write.
+    * source build, the action split from the plan checkpoint write, which
+    * runs the build and observes both.
     *
     * Dataflow, in three strictly ordered phases:
     *   1. RESOLVE (pure reads): build the source-market DataFrame (same
@@ -183,9 +184,9 @@ class BetfairDatabase(spark: SparkSession, databaseDir: String) {
     if (!indexExists) index(force = false)
     val built = IndexPipeline.build(spark, sourceDir)
     val src = built.index
-      .withColumn("_destDir",
-        when(pattern.dir.isNull || pattern.dir === "", databaseDir)
-          .otherwise(concat(lit(databaseDir + "/"), pattern.dir)))
+      .withColumn("_destDir", pattern.dir.fold(lit(databaseDir))(dir =>
+        when(dir.isNull || dir === "", databaseDir)
+          .otherwise(concat(lit(databaseDir + "/"), dir))))
       .withColumn("_metaName",
         regexp_extract(col("marketMetadataFilePath"), "[^/]+$", 0))
       .withColumn("_dataName",
@@ -247,16 +248,16 @@ class BetfairDatabase(spark: SparkSession, databaseDir: String) {
           col("_processData"))): _*)
 
     // checkpoint: one row per source market — small next to the data files.
-    // Nothing reads the source build after it, so its cache is freed here.
-    // The action split is observed on this write, not counted by a job
+    // This write is the source build's one action; the action split is
+    // observed on it, not counted by a job. The plan is read back with the
+    // schema it was written with, so no job reads its footer
     val planPath = s"$databaseDir/.graft_insert_plan_tmp"
     val split = Observation()
     def tally(action: String) = count(when(col("_action") === action, 1))
       .as(action)
-    try resolved.observe(split, tally("INSERT"), tally("UPDATE"), tally("SKIP"))
+    resolved.observe(split, tally("INSERT"), tally("UPDATE"), tally("SKIP"))
       .write.mode("overwrite").parquet(planPath)
-    finally built.index.unpersist()
-    val plan = spark.read.parquet(planPath)
+    val plan = spark.read.schema(resolved.schema).parquet(planPath)
 
     // ---- phase 2: APPLY, idempotently.
     val doCopy = copy
@@ -338,23 +339,25 @@ object BetfairDatabase {
 }
 
 /** A15: import patterns as Column functions over the flat index row
-  * (reference betfairdatabase/imports.py:12-53).
+  * (reference betfairdatabase/imports.py:12-53). `dir` is a market's
+  * subdirectory of the database directory (a null or empty value places
+  * it at the top); a pattern without one places every market at the top.
   */
-case class ImportPattern(dir: Column)
+case class ImportPattern(dir: Option[Column])
 
 object ImportPatterns {
   /** "{year}/{month_abbrev}/{day}/{event_id}" from settled-else-start time. */
   val betfairHistorical: ImportPattern = {
     val ts = to_timestamp(coalesce(col("marketSettledTime"),
       col("marketStartTime")))
-    ImportPattern(concat_ws("/",
+    ImportPattern(Some(concat_ws("/",
       date_format(ts, "yyyy"), date_format(ts, "MMM"),
-      date_format(ts, "d"), col("eventId")))
+      date_format(ts, "d"), col("eventId"))))
   }
 
   /** Markets stored in directories named after event ids. */
-  val eventId: ImportPattern = ImportPattern(col("eventId"))
+  val eventId: ImportPattern = ImportPattern(Some(col("eventId")))
 
   /** Everything directly in the base directory. */
-  val flat: ImportPattern = ImportPattern(lit(""))
+  val flat: ImportPattern = ImportPattern(None)
 }

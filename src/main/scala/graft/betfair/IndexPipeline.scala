@@ -1,7 +1,10 @@
 package graft.betfair
 
 import java.nio.charset.StandardCharsets
+import java.util.concurrent.TimeoutException
 
+import scala.concurrent.Await
+import scala.concurrent.duration._
 import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.{JsonMappingException, ObjectMapper}
@@ -9,8 +12,12 @@ import org.apache.commons.io.IOUtils
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo,
+  JsonToStructs}
 import org.apache.spark.sql.expressions.{UserDefinedFunction, Window}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, StringType}
 import org.apache.spark.util.SerializableConfiguration
 import Schemas._
 
@@ -26,9 +33,10 @@ import Schemas._
   *      definition extracted from the data file (A4); one `from_json` then
   *      parses them all (A5-A9).
   * Then flatten → derive → racing window → 37-column projection. The
-  * action that fills the index cache is the build's only action: it counts
-  * the rows, and one [[Observation]] on the resolved pairs takes the other
-  * counters.
+  * build is a lazy plan: the caller's action that consumes it (`index`'s
+  * snapshot write, `insert`'s plan checkpoint) runs it, once, and one
+  * [[Observation]] on the resolved pairs takes every counter on that
+  * action. Nothing is cached or counted on the side.
   */
 object IndexPipeline {
 
@@ -49,8 +57,32 @@ object IndexPipeline {
         marketsWithoutMetadata + corruptFiles
   }
 
-  /** `index` is cached; the caller owns that cache and unpersists it. */
-  case class BuildResult(index: DataFrame, counters: Counters)
+  /** How long [[BuildResult.counters]] waits for its observation. The
+    * consuming action's metrics reach it through the listener bus, moments
+    * after the action returns; before that action they never come.
+    */
+  private val CountersWait = 10.seconds
+
+  /** One build: `index` is the uncached plan, which the caller consumes with
+    * one action. `counters` are observed on that action; read before it,
+    * they throw after [[CountersWait]] instead of waiting for an action that
+    * may never run.
+    */
+  final class BuildResult private[IndexPipeline] (val index: DataFrame,
+      observed: Observation) {
+    def counters: Counters = {
+      try Await.ready(observed.future, CountersWait)
+      catch {
+        case _: TimeoutException => throw new IllegalStateException(
+          "build: counters read before an action consumed the index")
+      }
+      val n = observed.get.view.mapValues(_.asInstanceOf[Long]).toMap
+      // the optimizer prunes the metrics of an empty listing with the plan
+      def get(name: String) = n.getOrElse(name, 0L)
+      Counters(get("total"), get("withoutData"), get("withoutMeta"),
+        get("corrupt"), get("rows"))
+    }
+  }
 
   private val localTimeUdf: UserDefinedFunction =
     udf((ts: String, tz: String) => Functions.localTimeString(ts, tz))
@@ -166,8 +198,8 @@ object IndexPipeline {
     case _ => s
   }
 
-  /** Build the full index DataFrame for a source directory. Returns the
-    * 37-column index plus audit counters.
+  /** Build the 37-column index plan for a source directory, with its audit
+    * counters observed on the action that consumes it.
     */
   def build(spark: SparkSession, sourceDir: String,
       writeMetadataFiles: Boolean = true): BuildResult = {
@@ -191,36 +223,45 @@ object IndexPipeline {
         it.flatMap { case (key, files) => pair(key, files) }
           .map(resolve(conf, mapper, _, writeMetadataFiles))
       }
-    val parsed = steps.withColumn("m", from_json(col("json"), metadataSchema))
+    val parsed = steps.withColumn("m", parseMetadata(spark, col("json")))
     val step = col("step")
     // an extracted definition keeps whatever of it fits the schema
     val corrupt = step === "corrupt" || (step === "parse" &&
       (col("m").isNull || col("m._corrupt_record").isNotNull))
     val good = step.isin("parse", "def") && !corrupt
 
-    // counters (A20): observed on the only action, the one that fills the
-    // index cache; total = |data ∪ metadata| stems before bulk consumption
-    // (reference: betfairdatabase/processor.py:147-149)
+    // counters (A20): observed on the consuming action; total = |data ∪
+    // metadata| stems before bulk consumption (reference:
+    // betfairdatabase/processor.py:147-149); every good pair is one row
     val observed = Observation()
     def tally(c: Column, name: String) = count(when(c, 1)).as(name)
     val pairs = parsed.observe(observed, tally(col("total"), "total"),
       tally(step === "withoutData", "withoutData"),
       tally(step === "withoutMeta", "withoutMeta"),
-      tally(corrupt, "corrupt"))
+      tally(corrupt, "corrupt"), tally(good, "rows"))
       .filter(good).select(col("m.*"), col("metaPath"), col("dataPath"))
-    val index = project(racingJoin(flatten(pairs))).cache()
-    val counters = try {
-      val rows = index.count()
-      val n = observed.get.view.mapValues(_.asInstanceOf[Long]).toMap
-      // the optimizer prunes the metrics of an empty listing with the plan
-      require(n.nonEmpty || rows == 0, "build: no counters observed")
-      def get(name: String) = n.getOrElse(name, 0L)
-      Counters(get("total"), get("withoutData"), get("withoutMeta"),
-        get("corrupt"), rows)
-    } catch {
-      case e: Throwable => index.unpersist(); throw e
-    }
-    BuildResult(index, counters)
+    new BuildResult(project(racingJoin(flatten(pairs))), observed)
+  }
+
+  private val ParseMetadata = FunctionIdentifier("bf_parse_metadata")
+
+  /** `from_json(json, metadataSchema)`, built from the `StructType`
+    * itself: Spark's `from_json` hands the schema to the analyzer as DDL
+    * text, which it parses again (cold, about half a second). A native
+    * function-registry builder, registered once per session, as
+    * `graft.fn.Compat.register` does for `strftime`.
+    */
+  private def parseMetadata(spark: SparkSession, json: Column): Column = {
+    val reg = spark.sessionState.functionRegistry
+    if (!reg.functionExists(ParseMetadata))
+      reg.registerFunction(ParseMetadata,
+        new ExpressionInfo(getClass.getName, ParseMetadata.funcName),
+        (children: Seq[Expression]) => children match {
+          case Seq(c) => JsonToStructs(metadataSchema, Map.empty, c)
+          case _ => throw new IllegalArgumentException(
+            s"${ParseMetadata.funcName}(json) takes one argument")
+        })
+    call_function(ParseMetadata.funcName, json)
   }
 
   /** A5-A9 + A12 flattening: one wide select with catalogue/definition
@@ -262,20 +303,20 @@ object IndexPipeline {
       branch(col("priceLadderDefinition.type"),
         col("description.priceLadderDescription.type"))
         .as("priceLadderDescriptionType"),
-      when(isDef, lit(null).cast("string"))
+      when(isDef, lit(null).cast(StringType))
         .otherwise(col("description.lineRangeInfo.marketUnit"))
         .as("lineRangeInfoMarketUnit"),
       branch(col("eachWayDivisor"), col("description.eachWayDivisor"))
         .as("eachWayDivisor"),
       branch(col("raceType"), col("description.raceType")).as("raceType"),
       when(col("runners").isNotNull, size(col("runners")))
-        .cast("int").as("runners"),
+        .cast(IntegerType).as("runners"),
       branch(col("eventTypeId"), col("eventType.id")).as("eventTypeId"),
-      when(isDef, lit(null).cast("string")).otherwise(col("eventType.name"))
+      when(isDef, lit(null).cast(StringType)).otherwise(col("eventType.name"))
         .as("eventTypeName"),
-      when(isDef, lit(null).cast("string")).otherwise(col("competition.id"))
+      when(isDef, lit(null).cast(StringType)).otherwise(col("competition.id"))
         .as("competitionId"),
-      when(isDef, lit(null).cast("string")).otherwise(col("competition.name"))
+      when(isDef, lit(null).cast(StringType)).otherwise(col("competition.name"))
         .as("competitionName"),
       branch(col("eventId"), col("event.id")).as("eventId"),
       branch(col("eventName"), col("event.name")).as("eventName"),

@@ -4,8 +4,14 @@ import java.nio.file.{Files, Path}
 import java.util.concurrent.{CountDownLatch, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
 
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration._
 import scala.jdk.CollectionConverters._
 
+import org.apache.logging.log4j.LogManager
+import org.apache.logging.log4j.core.{LogEvent, Logger => CoreLogger}
+import org.apache.logging.log4j.core.appender.AbstractAppender
+import org.apache.logging.log4j.core.config.Property
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.execution.adaptive.{AQEShuffleReadExec,
   ShuffleQueryStageExec}
@@ -360,13 +366,11 @@ class BetfairDatabaseSpec extends SparkSpec {
       Fixtures.catalogueJson("1.500000001", "Per Market", "WIN", "7",
         "Horse Racing", "York"))
     val c = IndexPipeline.build(spark, dir.toString)
-    try {
-      assert(c.counters.corruptFiles == 0)
-      assert(c.counters.totalMarkets == 1 && c.counters.rowsInserted == 1)
-      val paths = c.index.select("marketMetadataFilePath").collect()
-        .map(_.getString(0)).toSeq
-      assert(paths == Seq(dir.resolve("b/1.500000001.json").toString))
-    } finally c.index.unpersist()
+    val paths = c.index.select("marketMetadataFilePath").collect()
+      .map(_.getString(0)).toSeq
+    assert(c.counters.corruptFiles == 0)
+    assert(c.counters.totalMarkets == 1 && c.counters.rowsInserted == 1)
+    assert(paths == Seq(dir.resolve("b/1.500000001.json").toString))
   }
 
   test("bulk metadata.json: a single object instead of an array pairs " +
@@ -494,25 +498,24 @@ class BetfairDatabaseSpec extends SparkSpec {
 
   test("build: the file reads run in at least defaultParallelism tasks") {
     // AQE coalesces a small shuffle's partitions; the read/extract pass
-    // must stay spread over the cores, or every file is read in one task
+    // must stay spread over the cores, or every file is read in one task.
+    // The final adaptive plan exists once an action has run the index
     val (dir, _) = freshDb()
     val built = IndexPipeline.build(spark, dir.toString)
-    try {
-      val nodes = graft.PlanWalk.allNodesThroughCaches(
-        built.index.queryExecution.executedPlan)
-      val reads = nodes.collect {
-        case r: AQEShuffleReadExec => r
-      }
-      val spread = nodes.collect {
-        case s: ShuffleQueryStageExec
-            if s.shuffle.shuffleOrigin == REPARTITION_BY_NUM => s
-      }
-      assert(spread.size == 1, nodes.mkString("\n"))
-      val stage = spread.head
-      assert(stage.shuffle.numPartitions >=
-        spark.sparkContext.defaultParallelism)
-      assert(!reads.exists(r => r.child.eq(stage) && r.hasCoalescedPartition))
-    } finally built.index.unpersist()
+    assert(built.index.collect().length == 6)
+    val nodes = graft.PlanWalk.allNodes(built.index.queryExecution.executedPlan)
+    val reads = nodes.collect {
+      case r: AQEShuffleReadExec => r
+    }
+    val spread = nodes.collect {
+      case s: ShuffleQueryStageExec
+          if s.shuffle.shuffleOrigin == REPARTITION_BY_NUM => s
+    }
+    assert(spread.size == 1, nodes.mkString("\n"))
+    val stage = spread.head
+    assert(stage.shuffle.numPartitions >=
+      spark.sparkContext.defaultParallelism)
+    assert(!reads.exists(r => r.child.eq(stage) && r.hasCoalescedPartition))
   }
 
   test("build: a tree listed on the executors pairs like one listed on " +
@@ -526,20 +529,16 @@ class BetfairDatabaseSpec extends SparkSpec {
       streamFile(dir.resolve(f"ev$i%02d/$id"), id)
     }
     val built = IndexPipeline.build(spark, dir.toString)
-    try {
-      assert(built.counters == IndexPipeline.Counters(70, 0, 0, 0, 70))
-      assert(built.index.select("marketId").collect().map(_.getString(0))
-        .sorted.toSeq == ids)
-    } finally built.index.unpersist()
+    val got = built.index.select("marketId").collect().map(_.getString(0))
+    assert(built.counters == IndexPipeline.Counters(70, 0, 0, 0, 70))
+    assert(got.sorted.toSeq == ids)
   }
 
   test("build: an empty directory indexes nothing and counts nothing") {
     val empty = Fixtures.tempDir("graftnone").toString
     val built = IndexPipeline.build(spark, empty)
-    try {
-      assert(built.index.count() == 0)
-      assert(built.counters == IndexPipeline.Counters(0, 0, 0, 0, 0))
-    } finally built.index.unpersist()
+    assert(built.index.count() == 0)
+    assert(built.counters == IndexPipeline.Counters(0, 0, 0, 0, 0))
     val (_, db) = freshDb()
     db.index()
     assert(db.insert(empty, pattern = ImportPatterns.flat) ==
@@ -614,12 +613,12 @@ class BetfairDatabaseSpec extends SparkSpec {
   }
 
   test("build over the fixture corpus runs a bounded number of jobs") {
-    // the count measured with the build as one plan over the listing and
-    // the counters observed on the action that fills the index cache
-    // (local[4], AQE on); the build of pairing joins, caches and a tally
-    // action ran 33, and before that, with a count() per counter, 41
-    val MaxBuildJobs = 5
+    // the build and the one write that consumes it, as `index` runs them
+    // (local[4], AQE on): the map stages of its two shuffles and the
+    // write's result stage
+    val MaxBuildJobs = 3
     val (dir, _) = freshDb()
+    val out = Fixtures.tempDir("graftbuildjobs").resolve("index").toString
     val group = s"graft-build-${java.util.UUID.randomUUID}"
     val sentinel = s"$group-sentinel"
     val jobs = new AtomicInteger
@@ -638,13 +637,62 @@ class BetfairDatabaseSpec extends SparkSpec {
     sc.addSparkListener(listener)
     try {
       sc.setJobGroup(group, "IndexPipeline.build")
-      try IndexPipeline.build(spark, dir.toString).index.unpersist()
-      finally sc.clearJobGroup()
+      try {
+        val built = IndexPipeline.build(spark, dir.toString)
+        built.index.write.parquet(out)
+        assert(built.counters.rowsInserted == 6)
+      } finally sc.clearJobGroup()
       sc.setJobGroup(sentinel, "listener sentinel")
       try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
       assert(drained.await(60, TimeUnit.SECONDS))
     } finally sc.removeSparkListener(listener)
     assert(jobs.get <= MaxBuildJobs,
       s"IndexPipeline.build ran ${jobs.get} jobs, more than $MaxBuildJobs")
+  }
+
+  test("build: counters read before the index is consumed throw, not hang") {
+    val (dir, _) = freshDb()
+    val built = IndexPipeline.build(spark, dir.toString)
+    val early = Future(built.counters)(ExecutionContext.global)
+    val thrown = intercept[IllegalStateException](
+      Await.result(early, 2.minutes))
+    assert(thrown.getMessage.contains("before an action consumed"))
+    built.index.write.parquet(
+      Fixtures.tempDir("graftearly").resolve("index").toString)
+    assert(built.counters.rowsInserted == 6)
+  }
+
+  test("insert: a flat insert logs no trivially true equals predicate") {
+    val (dbDir, db) = freshDb()
+    db.index()
+    val srcDir = Fixtures.tempDir("graftflatwarn")
+    Fixtures.write(srcDir.resolve("1.300000004.json"),
+      Fixtures.catalogueJson("1.300000004", "5f Mdn", "WIN", "7",
+        "Horse Racing", "York"))
+    Fixtures.writeLines(srcDir.resolve("1.300000004"),
+      Seq("""{"op":"mcm","mc":[{"id":"1.300000004","rc":[]}]}"""))
+    // Spark's Column logs this warning when `===` compares a column with
+    // itself, as `lit("") === ""` does
+    val logger = LogManager.getLogger("org.apache.spark.sql.Column")
+      .asInstanceOf[CoreLogger]
+    val logged = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val capture = new AbstractAppender("graft-flat-capture", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        logged.add(e.getMessage.getFormattedMessage)
+    }
+    capture.start()
+    logger.addAppender(capture)
+    try assert(db.insert(srcDir.toString, pattern = ImportPatterns.flat)
+      .rowsInserted == 1)
+    finally {
+      logger.removeAppender(capture)
+      capture.stop()
+    }
+    assert(!logged.asScala.exists(_.contains("trivially true")),
+      logged.asScala.mkString("\n"))
+    assert(db.indexDF.filter(col("marketId") === "1.300000004")
+      .select("marketDataFilePath").collect().map(_.getString(0)).toSeq ==
+      Seq(dbDir.resolve("1.300000004").toString))
   }
 }
