@@ -32,8 +32,8 @@ object GraftSession {
       .config("spark.sql.codegen.cache.maxEntries", "5000")
       // Let AQE re-pick the output partitioning INSIDE cache/checkpoint
       // materialization (public conf, default false since SPARK-38410):
-      // the iterative operators persist compact tables (CC's symmetric
-      // edge list, per-round labels, verdict lists) whose cache builds
+      // the iterative operators persist compact tables (CC's per-round
+      // edge and label tables, verdict lists) whose cache builds
       // otherwise freeze the full shuffle-partition fan-out, so every
       // fixpoint round runs `cpus` tiny tasks over KB-scale blocks — the
       // dominant cost of the gate/CC family at bench scale. With the

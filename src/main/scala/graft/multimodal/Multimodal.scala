@@ -1135,9 +1135,9 @@ object Multimodal {
   /** Image-hash duplicate-cluster assignment — the d105 query, d46's
     * shape on the multimodal pillar: the d98 Hamming≤3 pair set feeds
     * the shared min-label connected-components loop
-    * ([[graft.ops.TextOps.connectedComponents]] — pointer jumping,
-    * O(log n) rounds, the same machinery every text dedup family member
-    * uses), and each clustered image carries its component label and
+    * ([[graft.ops.TextOps.connectedComponents]], the same machinery
+    * every text dedup family member uses), and each clustered image
+    * carries its component label and
     * component size. Together with d98 (pairs), d104 (incremental), and
     * the streaming sink, the perceptual family now has the full
     * pairs→clusters→keeper story the minhash family has.

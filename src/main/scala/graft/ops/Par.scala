@@ -10,12 +10,12 @@ import org.apache.spark.sql.SparkSession
   * Spark's scheduler happily runs several jobs at once inside one
   * application; actions are sequential only because one driver thread
   * calls them sequentially (optimization guide §2.6). A query that runs
-  * an EAGER computation during construction — a connected-components
-  * fixpoint (each round a lazy-checkpoint job + a convergence probe), a
+  * an EAGER computation during construction — connected components
+  * (checkpoint jobs, and per-round jobs on the distributed path), a
   * composed gate — while independent inputs of its final join wait their
   * turn inside the final action, primes those inputs (persist + count)
   * on sibling driver threads instead: with default FIFO scheduling their
-  * tasks back-fill the executors the fixpoint's small round jobs and
+  * tasks back-fill the executors the fixpoint's small jobs and
   * straggler tails leave idle — on a cluster exactly as on local[N].
   *
   * Determinism: each branch's result is a pure function of its inputs

@@ -1,7 +1,11 @@
 package graft.ops
 
+import java.util.concurrent.TimeoutException
+import scala.concurrent.Await
+import scala.concurrent.duration._
+import org.apache.spark.SparkContext
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Observation, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables._
@@ -2339,7 +2343,7 @@ object TextOps {
     * a map expression and the exact-dup keeper one window on the
     * fingerprint, so no corpus-corpus join exists for them at all. Stage 3
     * reuses the d26/d46 candidate machinery (equi-join candidates,
-    * O(log n)-round components) and joins back as a single
+    * [[connectedComponents]]) and joins back as a single
     * shuffled-hash-hinted left join on doc_id (labels carry one row per
     * CLUSTERED doc only — no sort, no SMJ).
     */
@@ -2486,12 +2490,9 @@ object TextOps {
     * the minimum doc_id reachable from it — the "pick one representative per
     * duplicate group" step of corpus dedup.
     *
-    * Scale: iterative min-label propagation (the standard distributed
-    * connected-components loop; converges in O(diameter) rounds, each round
-    * one equi-join + partial-aggregated min). Near-dup graphs are
-    * short-diameter (dup groups are near-cliques), so rounds stay single
-    * digits; each round's shuffle carries one compact (doc, label) row per
-    * clustered doc, never the corpus.
+    * Scale: [[connectedComponents]] over the pair list, never the corpus:
+    * one union-find task while the pairs fit an executor, large-star /
+    * small-star rounds above that.
     */
   def d46DedupClusters(s: SparkSession, d: String): DataFrame = {
     val edges = d26MinhashLsh(s, d).select(col("d1"), col("d2"))
@@ -2503,135 +2504,206 @@ object TextOps {
   }
 
   /** Connected components of an undirected edge list (`d1`, `d2` node-id
-    * columns) via min-label propagation with pointer jumping: every node ends
-    * labeled with the minimum node id in its component. Returns
-    * (doc_id, component).
+    * columns): every node ends labeled with the minimum node id in its
+    * component. Returns (doc_id, component).
     *
-    * Each round is one equi-join (labels against the symmetrized edges —
-    * persisted pre-partitioned on the join key, so the cached partitioning
-    * satisfies the join's required distribution and only the small label
-    * table moves per round), one partial-aggregated min, and a label-table
-    * self-join that shortcuts each node's label to its label's label. The
-    * shortcut is pointer doubling: label reach doubles per round, so even a
-    * pure path graph converges in O(log n) rounds, not O(diameter) — the
-    * near-clique dup groups of a real corpus still finish in 1-2. Labels are
-    * monotone non-increasing, so convergence is an exact scalar label-sum
-    * comparison in DECIMAL(38,0) (a raw Long sum could wrap at
-    * billions-of-nodes scale and fake a fixpoint one round early), not a
-    * join-diff. The round cap ([[ccMaxRounds]] = 50, ~2^50 reach) can only
-    * trip on a logic bug, never on graph shape — it still fails loudly
-    * rather than return a silently split component.
+    * Two paths, one answer. The edge list is checkpointed once, and that
+    * checkpoint's own job counts it (an [[org.apache.spark.sql.Observation]]
+    * on the frame, so the count costs no job):
+    *  - at most `localEdgeBound` edges ([[unionFindEdgeBound]] by default):
+    *    [[UnionFind]] folds every edge in ONE executor task. Two jobs per
+    *    call: the edge checkpoint and the label checkpoint. At the sizes
+    *    the suite's dedup graphs have, the fixed per-job cost of the
+    *    distributed rounds, not the data, sets the latency;
+    *  - above it, or when the count does not arrive: the distributed
+    *    large-star / small-star rounds (Kiveris et al., "Connected
+    *    Components in MapReduce and Beyond", SoCC 2014) of
+    *    [[starComponents]].
+    *
+    * Input contract, both paths: an edge with a null endpoint is no edge.
+    * It is dropped first, and its other endpoint is labeled only when
+    * another edge names it. A self-loop makes its node a node: a node whose
+    * only edge is a self-loop is labeled as itself. Node ids are integral:
+    * the union-find folds them as `long` and casts the labels back.
     */
   def connectedComponents(edges: DataFrame,
-      reg: CacheRegistry = CacheRegistry.harness): DataFrame = {
+      reg: CacheRegistry = CacheRegistry.harness,
+      localEdgeBound: SparkContext => Long = unionFindEdgeBound): DataFrame = {
+    val counted = Observation()
     // one eager localCheckpoint truncates the caller's edge lineage before
-    // anything else: the edge plan executes exactly ONCE (the symmetric
-    // union below used to evaluate it twice), and every propagation
-    // round's analysis walks a 3-node LogicalRDD tree instead of the full
-    // caller plan — decisive for deep composed edge plans (the round-11
-    // incremental Hamming pairs inflated each CC round ~5× through
-    // optimizer cost alone, measured at sf0.1: 18 s → 4 s for the same
-    // 35k-edge graph)
-    val (e0, eckRdd) =
-      truncate(edges.select(col("d1"), col("d2")), eager = true)
+    // anything else: the edge plan executes exactly ONCE, and each later
+    // plan walks a 3-node LogicalRDD tree instead of the full caller plan —
+    // decisive for deep composed edge plans (the round-11 incremental
+    // Hamming pairs inflated each CC round ~5× through optimizer cost
+    // alone, measured at sf0.1: 18 s → 4 s for the same 35k-edge graph)
+    val (e0, eckRdd) = truncate(
+      edges.select(col("d1"), col("d2"))
+        .filter(col("d1").isNotNull && col("d2").isNotNull)
+        .observe(counted, count(lit(1)).as("edges")),
+      eager = true)
     // The incremental callers' edge plans end in union/anti-join stages
     // whose CHECKPOINTED layout concatenates every upstream stage's
     // partitions (AQE coalesces shuffle outputs, but a checkpoint captures
     // the raw final-stage layout — d126's edge table arrives as 161
-    // near-empty partitions for ~35k edges), and sym below doubles it via
-    // the symmetric union: 322 map tasks per materialization, measured as
-    // the single largest job of the d126 fixpoint (~1.1 s at sf0.1).
-    // Narrow-coalesce back to the session's parallelism — the exact mirror
-    // of Spread.byKey (guide §2.5: match partition count to cores from
-    // both sides), a no-op whenever the layout is already at or under core
-    // count, and partitioning-only (results unchanged). At production
-    // scale a TB edge list arrives with >= parallelism partitions of real
-    // data and keeps its layout — this only collapses the tiny-partition
-    // overhang that AQE cannot see through a checkpoint.
-    val par = e0.sparkSession.sparkContext.defaultParallelism
+    // near-empty partitions for ~35k edges). Narrow-coalesce back to the
+    // session's parallelism — the exact mirror of Spread.byKey (guide
+    // §2.5: match partition count to cores from both sides), a no-op
+    // whenever the layout is already at or under core count, and
+    // partitioning-only (results unchanged).
+    val sc = e0.sparkSession.sparkContext
+    val par = sc.defaultParallelism
     val e = if (eckRdd.getNumPartitions > par) e0.coalesce(par) else e0
-    val sym = e
-      .union(e.select(col("d2").as("d1"), col("d1").as("d2")))
-      // pre-partition on the per-round join key: each propagation round then
-      // reuses the cached hash partitioning instead of re-exchanging the
-      // (much larger) edge side
-      .repartition(col("d2"))
-      .persist()
-    // init fused with the first propagation round: every node appears as d1
-    // in the symmetric edge list, so min(least(d1, d2)) per d1 IS
-    // "min over self and direct neighbors" — one aggregation replaces the
-    // distinct-nodes shuffle plus a whole propagation round
-    var labels = sym.groupBy(col("d1").as("doc_id"))
-      .agg(min(least(col("d1"), col("d2"))).as("component"))
-      .persist()
-    // frees the blocks backing the previous round's label table. Round 0 is
-    // a normal cache (Dataset.unpersist → CacheManager); later rounds are
-    // localCheckpoints, whose blocks live at the RDD level where
-    // Dataset.unpersist (and spark.catalog.clearCache) CANNOT see them —
-    // they must be released on the LogicalRDD's backing RDD directly, or
-    // O(log n) rounds of label tables pile up in executor storage until GC
-    val initialLabels = labels
-    var freePrevious: () => Unit = () => { initialLabels.unpersist(); () }
-    var prevSum = labelSum(labels)
-    var converged = false
-    var rounds = 0
-    var finalCkRdd: Option[RDD[_]] = None
-    while (!converged && rounds < ccMaxRounds) {
-      val viaNeighbor = sym
-        .join(labels, sym("d2") === labels("doc_id"))
-        .select(sym("d1").as("doc_id"), col("component"))
-      val hopped = labels.select("doc_id", "component").union(viaNeighbor)
+    val idType = e.select(least(col("d1"), col("d2"))).schema.head.dataType
+    // Spark completes an observation from the listener bus, after the
+    // checkpoint's action has returned: wait for it, bounded. The
+    // optimizer prunes the metrics of an empty edge plan with the plan
+    // (an empty row: zero edges).
+    val edgeCount =
+      try {
+        Await.ready(counted.future, CountWait)
+        Some(counted.get.getOrElse("edges", 0L).asInstanceOf[Long])
+      } catch { case _: TimeoutException => None }
+    val (labels, labelsRdd) =
+      if (edgeCount.exists(_ <= localEdgeBound(sc))) {
+        val pair = Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong)
+        val folded = e.select(col("d1").cast("long"), col("d2").cast("long"))
+          .as(pair).coalesce(1)
+          .mapPartitions { it =>
+            val uf = new UnionFind
+            it.foreach { case (a, b) => uf.union(a, b) }
+            uf.labels
+          }(pair)
+          .select(col("_1").cast(idType).as("doc_id"),
+            col("_2").cast(idType).as("component"))
+        truncate(folded, eager = true)
+      } else starComponents(e)
+    // the edge checkpoint's blocks fed only the labels, which are
+    // materialized now; release them (RDD-level blocks — Dataset.unpersist
+    // and clearCache cannot see them)
+    eckRdd.unpersist(false)
+    // the label checkpoint backs the RETURNED table; register its RDD in
+    // the caller's registry for release once the labels' consumer has run
+    // its action (a released localCheckpoint cannot be re-executed)
+    reg.addRdd(labelsRdd)
+    labels
+  }
+
+  /** How long [[connectedComponents]] waits for its edge count before it
+    * takes the distributed rounds. The count arrives through the listener
+    * bus moments after the edge checkpoint's job.
+    */
+  private val CountWait = 10.seconds
+
+  /** Bytes of heap a [[UnionFind]] fold needs per edge at its peak,
+    * measured where it is worst: every edge brings two new nodes, and the
+    * node count has just passed a power of two, so every array has just
+    * doubled. A fold of 4,195,304 such edges (8,390,608 nodes, just past
+    * 2^23) ran out of memory in a JVM at -Xmx440m and finished at -Xmx460m
+    * (ParallelGC): 110–115 bytes per edge, rounded up.
+    */
+  private val UnionFindBytesPerEdge = 128L
+
+  /** How far under the bound a fold stays: the fold's arrays are plain
+    * heap, outside Spark's memory accounting, and share the executor with
+    * the cached blocks that storage memory holds.
+    */
+  private val UnionFindSafety = 4L
+
+  /** The largest edge count [[connectedComponents]] folds in one task: the
+    * smallest block manager's storage memory (the driver's included, a
+    * conservative choice) over [[UnionFindBytesPerEdge]] ×
+    * [[UnionFindSafety]]. Max, not remaining, memory: the choice of path
+    * does not depend on what happens to be cached.
+    */
+  private[ops] def unionFindEdgeBound(sc: SparkContext): Long =
+    sc.getExecutorMemoryStatus.values.map(_._1).min /
+      (UnionFindBytesPerEdge * UnionFindSafety)
+
+  /** The distributed path of [[connectedComponents]]: alternating
+    * large-star and small-star rounds (Kiveris et al., SoCC 2014) over the
+    * edge list `e`, each edge held oriented as (a, b) with a ≤ b. Returns
+    * the labels and their checkpoint's backing RDD.
+    *
+    * Per round, over the current edges G:
+    *  - the labels ℓ(v) = min of v and its neighbors (one groupBy). The
+    *    label sum of G is the convergence test: exact, in DECIMAL(38,0) (a
+    *    raw Long sum could wrap at billions of nodes and fake a fixpoint);
+    *  - large-star: each edge (a, b) becomes (ℓ(a), b), connecting every
+    *    larger neighbor of a to a's smallest neighbor (a join on a);
+    *  - small-star: per node v, every smaller-or-equal neighbor of v and v
+    *    itself connect to the minimum of those neighbors (a window min
+    *    over the edges' larger end), then distinct.
+    * Both stars keep every node and its connectivity. Self-loops ride
+    * along: they keep a node whose only edge is one, and they only add
+    * edges inside a component.
+    *
+    * Why the label-sum test is exact, and why n round pairs bound the
+    * loop. Labels only fall: large-star hands each node its smaller
+    * neighbors' labels, and small-star the minimum of its smaller
+    * neighbors. Let c be a component's minimum id, and say a node is
+    * right when ℓ = c. Both stars keep c's neighbors adjacent to c, so a
+    * right node stays right. If some node is wrong, the component is
+    * still connected and c's neighbors are right, so an edge (x, y) joins
+    * a right x ≠ c to a wrong y. If y > x, large-star joins y to
+    * ℓ(x) = c. If y < x, small-star at x joins ℓ(y) to c, so ℓ(y) turns
+    * right; when ℓ(y) was right already, large-star at ℓ(y) joins y to c.
+    * So every round pair that starts with a wrong node ends with fewer
+    * wrong nodes, and the label sum falls. Equal sums therefore mean the
+    * labels are final, and the loop takes at most n round pairs on n
+    * nodes, the last of which sees no change. In practice it is far
+    * fewer: in a model of these rounds, shuffled-id paths of 10³ and 10⁵
+    * nodes took 9 and 14 round pairs, and random trees of 10³–10⁵ nodes
+    * 6–9.
+    */
+  private def starComponents(e: DataFrame): (DataFrame, RDD[_]) = {
+    def labelsOf(g: DataFrame): DataFrame =
+      g.select(col("a").as("doc_id"), col("a").as("component"))
+        .union(g.select(col("b"), col("a")))
         .groupBy("doc_id").agg(min("component").as("component"))
-      // pointer jump: a node's label is itself a node id (min over a subset
-      // of the component), so following it one more hop — label(label(v)) —
-      // is always defined and only decreases. This collapses long chains
-      // exponentially while costing one self-join of the compact label table.
-      val raw = hopped.as("a")
-        .join(
-          hopped.select(col("doc_id").as("jc"), col("component").as("jcc"))
-            .as("b"),
-          col("a.component") === col("b.jc"), "left")
-        .select(
-          col("a.doc_id"),
-          coalesce(col("b.jcc"), col("a.component")).as("component"))
-      // the self-join references the round's plan twice, so without
-      // truncation lineage doubles per round (exponential plan size by round
-      // ~10). [[truncate]] cuts it; the label table is one compact row per
-      // clustered doc, so executor-local blocks are cheap.
-      // LAZY checkpoint (eager = false): the convergence probe right below
-      // is itself a full-partition action, so it materializes the
-      // checkpoint blocks AND computes the label sum in ONE job — an eager
-      // checkpoint ran a separate count() job first, doubling the
-      // per-round job count (the fixpoint's cost at bench scale IS the
-      // per-round job floor × rounds; guide §1.2 step 1).
-      val (next, ckRdd) = truncate(raw, eager = false)
-      val nextSum = labelSum(next)
-      converged = nextSum.compareTo(prevSum) == 0
-      prevSum = nextSum
-      freePrevious()
-      freePrevious = () => { ckRdd.unpersist(false); () }
-      finalCkRdd = Some(ckRdd)
+    var g = e.select(least(col("d1"), col("d2")).as("a"),
+      greatest(col("d1"), col("d2")).as("b"))
+    // every round's tables are LAZY checkpoints (eager = false): the
+    // label-sum probe is itself a full-partition action, so it
+    // materializes this round's edge and label checkpoints AND computes
+    // the sum in one job chain — an eager checkpoint would add a count()
+    // job per table. Their blocks live at the RDD level, where
+    // Dataset.unpersist and clearCache cannot see them, so each round
+    // frees the previous round's directly.
+    var (labels, labelsRdd) = truncate(labelsOf(g), eager = false)
+    val first = labels.agg(labelSumCol, count(lit(1))).head()
+    var sum = first.getDecimal(0)
+    val nodes = first.getLong(1)
+    var freeEdges: () => Unit = () => ()
+    var converged = nodes == 0
+    var rounds = 0L
+    while (!converged) {
+      // returning a partial labeling would silently split one true
+      // component into several: past the proven bound, fail loudly
+      if (rounds >= nodes) throw new IllegalStateException(
+        s"connectedComponents did not converge within $nodes round pairs " +
+          s"on $nodes nodes, the proven bound: a logic bug")
+      val stars = g.join(labels, col("a") === col("doc_id"))
+        .select(col("component").as("p"), col("b").as("c"))
+        .withColumn("m", min("p").over(Window.partitionBy("c")))
+      val (nextG, gRdd) = truncate(
+        stars.select(col("m").as("a"), col("p").as("b"))
+          .union(stars.select(col("m"), col("c")))
+          .distinct(),
+        eager = false)
+      val (next, nextRdd) = truncate(labelsOf(nextG), eager = false)
+      val nextSum = next.agg(labelSumCol).head().getDecimal(0)
+      converged = nextSum.compareTo(sum) == 0
+      freeEdges()
+      freeEdges = () => { gRdd.unpersist(false); () }
+      labelsRdd.unpersist(false)
+      g = nextG
       labels = next
+      labelsRdd = nextRdd
+      sum = nextSum
       rounds += 1
     }
-    sym.unpersist()
-    // the edge checkpoint's blocks fed only sym's materialization; sym is
-    // done, so release them (RDD-level blocks — Dataset.unpersist and
-    // clearCache cannot see them)
-    eckRdd.unpersist(false)
-    // the last round's checkpoint backs the RETURNED labels table; its
-    // blocks live at the RDD level where Dataset.unpersist / clearCache
-    // cannot see them, so register the backing RDD in the caller's registry
-    // for release once the labels' consumer has run its action (a released
-    // localCheckpoint cannot be re-executed — lineage is truncated)
-    finalCkRdd.foreach(reg.addRdd)
-    // returning a partial labeling would silently split one true component
-    // into several — fail loudly instead
-    if (!converged) throw new IllegalStateException(
-      s"connectedComponents did not converge within $ccMaxRounds rounds " +
-        "(pointer jumping covers 2^rounds reach — this is a logic bug, " +
-        "not a graph-shape limit)")
-    labels
+    freeEdges()
+    (labels, labelsRdd)
   }
 
   /** The condensed edge list of an incremental CC step: each new edge's
@@ -2655,7 +2727,9 @@ object TextOps {
     * prior labels), so [[incrementalConnectedComponents]] would omit it
     * where a full recompute over the union edge list would emit it labeled
     * as itself. Callers with general edge lists must pre-filter self-loops
-    * and register such nodes as singletons themselves.
+    * and register such nodes as singletons themselves. An edge with a null
+    * endpoint is dropped here too (`d1 =!= d2` is null for it), the same
+    * contract as [[connectedComponents]]': it is no edge.
     */
   private[ops] def condenseEdges(priorLabels: DataFrame, newEdges: DataFrame)
       : DataFrame = {
@@ -2683,10 +2757,11 @@ object TextOps {
     * recompute (IncrementalCcSpec), because:
     *
     *  - the condensed graph ([[condenseEdges]]) has one node per TOUCHED
-    *    prior component plus the batch's new docs; running the pointer-
-    *    jumping fixpoint over it yields, per merged component, the min over
-    *    {touched components' labels} ∪ {new doc ids} — and a prior label is
-    *    already the min of its members, so that IS the union graph's min;
+    *    prior component plus the batch's new docs; running
+    *    [[connectedComponents]] over it yields, per merged component, the
+    *    min over {touched components' labels} ∪ {new doc ids} — and a prior
+    *    label is already the min of its members, so that IS the union
+    *    graph's min;
     *  - prior rows relabel through one broadcast-size map join
     *    (old label → merged label; at most one row per touched component);
     *    rows of untouched components miss the map and pass through
@@ -2785,8 +2860,8 @@ object TextOps {
     *    edges strictly inside its own component; no other component gains
     *    or loses an edge). At most one label per deleted doc: a compact,
     *    broadcastable set.
-    *  - those components' SURVIVING edges re-run the pointer-jumping
-    *    fixpoint from scratch — O(touched-component edges), never the
+    *  - those components' SURVIVING edges re-run [[connectedComponents]]
+    *    from scratch — O(touched-component edges), never the
     *    corpus. Both endpoint semi-joins key on the (broadcast)
     *    surviving-touched-member set, so the accumulated pair state is
     *    scanned map-side and never shuffled; an edge's endpoints share a
@@ -3406,22 +3481,13 @@ object TextOps {
       .limit(20)
   }
 
-  /** With pointer jumping the label frontier doubles per round, so 50 rounds
-    * cover components of diameter ~2^50; the cap exists to fail loudly on a
-    * logic bug, not to bound real graphs.
+  /** The exact label sum of a (doc_id, component) table, the convergence
+    * test of [[starComponents]]: DECIMAL(38,0) so the sum of billions of
+    * 64-bit ids cannot wrap (non-ANSI Long sum wraps silently, and a
+    * wrapped collision would end the loop one round early).
     */
-  private val ccMaxRounds = 50
-
-  /** Exact label-sum for the convergence test: DECIMAL(38,0) so the sum of
-    * billions of 64-bit ids cannot wrap (non-ANSI Long sum wraps silently,
-    * and a wrapped collision would end the loop one round early).
-    */
-  private def labelSum(labels: DataFrame): java.math.BigDecimal =
-    labels
-      .agg(coalesce(
-        sum(col("component").cast("decimal(38,0)")),
-        lit(0).cast("decimal(38,0)")))
-      .head().getDecimal(0)
+  private val labelSumCol: Column = coalesce(
+    sum(col("component").cast("decimal(38,0)")), lit(0).cast("decimal(38,0)"))
 
   /** t135 PageRank damping factor and fixed iteration count (fixed so the
     * trajectory is deterministic and the oracle can unroll it — the
