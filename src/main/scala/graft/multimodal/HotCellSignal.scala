@@ -2,7 +2,7 @@ package graft.multimodal
 
 import java.util.concurrent.atomic.AtomicLong
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.util.QueryExecutionListener
@@ -13,10 +13,13 @@ import org.apache.spark.sql.util.QueryExecutionListener
   * candidate generation — a well-characterized, spec-quantified recall
   * trade (HammingCapSpec) — but in production nothing flagged WHEN a cell
   * actually went hot, so recall loss at scale was invisible until an
-  * oracle run caught it. Every hot-cell exclusion table now carries a
-  * `Dataset.observe` metric: computed inline with the job itself (the
-  * hot table already materializes to drive the exclusion anti-join — no
-  * second scan, no extra action), named under [[MetricPrefix]], and read
+  * oracle run caught it. Both paths of
+  * [[Multimodal.incrementalHammingPairs]] carry a `Dataset.observe`
+  * metric computed inline with their own job, with no second scan and no
+  * extra action: the distributed path on its hot-cell table, which
+  * already materializes to drive the exclusion anti-join, and the one-task
+  * fold on the totals it emits as a marker row. Named under
+  * [[MetricPrefix]], the metrics are read
   * back by a per-session QueryExecutionListener that logs a warning and
   * bumps process-wide counters whenever a query excluded at least one
   * cell. A metrics deployment taps the same named observations from its
@@ -27,8 +30,9 @@ import org.apache.spark.sql.util.QueryExecutionListener
   * [[hotQueries]] is eventually (the listener bus is async) incremented
   * and a warning logged naming the metric and the excluded-cell count.
   * The per-metric numbers are a detection signal, not an exact audit: a
-  * plan that references the same exclusion table in several subtrees
-  * re-executes (and so re-counts) it per subtree — zero iff no hot cell,
+  * plan that executes the same exclusion table or fold several times (in
+  * several subtrees, or once more to sample a range partitioning)
+  * re-counts it each time — zero iff no hot cell,
   * which is the property an operator alerts on.
   */
 object HotCellSignal {
@@ -54,17 +58,18 @@ object HotCellSignal {
       new java.util.WeakHashMap[SparkSession, java.lang.Boolean]))
   private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
-  /** Wrap a hot-cell table (`tb`, `occ` columns) with a uniquely-named
-    * observation and make sure the session's listener is installed. Names
-    * are unique per call, so composed pipelines (several incremental
-    * Hamming steps inside one final plan — d118/d119) can never collide
-    * on the CollectMetrics name check.
+  /** Wrap `df` with a uniquely-named observation of its hot-cell totals
+    * (`cells` and `hashes`, two aggregates over its rows) and make sure the
+    * session's listener is installed. Names are unique per call, so
+    * composed pipelines (several incremental Hamming steps inside one
+    * final plan — d118/d119) can never collide on the CollectMetrics name
+    * check.
     */
-  def attach(hot: DataFrame): DataFrame = {
-    register(hot.sparkSession)
-    hot.observe(s"$MetricPrefix.${nextId.incrementAndGet()}",
-      count(lit(1)).as("n_hot_cells"),
-      coalesce(sum("occ"), lit(0L)).as("n_excluded_hashes"))
+  def attach(df: DataFrame, cells: Column, hashes: Column): DataFrame = {
+    register(df.sparkSession)
+    df.observe(s"$MetricPrefix.${nextId.incrementAndGet()}",
+      coalesce(cells, lit(0L)).as("n_hot_cells"),
+      coalesce(hashes, lit(0L)).as("n_excluded_hashes"))
   }
 
   private def register(s: SparkSession): Unit =

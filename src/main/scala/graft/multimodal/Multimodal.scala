@@ -2,10 +2,14 @@ package graft.multimodal
 
 import java.awt.image.BufferedImage
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
+import java.util.concurrent.TimeoutException
 import javax.imageio.ImageIO
 import javax.sound.sampled.{AudioFileFormat, AudioFormat, AudioInputStream, AudioSystem}
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import scala.concurrent.Await
+
+import org.apache.spark.SparkContext
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Observation, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -594,69 +598,30 @@ object Multimodal {
     * at zero extra scan cost — the metric rides the exclusion anti-join's
     * own execution.
     */
-  private def hotBuckets(buckets: DataFrame, cap: Int): DataFrame =
-    HotCellSignal.attach(
-      buckets.groupBy("tb").agg(count(lit(1)).as("occ"))
-        .filter(col("occ") > cap))
-      .select("tb")
+  private def hotBuckets(buckets: DataFrame, cap: Int): DataFrame = {
+    val hot = buckets.groupBy("tb").agg(count(lit(1)).as("occ"))
+      .filter(col("occ") > cap)
+    HotCellSignal.attach(hot, count(lit(1)), sum("occ")).select("tb")
+  }
 
   /** All pairs at Hamming distance ≤ `maxHamming` over a (doc_id, ahash)
-    * table. Two disjoint populations, two machineries:
-    *
-    *  1. identical-hash pairs (Hamming 0) — a plain self-equi-join on the
-    *     hash value: exact, bucket-free, and quadratic only in
-    *     duplicate-class size, the irreducible output. A class collapsed
-    *     onto ONE hash value (a billion re-uploads of one image) never
-    *     touches bucket occupancy at all.
-    *  2. cross-hash pairs (Hamming 1..max) — the rotated-window bucket
-    *     join over DISTINCT hash values only ([[distinctHashBuckets]]),
-    *     df-capped per cell ([[HammingBucketCap]]), Hamming-refined
-    *     map-side, deduped at HASH level, then expanded back to doc pairs
-    *     through two member equi-joins (output-sized).
-    *
-    * The candidate join is therefore quadratic in per-cell DISTINCT-hash
-    * occupancy — bounded by the cap — never in document counts; the
-    * pigeonhole exact-recall guarantee holds verbatim whenever no clean
-    * window of a pair is hot (always, below 64M distinct hashes/window at
-    * the default cap). Shared by the image (d98) and audio (d102)
-    * near-dup ops; the DuckDB oracles brute-force ground truth, so recall
-    * is checked, not assumed.
+    * table, ordered by (d1, d2): [[incrementalHammingPairs]] with an empty
+    * prior, where every pair is new. Its exact, bucket and expansion steps
+    * then reduce to the one-shot's: identical-hash pairs by equi-join on
+    * the value (bucket-free, quadratic only in duplicate-class size, the
+    * irreducible output), cross-hash pairs over the DISTINCT hash values'
+    * rotated-window cells ([[distinctHashBuckets]]), capped per cell
+    * ([[HammingBucketCap]]) and expanded back to doc pairs. The same two
+    * paths, the same null contract and the same [[HotCellSignal]] apply.
+    * Shared by the image (d98) and audio (d102) near-dup ops and d118; the
+    * DuckDB oracles brute-force ground truth, so recall is checked, not
+    * assumed.
     */
   private[multimodal] def hammingPairs(hashes: DataFrame, maxHamming: Int,
-      bucketCap: Int = HammingBucketCap): DataFrame = {
-    require(maxHamming <= 3,
-      s"exact recall needs maxHamming <= 3 with 4 disjoint windows")
-    import graft.ops.CacheRegistry
-    val exact = hashes.as("a")
-      .join(hashes.as("b"),
-        col("a.ahash") === col("b.ahash") && col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("d1"), col("b.doc_id").as("d2"),
-        lit(0L).as("hamming"))
-    // persist(): the compact bucket-row table (4 rows per DISTINCT hash)
-    // feeds the occupancy aggregation, its anti-join, and both candidate
-    // join sides — without it the distinct shuffle re-runs per consumer
-    val buckets = CacheRegistry.harness.add(
-      distinctHashBuckets(hashes).persist())
-    val cold = buckets.join(hotBuckets(buckets, bucketCap), Seq("tb"),
-      "left_anti")
-    // persist(): the hash-level pair set (output-bound, 3 longs per pair)
-    // feeds both member-expansion joins
-    val hashPairs = CacheRegistry.harness.add(cold.as("a")
-      .join(cold.as("b"),
-        col("a.tb") === col("b.tb") && col("a.ahash") < col("b.ahash"))
-      .select(col("a.ahash").as("h1"), col("b.ahash").as("h2"),
-        bit_count(col("a.ahash").bitwiseXOR(col("b.ahash"))).cast("long")
-          .as("hamming"))
-      .filter(col("hamming") <= maxHamming)
-      .distinct()
-      .persist())
-    val cross = hashPairs
-      .join(hashes.select(col("doc_id").as("da"), col("ahash").as("h1")), "h1")
-      .join(hashes.select(col("doc_id").as("db"), col("ahash").as("h2")), "h2")
-      .select(least(col("da"), col("db")).as("d1"),
-        greatest(col("da"), col("db")).as("d2"), col("hamming"))
-    exact.unionByName(cross).orderBy("d1", "d2")
-  }
+      bucketCap: Int = HammingBucketCap,
+      localRowBound: SparkContext => Long = hammingFoldRowBound): DataFrame =
+    incrementalHammingPairs(hashes.filter(lit(false)), hashes, maxHamming,
+      bucketCap, localRowBound).orderBy("d1", "d2")
 
   /** Land a compacted (doc_id, ahash) hash state as the Hamming family's
     * 100 TB serving layout: TWO bucketed tables — member rows bucketed on
@@ -819,16 +784,43 @@ object Multimodal {
       selfSharedFrames(nb).unionByName(crossSharedFrames(nb, state)))
   }
 
-  /** Near-dup pairs of one incremental step over perceptual hashes — the
-    * d84 `pairsFromBands` pattern with [[hammingPairs]]' two-population
-    * machinery: identical-hash pairs via plain equi-joins (batch self +
-    * batch-vs-prior — bucket-free, skew-proof), cross-hash pairs via the
-    * df-capped distinct-hash bucket join (batch hashes self-pair and
-    * probe the PRIOR-ONLY hash values), expanded to doc pairs keeping
-    * only pairs with ≥1 batch member (prior-vs-prior pairs were emitted
-    * by earlier steps). `prior` must not contain the batch's own doc_ids;
-    * the `=!=` guard degrades an accidental overlap to missed cross
-    * pairs, never corrupt self-pairs.
+  /** Near-dup pairs of one incremental step over perceptual hashes: every
+    * pair at Hamming distance ≤ `maxHamming` with at least one member in
+    * `batch` (prior-vs-prior pairs were emitted by earlier steps), as
+    * (d1 < d2, hamming). Two populations:
+    *
+    *  1. identical-hash pairs (Hamming 0): batch with batch, and batch with
+    *     prior, matched on the hash value — bucket-free and skew-proof;
+    *  2. cross-hash pairs (Hamming 1..max): the DISTINCT hash values of
+    *     prior ∪ batch in their four rotated 16-bit window cells (disjoint
+    *     windows covering every bit once, so a Hamming ≤ 3 pair shares at
+    *     least one clean window: pigeonhole, exact recall). A cell holding
+    *     more than `bucketCap` distinct hashes is hot and pairs nothing;
+    *     in each cold cell, batch hashes pair with each other and with the
+    *     prior-only hashes. The hash pairs expand to doc pairs with ≥ 1
+    *     batch member.
+    *
+    * Two paths, one answer (as a multiset). Both sides are flagged as
+    * (doc_id, ahash, nw) and checkpointed once, and that checkpoint's own
+    * job counts the rows (an [[org.apache.spark.sql.Observation]], so the
+    * count costs no job):
+    *  - at most `localRowBound` rows ([[hammingFoldRowBound]] by default,
+    *    storage memory / (96 B per row × 4): 4.5M rows in a 3 GiB driver):
+    *    [[HammingFold]] folds every row in ONE executor task and emits the
+    *    pairs from an iterator, inside the caller's job. One job per call,
+    *    the checkpoint; at the sizes of the suite's hash tables the fixed
+    *    per-job cost of the distributed joins, not the data, sets latency;
+    *  - above it, or when the count does not arrive: the distributed bucket
+    *    join over the checkpoint, the upstream plan still run once.
+    * Both paths attach a [[HotCellSignal]] observation to their own job.
+    *
+    * Input contract, both paths: a row with a null `doc_id` or a null
+    * `ahash` is no row. It is dropped first, so it pairs with nothing and
+    * counts toward no cell's occupancy. Doc ids are integral: the fold
+    * reads them as `long` and the output casts them back to the input's
+    * type. `prior` must not contain the batch's own doc_ids; the
+    * ids-differ guard degrades an accidental overlap to missed exact pairs,
+    * never corrupt self-pairs.
     *
     * Occupancy is computed over the distinct hashes of prior ∪ batch —
     * the same cell counts the one-shot sees — so multi-batch == one-shot
@@ -837,16 +829,77 @@ object Multimodal {
     * on but already-emitted pairs are never retracted (the cap is
     * monotone best-effort, like every append-only dedup state here).
     *
-    * Per-batch cost: hash ONLY the batch (one decode each); the probe
-    * touches ≤ 4×|batch distinct hashes| cells of the accumulated bucket
-    * table — store it bucketed on tb and the probe side bucket-prunes to
-    * those cells (see the round-11 compaction layout); member expansion
-    * joins are output-sized.
+    * Per-batch cost: hash ONLY the batch (one decode each); prior hashes
+    * are 8 bytes per doc. At scale the state is served from the bucketed
+    * layout instead ([[probeHammingBucketedState]]), whose probe touches
+    * ≤ 4×|batch distinct hashes| cells.
     */
   def incrementalHammingPairs(prior: DataFrame, batch: DataFrame,
-      maxHamming: Int = 3, bucketCap: Int = HammingBucketCap): DataFrame = {
+      maxHamming: Int = 3, bucketCap: Int = HammingBucketCap,
+      localRowBound: SparkContext => Long = hammingFoldRowBound)
+      : DataFrame = {
     require(maxHamming <= 3,
       s"exact recall needs maxHamming <= 3 with 4 disjoint windows")
+    import graft.ops.{CacheRegistry, TextOps}
+    def flagged(side: DataFrame, nw: Boolean): DataFrame =
+      side.select(col("doc_id"), col("ahash"), lit(nw).as("nw"))
+        .filter(col("doc_id").isNotNull && col("ahash").isNotNull)
+    val counted = Observation()
+    // one eager localCheckpoint runs the callers' hash plans exactly once
+    // and counts the rows in the same job
+    val (f0, fRdd) = TextOps.truncate(
+      flagged(prior, nw = false).unionByName(flagged(batch, nw = true))
+        .observe(counted, count(lit(1)).as("rows")),
+      eager = true)
+    // the checkpoint backs the returned plan: release it with the harness,
+    // once the caller's action has run
+    CacheRegistry.harness.addRdd(fRdd)
+    val sc = f0.sparkSession.sparkContext
+    val f = if (fRdd.getNumPartitions > sc.defaultParallelism)
+      f0.coalesce(sc.defaultParallelism) else f0
+    val idType = f.schema("doc_id").dataType
+    // Spark completes an observation from the listener bus, after the
+    // checkpoint's action has returned: wait for it, bounded
+    val rows =
+      try {
+        Await.ready(counted.future, TextOps.CountWait)
+        Some(counted.get.getOrElse("rows", 0L).asInstanceOf[Long])
+      } catch { case _: TimeoutException => None }
+    val pairs =
+      if (rows.exists(_ <= localRowBound(sc))) {
+        val in = Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong,
+          Encoders.scalaBoolean)
+        val out = Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong,
+          Encoders.scalaLong)
+        val folded = f
+          .select(col("doc_id").cast("long"), col("ahash").cast("long"),
+            col("nw"))
+          .as(in).coalesce(1)
+          .mapPartitions { it =>
+            val fold = new HammingFold(maxHamming, bucketCap)
+            it.foreach { case (d, h, nw) => fold.add(d, h, nw) }
+            fold.pairs
+          }(out)
+          .toDF("d1", "d2", "hamming")
+        // the fold's first row is its marker: (hot cells, their hashes, -1)
+        def marked(c: Column): Column =
+          sum(when(col("hamming") < 0, c))
+        HotCellSignal.attach(folded, marked(col("d1")), marked(col("d2")))
+          .filter(col("hamming") >= 0)
+      } else distributedHammingPairs(f, maxHamming, bucketCap)
+    pairs.select(col("d1").cast(idType).as("d1"),
+      col("d2").cast(idType).as("d2"), col("hamming"))
+  }
+
+  /** The distributed path of [[incrementalHammingPairs]] over the flagged
+    * (doc_id, ahash, nw) checkpoint `f`: equi-joins for the exact pairs,
+    * the bucket join for the cross pairs, member joins for the expansion.
+    */
+  private def distributedHammingPairs(f: DataFrame, maxHamming: Int,
+      bucketCap: Int): DataFrame = {
+    import graft.ops.CacheRegistry
+    val batch = f.filter(col("nw")).select("doc_id", "ahash")
+    val prior = f.filter(!col("nw")).select("doc_id", "ahash")
     val exactSelf = batch.as("a")
       .join(batch.as("b"),
         col("a.ahash") === col("b.ahash") && col("a.doc_id") < col("b.doc_id"))
@@ -858,8 +911,7 @@ object Multimodal {
       .select(least(col("a.doc_id"), col("b.doc_id")).as("d1"),
         greatest(col("a.doc_id"), col("b.doc_id")).as("d2"),
         lit(0L).as("hamming"))
-    import graft.ops.CacheRegistry
-    // ONE pass over both sides' hashes builds the side-flagged distinct
+    // ONE pass over the flagged rows builds the side-flagged distinct
     // table (in_new = value occurs in the batch, in_old = in prior) and
     // its 4 bucket rows per hash; persisted (compact — 4 rows per
     // distinct hash) because it feeds the occupancy aggregation, its
@@ -871,9 +923,7 @@ object Multimodal {
         shiftrightunsigned(rot64(col("ahash"), 16 * t), 48)
     }
     val bucketRows = CacheRegistry.harness.add(
-      prior.select(col("ahash"), lit(false).as("nw"))
-        .unionByName(batch.select(col("ahash"), lit(true).as("nw")))
-        .groupBy("ahash")
+      f.groupBy("ahash")
         .agg(max(col("nw")).as("in_new"), (!min(col("nw"))).as("in_old"))
         .select(col("ahash"), col("in_new"), col("in_old"),
           explode(array(windows: _*)).as("tb"))
@@ -904,7 +954,7 @@ object Multimodal {
     // against members anywhere, plus the h1 member from prior against h2
     // members in the batch — disjoint by the doc-disjointness contract,
     // and together exactly the step's new pairs
-    val all = prior.unionByName(batch)
+    val all = f.select("doc_id", "ahash")
     val expA = hashPairs
       .join(batch.select(col("doc_id").as("da"), col("ahash").as("h1")), "h1")
       .join(all.select(col("doc_id").as("db"), col("ahash").as("h2")), "h2")
@@ -916,6 +966,33 @@ object Multimodal {
         greatest(col("da"), col("db")).as("d2"), col("hamming"))
     exactSelf.unionByName(exactCross).unionByName(cross)
   }
+
+  /** Bytes of heap a [[HammingFold]] needs per row at its peak, measured
+    * where it is worst: every row brings a new distinct hash, and the row
+    * count has just passed a power of two, so every array has just
+    * doubled. A fold of 4,194,305 rows with random distinct hashes (just
+    * past 2^22) ran out of memory in a JVM at -Xmx360m and finished at
+    * -Xmx370m (ParallelGC, JDK 17): 90–93 bytes per row, rounded up. That
+    * fold took 7–8 s in its one task: with random hashes each cell holds
+    * ~64 of them, and the candidate scan is quadratic in that occupancy.
+    */
+  private val HammingFoldBytesPerRow = 96L
+
+  /** How far under the bound a fold stays: its arrays are plain heap,
+    * outside Spark's memory accounting, and share the executor with the
+    * cached blocks that storage memory holds.
+    */
+  private val HammingFoldSafety = 4L
+
+  /** The largest row count (prior plus batch) [[incrementalHammingPairs]]
+    * folds in one task: the smallest block manager's storage memory (the
+    * driver's included) over [[HammingFoldBytesPerRow]] ×
+    * [[HammingFoldSafety]]. Max, not remaining, memory: the choice of path
+    * does not depend on what happens to be cached.
+    */
+  private[multimodal] def hammingFoldRowBound(sc: SparkContext): Long =
+    sc.getExecutorMemoryStatus.values.map(_._1).min /
+      (HammingFoldBytesPerRow * HammingFoldSafety)
 
   /** Two-batch incremental image dedup over the whole corpus — the d104
     * query: the d84 even/odd convention applied to the multimodal pillar.

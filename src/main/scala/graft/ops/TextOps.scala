@@ -2588,11 +2588,12 @@ object TextOps {
     labels
   }
 
-  /** How long [[connectedComponents]] waits for its edge count before it
-    * takes the distributed rounds. The count arrives through the listener
-    * bus moments after the edge checkpoint's job.
+  /** How long [[connectedComponents]] (and
+    * [[graft.multimodal.Multimodal.incrementalHammingPairs]]) waits for its
+    * count before it takes the distributed path. The count arrives through
+    * the listener bus moments after the checkpoint's job.
     */
-  private val CountWait = 10.seconds
+  private[graft] val CountWait = 10.seconds
 
   /** Bytes of heap a [[UnionFind]] fold needs per edge at its peak,
     * measured where it is worst: every edge brings two new nodes, and the
@@ -4017,7 +4018,7 @@ object TextOps {
     * where `Dataset.unpersist` and `clearCache` cannot see them — the
     * caller releases it (`unpersist` or a [[CacheRegistry]]).
     */
-  private def truncate(df: DataFrame, eager: Boolean): (DataFrame, RDD[_]) = {
+  private[graft] def truncate(df: DataFrame, eager: Boolean): (DataFrame, RDD[_]) = {
     val ck = df.localCheckpoint(eager)
     val backing = ck.queryExecution.analyzed.collectFirst {
       case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd

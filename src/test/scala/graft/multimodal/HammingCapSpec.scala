@@ -1,5 +1,11 @@
 package graft.multimodal
 
+import java.util.UUID
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+import scala.util.Random
+import org.apache.spark.SparkContext
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.betfair.SparkSpec
@@ -21,22 +27,46 @@ import graft.betfair.SparkSpec
   *  3. the two-batch incremental union still equals the one-shot on a
   *     corpus WITH a degenerate single-hash class (the d104 identity is
   *     not broken by the rework).
+  *
+  * Every case runs on both paths of [[Multimodal.incrementalHammingPairs]]:
+  * [[HammingCapSpec]] at the default row bound, where these corpora take
+  * the one-task fold, and [[HammingCapDistributedSpec]] with the bound
+  * forced to 0, which sends every non-empty input to the distributed
+  * bucket join.
   */
-class HammingCapSpec extends SparkSpec {
+abstract class HammingCapCases(bound: SparkContext => Long)
+    extends SparkSpec {
 
-  private def windows(h: Long): Seq[(Int, Long)] = (0 until 4).map { t =>
+  /** The operations under test with their path pinned by `bound`; the
+    * cases call them as they would call [[graft.multimodal.Multimodal]].
+    */
+  protected object Multimodal {
+    val HammingBucketCap: Int = graft.multimodal.Multimodal.HammingBucketCap
+    def distinctHashBuckets(hashes: DataFrame): DataFrame =
+      graft.multimodal.Multimodal.distinctHashBuckets(hashes)
+    def hammingPairs(hashes: DataFrame, maxHamming: Int,
+        bucketCap: Int = HammingBucketCap): DataFrame =
+      graft.multimodal.Multimodal.hammingPairs(hashes, maxHamming,
+        bucketCap, bound)
+    def incrementalHammingPairs(prior: DataFrame, batch: DataFrame,
+        maxHamming: Int = 3, bucketCap: Int = HammingBucketCap): DataFrame =
+      graft.multimodal.Multimodal.incrementalHammingPairs(prior, batch,
+        maxHamming, bucketCap, bound)
+  }
+
+  protected def windows(h: Long): Seq[(Int, Long)] = (0 until 4).map { t =>
     val r = 16 * t
     val rot = if (r == 0) h else (h << r) | (h >>> (64 - r))
     (t, rot >>> 48)
   }
 
-  private def hammingOf(a: Long, b: Long): Int =
+  protected def hammingOf(a: Long, b: Long): Int =
     java.lang.Long.bitCount(a ^ b)
 
   /** Brute-force ground truth under the cap semantics: hamming-0 pairs
     * always kept; 1..3 pairs kept iff some clean window's cell is cold.
     */
-  private def expectedPairs(corpus: Seq[(Long, Long)], cap: Int)
+  protected def expectedPairs(corpus: Seq[(Long, Long)], cap: Int)
       : Set[(Long, Long, Long)] = {
     val occ = corpus.map(_._2).distinct.flatMap(windows)
       .groupBy(identity).map { case (cell, xs) => cell -> xs.size }
@@ -53,13 +83,13 @@ class HammingCapSpec extends SparkSpec {
     } yield (d1, d2, hm.toLong)).toSet
   }
 
-  private def df(corpus: Seq[(Long, Long)]): DataFrame = {
+  protected def df(corpus: Seq[(Long, Long)]): DataFrame = {
     val s = spark
     import s.implicits._
     corpus.toDF("doc_id", "ahash")
   }
 
-  private def collected(r: DataFrame): Set[(Long, Long, Long)] =
+  protected def collected(r: DataFrame): Set[(Long, Long, Long)] =
     r.collect().map(x => (x.getLong(0), x.getLong(1), x.getLong(2))).toSet
 
   /** 200 docs collapsed onto ONE hash + a handful of near/far hashes. */
@@ -217,4 +247,134 @@ class HammingCapSpec extends SparkSpec {
     val oneShot = collected(Multimodal.hammingPairs(base, 3))
     assert(inc == oneShot)
   }
+
+  test("an empty prior, an empty batch, or both yield no pairs beyond " +
+      "the batch's own") {
+    val base = df(degenerate)
+    val empty = base.filter(lit(false))
+    assert(collected(Multimodal.incrementalHammingPairs(empty, empty))
+      .isEmpty)
+    assert(collected(Multimodal.incrementalHammingPairs(base, empty))
+      .isEmpty)
+    assert(collected(Multimodal.incrementalHammingPairs(empty, base)) ==
+      expectedPairs(degenerate, cap = Multimodal.HammingBucketCap))
+  }
+
+  test("rows with a null ahash yield no pairs") {
+    val s = spark
+    import s.implicits._
+    val h0 = 0x0123456789abcdefL
+    def side(rows: (Long, Option[Long])*): DataFrame =
+      rows.toDF("doc_id", "ahash")
+    val prior = side(1L -> Some(h0), 2L -> None)
+    val batch = side(3L -> Some(h0 ^ 1L), 4L -> None, 5L -> None,
+      6L -> Some(h0))
+    assert(collected(Multimodal.incrementalHammingPairs(prior, batch)) ==
+      Set((1L, 3L, 1L), (1L, 6L, 0L), (3L, 6L, 1L)))
+  }
+
+  test("a row with a null doc_id is dropped first: no pairs, no occupancy") {
+    val s = spark
+    import s.implicits._
+    val h0 = 0x0123456789abcdefL
+    def side(rows: (Option[Long], Long)*): DataFrame =
+      rows.toDF("doc_id", "ahash")
+    // h0 and h0 ^ 1 share windows 0-2; the null-id row's h0 ^ 2 would
+    // make those cells hold 3 distinct hashes, over the cap of 2
+    val prior = side(None -> (h0 ^ 2L), Some(3L) -> h0)
+    val batch = side(None -> h0, Some(1L) -> h0, Some(2L) -> (h0 ^ 1L))
+    assert(collected(Multimodal.incrementalHammingPairs(prior, batch,
+      bucketCap = 2)) == Set((1L, 2L, 1L), (1L, 3L, 0L), (2L, 3L, 1L)))
+  }
+
+  test("the output keeps the input's doc_id type") {
+    val s = spark
+    import s.implicits._
+    val h0 = 0x0123456789abcdefL
+    val prior = Seq(1 -> h0).toDF("doc_id", "ahash")
+    val batch = Seq(2 -> h0, 3 -> (h0 ^ 4L)).toDF("doc_id", "ahash")
+    val got = Multimodal.incrementalHammingPairs(prior, batch)
+    assert(got.schema.map(_.dataType.typeName) ==
+      Seq("integer", "integer", "long"))
+    assert(got.collect().map(r => (r.getInt(0), r.getInt(1), r.getLong(2)))
+      .toSet == Set((1, 2, 0L), (1, 3, 1L), (2, 3, 1L)))
+  }
 }
+
+class HammingCapSpec
+    extends HammingCapCases(Multimodal.hammingFoldRowBound) {
+
+  /** A seeded corpus: 600 docs over near-dup families of 40 base hashes
+    * (0-3 flipped bits each), an identical-hash class of 60 docs, and 24
+    * bases crowding one window-0 cell, so that a cap of 4 heats it.
+    */
+  private def randomCorpus(seed: Int): Seq[(Long, Long)] = {
+    val rnd = new Random(seed)
+    val bases = Seq.fill(40)(rnd.nextLong()) ++
+      Seq.fill(24)((0x1234L << 48) | (rnd.nextLong() >>> 16))
+    val family = (0L until 600L).map { id =>
+      val flips = Seq.fill(rnd.nextInt(4))(1L << rnd.nextInt(64))
+      id -> flips.foldLeft(bases(rnd.nextInt(bases.size)))(_ ^ _)
+    }
+    family ++ (1000L until 1060L).map(_ -> 0x0f0f0f0f0f0f0f0fL)
+  }
+
+  private def multiset(r: DataFrame): Seq[(Long, Long, Long)] =
+    r.collect().map(x => (x.getLong(0), x.getLong(1), x.getLong(2)))
+      .toSeq.sorted
+
+  test("the one-task fold equals the distributed path as a multiset") {
+    val distributed: SparkContext => Long = _ => 0L
+    for (seed <- 1 to 2; cap <- Seq(Multimodal.HammingBucketCap, 4)) {
+      val base = df(randomCorpus(seed))
+      val prior = base.filter(col("doc_id") % 3 === 0)
+      val batch = base.filter(col("doc_id") % 3 =!= 0)
+      def on(b: SparkContext => Long): Seq[(Long, Long, Long)] =
+        multiset(graft.multimodal.Multimodal.incrementalHammingPairs(prior,
+          batch, bucketCap = cap, localRowBound = b))
+      val local = on(graft.multimodal.Multimodal.hammingFoldRowBound)
+      assert(local.nonEmpty && local.exists(_._3 > 0L), s"seed $seed")
+      assert(local == on(distributed), s"seed $seed cap $cap")
+    }
+  }
+
+  test("at the default bound one call plus its count runs at most 2 jobs") {
+    // the flagged-row checkpoint, whose job also counts the rows, and the
+    // count, whose one task folds them
+    val MaxJobs = 2
+    val base = df(randomCorpus(3))
+    val prior = base.filter(col("doc_id") % 2 === 0)
+    val batch = base.filter(col("doc_id") % 2 === 1)
+    val group = s"graft-hamming-${UUID.randomUUID}"
+    val sentinel = s"$group-sentinel"
+    val jobs = new AtomicInteger
+    val drained = new CountDownLatch(1)
+    // listener events arrive in submission order: once the sentinel job's
+    // start is seen, every job of the call and its count has been counted
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`group`) => jobs.incrementAndGet()
+          case Some(`sentinel`) => drained.countDown()
+          case _ =>
+        }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "incrementalHammingPairs")
+      val n =
+        try Multimodal.incrementalHammingPairs(prior, batch).count()
+        finally sc.clearJobGroup()
+      sc.setJobGroup(sentinel, "listener sentinel")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(drained.await(60, TimeUnit.SECONDS))
+      assert(n > 0)
+    } finally sc.removeSparkListener(listener)
+    assert(jobs.get <= MaxJobs,
+      s"incrementalHammingPairs + count ran ${jobs.get} jobs, more than " +
+        s"$MaxJobs")
+  }
+}
+
+class HammingCapDistributedSpec extends HammingCapCases(_ => 0L)
